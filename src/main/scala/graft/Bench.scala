@@ -116,7 +116,7 @@ object Bench {
     val warehouse = java.nio.file.Files.createTempDirectory("graft-bench-wh-")
     val spark = newSession(sfDir, cpus, warehouse)
     try body(spark)
-    finally { spark.stop(); deleteRecursively(warehouse) }
+    finally { spark.stop(); store.FileTree.deleteRecursively(warehouse) }
   }
 
   def main(args: Array[String]): Unit = {
@@ -463,19 +463,8 @@ object Bench {
         "ann_probe_adc_filtered" -> tFiltered)
     } catch {
       case e: Throwable => throw new RuntimeException("ANN bench failed", e)
-    } finally deleteRecursively(tmp)
+    } finally store.FileTree.deleteRecursively(tmp)
   }
-
-  /** Each bench stage builds index/log artifacts under its own temp dir —
-    * delete them after the stage or every run leaks index-sized bytes. */
-  private def deleteRecursively(dir: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(dir)) {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.walk(dir)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-      finally s.close()
-    }
 
   /** Amortized dedup/overlap index serving path — the annBench doctrine
     * applied to the shingle artifacts: the `dedup_containment_idx` /
@@ -645,6 +634,6 @@ object Bench {
     } catch {
       // fail the bench, loudly — a broken pipeline must not bench as "fast"
       case e: Throwable => throw new RuntimeException("pipeline bench failed", e)
-    } finally deleteRecursively(tmp)
+    } finally store.FileTree.deleteRecursively(tmp)
   }
 }

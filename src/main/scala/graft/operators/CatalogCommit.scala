@@ -50,7 +50,7 @@ private[graft] object CatalogCommit {
   def dropUncommitted(spark: SparkSession, table: String, b: Long): Unit = {
     val dir = tableLocation(spark, table).resolve(s"batch=$b")
     if (java.nio.file.Files.exists(dir)) {
-      deleteRecursively(dir)
+      graft.store.FileTree.deleteRecursively(dir)
       spark.catalog.refreshTable(table)
     }
   }
@@ -66,7 +66,7 @@ private[graft] object CatalogCommit {
       val root = if (wh.contains(":/")) java.nio.file.Paths.get(new java.net.URI(wh))
         else java.nio.file.Paths.get(wh)
       val dir = root.resolve(table.toLowerCase(java.util.Locale.ROOT))
-      if (java.nio.file.Files.exists(dir)) deleteRecursively(dir)
+      graft.store.FileTree.deleteRecursively(dir)
     }
 
   /** Parquet data-file count under a dir tree — the small-files metric
@@ -94,14 +94,6 @@ private[graft] object CatalogCommit {
         .filter(_.getFileName.toString.startsWith(prefix))
       finally s.close()
     }
-
-  private def deleteRecursively(dir: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val s = java.nio.file.Files.walk(dir)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.delete)
-    finally s.close()
-  }
 
   /** The `batch=<n>` partition ids physically present at a catalog
     * table's location (committed or not) — the layout-audit input of

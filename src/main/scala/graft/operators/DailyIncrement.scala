@@ -7,6 +7,7 @@ import graft.Tables
 import graft.functions.Tokenizer
 import graft.queries.CorpusQueries
 import graft.queries.CrossHash.{shingleHashes, shingleHashSet}
+import graft.store.FileTree
 
 /** The DAILY path of the curation stack: extend yesterday's
   * [[CurationJob]] artifacts with today's document batch WITHOUT
@@ -352,7 +353,7 @@ object DailyIncrement {
 
     // ---- phase 1: stage (no standing artifact touched yet) ----
     val pend = pendingDir(outDir)
-    deleteRecursively(pend) // un-sealed remnants of a crashed compute
+    FileTree.deleteRecursively(java.nio.file.Paths.get(pend)) // un-sealed remnants of a crashed compute
     // every append below reads THIS parquet, not live lineage — the
     // durable form of the old localCheckpoint pin against the
     // read-path-you-write hazard (appends grow outDir/curated, which
@@ -519,7 +520,7 @@ object DailyIncrement {
     import spark.implicits._
     val pend = pendingDir(outDir)
     val isSealed = java.nio.file.Files.exists(java.nio.file.Paths.get(pend, "_staged"))
-    if (!isSealed) { deleteRecursively(pend); return }
+    if (!isSealed) { FileTree.deleteRecursively(java.nio.file.Paths.get(pend)); return }
 
     val kept = spark.read.parquet(s"$pend/kept") // doc_id, text, lang, n_tokens, digest
     val base = spark.read.parquet(s"$pend/base").head.getLong(0)
@@ -687,16 +688,6 @@ object DailyIncrement {
       }
     }
 
-    deleteRecursively(pend)
-  }
-
-  private def deleteRecursively(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) return
-    import scala.jdk.CollectionConverters._
-    val s = java.nio.file.Files.walk(p)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.delete)
-    finally s.close()
+    FileTree.deleteRecursively(java.nio.file.Paths.get(pend))
   }
 }

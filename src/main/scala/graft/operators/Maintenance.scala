@@ -350,7 +350,7 @@ object Maintenance {
     val staged = java.nio.file.Paths.get(s"${d}_compact")
     val marker = java.nio.file.Paths.get(s"$outDir/_maint_staged_$rel")
     graft.streaming.CompactSwap.recover(marker, Seq(live -> staged), Nil)
-    graft.streaming.CompactSwap.deleteRec(staged) // pre-marker leftovers
+    graft.store.FileTree.deleteRecursively(staged) // pre-marker leftovers
     if (pathFiles(d) > target) {
       write(spark.read.parquet(d), staged.toString)
       java.nio.file.Files.createFile(marker)

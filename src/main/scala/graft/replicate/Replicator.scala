@@ -64,55 +64,43 @@ final class Replicator(
         col("id").as("_seq"))
   }
 
-  /** One poll over `batch` + S12 transactional send. A batch flows through
-    * ONE Spark job — emptiness, cursor AND density stats are all harvested
-    * by `observe` DURING the sink's staged write (appendTxn commits nothing
-    * for an empty batch and evaluates its cursor argument only after the
-    * write completes; a throw there aborts before the manifest commit). */
-  private def pollWith(topic: String, cursor: Cursor, batch: DataFrame): Replicator.Poll = {
+  /** One S12 transactional send of `batch`, the source rows above
+    * `cursor`. The batch flows through ONE Spark job — emptiness, cursor
+    * AND density stats are all harvested by `observe` DURING the sink's
+    * staged write (appendTxn commits nothing for an empty batch and
+    * evaluates its cursor argument only after the write completes; a throw
+    * there aborts before the manifest commit).
+    *
+    * DENSITY GATE (G3): ids are dense per topic, so a batch covering
+    * (cursor.id, mx] holds exactly mx - cursor.id rows. Reads are gated on
+    * the source manifest and never see half an append, so fewer rows means
+    * ids gone from the source (retention). A drain (`skipGaps`) steps over
+    * them, as the ordered scan always did; the stream fails fast instead
+    * (G8), since its checkpoint would move past rows it never delivered. */
+  private def pollWith(topic: String, cursor: Cursor, batch: DataFrame,
+      skipGaps: Boolean): Replicator.Poll = {
     val obs = org.apache.spark.sql.Observation()
     val observed = batch.observe(obs,
       max(struct(col("lsn"), col("id"))).as("m"),
       count(lit(1)).as("n"))
     var windowFull = false
-    try {
-      val sent = sink.appendTxn(toRecords(topic, observed), topic, {
-        val m = obs.get("m").asInstanceOf[org.apache.spark.sql.Row]
-        // zero rows at write time is handled inside appendTxn (no commit);
-        // this guard only survives as belt-and-braces for a null max
-        if (m == null || m.isNullAt(0)) cursor
-        else {
-          val (mxLsn, mx) = (m.getLong(0), m.getLong(1))
-          val n = obs.get("n").asInstanceOf[Long]
-          // DENSITY GATE (G3): ids are dense per topic, so a batch
-          // covering (cursor.id, mx] must hold exactly mx - cursor.id
-          // rows. Fewer means ids this scan never saw — either a
-          // retention gap (gone forever: skip it, like the scan
-          // fallback always did) or a concurrent append whose task
-          // files were only partially renamed into the topic dir when
-          // we listed it. Committing mx in the latter case would
-          // advance the cursor past rows that become visible
-          // milliseconds later — silent permanent loss. Distinguish by
-          // re-probing the source: ids live in (cursor.id, mx] beyond
-          // what we scanned ⇒ transient visibility ⇒ abort this poll
-          // (the next tick re-reads a settled listing).
-          if (n != mx - cursor.id) {
-            val live = source.read(topic).filter(
-              col("lsn").isNotNull &&
-                col("id") > cursor.id && col("id") <= mx).count()
-            if (live != n) throw new Replicator.TransientVisibilityGap(
-              s"$topic: scanned $n of $live live ids in (${cursor.id}, $mx]")
-          }
-          windowFull = mx >= cursor.id + batchSize
-          Cursor(mxLsn, mx)
-        }
-      })
-      Replicator.Poll(sent, windowFull)
-    } catch {
-      // no manifest was committed; the staged files are invisible
-      // orphans. Report nothing sent — the caller retries or gives up.
-      case _: Replicator.TransientVisibilityGap => Replicator.Poll(0L, windowFull = false)
-    }
+    val sent = sink.appendTxn(toRecords(topic, observed), topic, {
+      val m = obs.get("m").asInstanceOf[org.apache.spark.sql.Row]
+      // zero rows at write time is handled inside appendTxn (no commit);
+      // this guard only survives as belt-and-braces for a null max
+      if (m == null || m.isNullAt(0)) cursor
+      else {
+        val (mxLsn, mx) = (m.getLong(0), m.getLong(1))
+        val n = obs.get("n").asInstanceOf[Long]
+        if (n != mx - cursor.id && !skipGaps)
+          throw new IllegalStateException(
+            s"gapped delivery for $topic: $n rows for ids (${cursor.id}, $mx] — " +
+              "recover with Replicator.run() then restart the stream")
+        windowFull = mx >= cursor.id + batchSize
+        Cursor(mxLsn, mx)
+      }
+    })
+    Replicator.Poll(sent, windowFull)
   }
 
   /** Topics whose source cursor this instance has reconciled against data
@@ -140,16 +128,14 @@ final class Replicator(
   /** Dense-window poll (drainRange — no global sort, both bounds pushed). */
   private def densePoll(topic: String): Replicator.Poll = {
     val cursor = sink.cursorFor(topic)
-    pollWith(topic, cursor, source.drainRange(topic, cursor, batchSize))
+    pollWith(topic, cursor, source.drainRange(topic, cursor, batchSize), skipGaps = true)
   }
 
   /** General ordered-scan poll: the fallback that sees past a retention
-    * gap right above the cursor (where the dense window is empty forever),
-    * and the retry path after a transient visibility abort (it re-reads a
-    * fresh listing). */
+    * gap right above the cursor (where the dense window is empty forever). */
   private def scanPoll(topic: String): Replicator.Poll = {
     val cursor = sink.cursorFor(topic)
-    pollWith(topic, cursor, source.scan(topic, cursor, batchSize))
+    pollWith(topic, cursor, source.scan(topic, cursor, batchSize), skipGaps = true)
   }
 
   /** One S4 poll + S12 transactional send. @return events sent.
@@ -172,9 +158,8 @@ final class Replicator(
     * density gate passed) proves no live ids remain above the new cursor
     * inside the window — the backlog is drained, with no trailing
     * empty-probe or fallback-scan jobs. The ordered-scan fallback runs
-    * only when a dense poll commits nothing (idle, a whole-window
-    * retention gap, or a transient-visibility abort — the scan re-reads a
-    * settled listing); a retention gap that opens ABOVE the stop point
+    * only when a dense poll commits nothing (idle or a whole-window
+    * retention gap); a retention gap that opens ABOVE the stop point
     * mid-drain is caught by the next run()'s fallback. */
   def run(topic: String): Long = {
     var total = 0L
@@ -203,187 +188,52 @@ final class Replicator(
   def lag(topic: String): Long = source.lag(topic, sink.cursorFor(topic))
 
   /** Continuous replication as a Structured Streaming job: tail the source
-    * log (Subscribe.stream file source) and commit each micro-batch to the
-    * sink transactionally. Exactly-once WITHOUT relying on the Spark
-    * checkpoint alone: every batch is re-filtered by the sink's committed
-    * cursor, so a replayed batch (crash after sink commit, before
-    * checkpoint commit — or a deleted checkpoint) re-commits nothing.
-    *
-    * The cursor filter is only sound if the committed cursor always covers
-    * a COMPLETE id prefix (EventLog ids are dense — see drainRange). The
-    * file source delivers appends in (mtime, path) order, which tracks
-    * append order in practice, but a filesystem with coarse mtimes can
-    * reorder same-timestamp files — [[commitStreamBatch]] tolerates that by
-    * PARKING runs delivered ahead of the committed prefix in the sink
-    * manifest and promoting them once the prefix lands; only a gap that can
-    * never fill (the missing ids are gone from the source, e.g. retention)
-    * FAILS FAST (G8). Recovery from that is a [[run]] drain (ordered,
-    * cursor-exact) and a stream restart — stale parked ranges the drain
-    * already covered are discarded on the next batch.
-    * This is the always-on form of [[runLoop]]; `Trigger.AvailableNow`
-    * turns it into a one-shot drain. */
+    * log through its manifest ([[graft.streaming.Subscribe.stream]]) and
+    * commit each micro-batch to the sink transactionally. Exactly-once
+    * WITHOUT relying on the Spark checkpoint alone: every batch is
+    * re-filtered by the sink's committed cursor, so a replayed batch (crash
+    * after sink commit, before checkpoint commit — or a deleted checkpoint)
+    * re-commits nothing. Micro-batches are whole committed appends in lsn
+    * order, so the cursor always covers a complete id prefix; an id gap
+    * (retention) FAILS FAST (G8) — recover with a [[run]] drain and a
+    * stream restart. This is the always-on form of [[runLoop]];
+    * `Trigger.AvailableNow` turns it into a one-shot drain. */
   def replicateStream(topic: String, checkpointDir: String,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-      maxFilesPerTrigger: Int = 100)
+      maxAppendsPerTrigger: Int = 100)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.streaming.Subscribe.stream(
-        source.read(topic).sparkSession, source.root.toString, topic,
-        maxFilesPerTrigger)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        commitStreamBatch(topic, df); ()
-      }
-      .start()
+    replicateStreamAll(Seq(topic), checkpointDir, trigger, maxAppendsPerTrigger)
 
-  /** Multi-topic continuous replication: ONE streaming query (one file
-    * source, one checkpoint) tails every listed topic and commits each
-    * topic's slice through [[commitStreamBatch]] — per-topic cursors, EOS
-    * and park/promote semantics identical to the single-topic form, at
-    * 1/N the query cost (EventReplicator.java:168-184 runs all topics in
-    * one process the same way). Topics commit in sorted order per batch
-    * for determinism. */
+  /** Multi-topic continuous replication: ONE streaming query (one source,
+    * one checkpoint) tails every listed topic and commits each topic's
+    * slice with its own cursor, exactly as [[replicateStream]] does for
+    * one (EventReplicator.java:168-184 runs all topics in one process the
+    * same way). Topics commit in sorted order per batch for determinism;
+    * one the source manifest shows idle costs no job. */
   def replicateStreamAll(topics: Seq[String], checkpointDir: String,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-      maxFilesPerTrigger: Int = 100)
+      maxAppendsPerTrigger: Int = 100)
       : org.apache.spark.sql.streaming.StreamingQuery =
     graft.streaming.Subscribe.streamTopics(
-        sink.spark, source.root.toString, topics, maxFilesPerTrigger)
+        sink.spark, source.root.toString, topics, maxAppendsPerTrigger)
       .writeStream
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (df: DataFrame, _: Long) =>
-        val batch = df.persist()
-        try {
-          // one tiny agg to find which topics this batch touches, then a
-          // per-topic slice commit (cursor filter + dense check per topic)
-          val present = batch.select(col("topic")).distinct()
-            .collect().map(_.getString(0)).sorted
-          present.foreach { t =>
-            commitStreamBatch(t, batch.filter(col("topic") === t).drop("topic"))
-          }
-        } finally { batch.unpersist(); () }
+        // one topic reads its batch once (the commit's write); several
+        // share one cached read
+        val batch = if (topics.size > 1) df.persist() else df
+        try topics.sorted.foreach { t =>
+          val cursor = sink.cursorFor(t)
+          if (!sourceIdle(t, cursor))
+            pollWith(t, cursor, batch.filter(col("topic") === t &&
+              struct(col("lsn"), col("id")) > struct(lit(cursor.lsn), lit(cursor.id)))
+              .drop("topic"), skipGaps = false)
+        } finally { if (batch ne df) batch.unpersist(); () }
       }
       .start()
-
-  /** Commit one delivered micro-batch of source rows with out-of-order
-    * tolerance (G1/G9 preserved across reordered file delivery):
-    *
-    *  - rows at or below the sink cursor are dropped (crash/checkpoint
-    *    replay — the EOS re-filter);
-    *  - the dense continuation `cursor.id+1 … cursor.id+n` commits
-    *    directly (hot path: one aggregate, no window);
-    *  - a batch that is NOT the dense continuation splits into maximal
-    *    contiguous id runs; runs extending the prefix commit in order,
-    *    runs delivered ahead are parked ([[KafkaShapedLog.parkRange]]) —
-    *    but only after verifying the missing ids still exist in the
-    *    source, because a retention gap would otherwise wedge the parked
-    *    run forever (fail fast instead, G8);
-    *  - after every commit, parked runs the new cursor makes dense are
-    *    promoted through `appendTxn(dropPending=…)` — records, cursor and
-    *    pending-drop are one atomic manifest swap, so a crash anywhere
-    *    leaves either the old state or the fully-promoted one.
-    *
-    * The run-split window sorts only the one micro-batch (bounded by
-    * maxFilesPerTrigger), and only on the rare non-dense path.
-    * @return records committed (parked rows count when promoted). */
-  private[graft] def commitStreamBatch(topic: String, df: DataFrame): Long = {
-    var committed = promotePending(topic) // post-recovery promotion + stale GC
-    val cursor = sink.cursorFor(topic)
-    val fresh = df.filter(
-      struct(col("lsn"), col("id")) >
-        struct(lit(cursor.lsn), lit(cursor.id))).persist()
-    try {
-      val stats = fresh.agg(
-          max(struct(col("lsn"), col("id"))).as("m"),
-          min(col("id")).as("mn"), count(lit(1)).as("n"))
-        .select(col("m.lsn"), col("m.id"), col("mn"), col("n")).collect()(0)
-      if (!stats.isNullAt(0)) {
-        val (mxLsn, mx, mn, n) =
-          (stats.getLong(0), stats.getLong(1), stats.getLong(2), stats.getLong(3))
-        if (mn == cursor.id + 1 && n == mx - mn + 1) {
-          committed += sink.appendTxn(toRecords(topic, fresh), topic, Cursor(mxLsn, mx))
-          committed += promotePending(topic)
-        } else {
-          val runs = fresh.withColumn("_grp",
-            col("id") - row_number().over(
-              org.apache.spark.sql.expressions.Window.orderBy(col("id"))))
-          val runStats = runs.groupBy(col("_grp"))
-            .agg(min(col("id")).as("from"), max(col("id")).as("to"),
-              max(col("lsn")).as("lsnMax"))
-            .orderBy(col("from")).collect()
-          runStats.foreach { r =>
-            val (g, from, to, lsnMax) =
-              (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-            val cur = sink.cursorFor(topic)
-            if (to <= cur.id) () // fully-committed replay range
-            else if (from <= cur.id + 1) {
-              val rows = runs.filter(col("_grp") === g && col("id") > cur.id).drop("_grp")
-              committed += sink.appendTxn(toRecords(topic, rows), topic, Cursor(lsnMax, to))
-              committed += promotePending(topic)
-            } else {
-              requireGapLive(topic, cur.id + 1, from - 1)
-              sink.parkRange(runs.filter(col("_grp") === g).drop("_grp"),
-                topic, from, to, lsnMax)
-            }
-          }
-        }
-      }
-      committed
-    } finally { fresh.unpersist(); () }
-  }
-
-  /** Promote parked runs the committed cursor now makes dense (each
-    * promotion drops its range atomically with the record commit); discard
-    * ranges a [[run]] recovery already drained. @return records committed. */
-  private def promotePending(topic: String): Long = {
-    var n = 0L
-    var go = true
-    while (go) {
-      val cur = sink.cursorFor(topic)
-      sink.pendingRanges(topic).headOption match {
-        case Some(p) if p.to <= cur.id =>
-          sink.discardPending(topic, p) // drained by a run() recovery
-        case Some(p) if p.from <= cur.id + 1 =>
-          val rows = sink.readPending(p).filter(col("id") > cur.id)
-          n += sink.appendTxn(toRecords(topic, rows), topic,
-            Cursor(p.lsnMax, p.to), dropPending = Seq(p))
-        case _ => go = false
-      }
-    }
-    n
-  }
-
-  /** Fail fast when ids `[lo, hi]` are no longer in the source (a retention
-    * gap no later delivery can fill) — parking would wedge silently. The
-    * probe is a pushed-down point-range count, and runs only on the rare
-    * gapped path.
-    *
-    * The probe RETRIES briefly before condemning the gap: the commonest
-    * cause of a missing id range is not retention but an append whose task
-    * files are mid-rename when we list the directory — a gap that heals in
-    * milliseconds. Killing the stream for that (and demanding a manual
-    * run() recovery) would turn a benign visibility race into an outage. */
-  private def requireGapLive(topic: String, lo: Long, hi: Long): Unit = {
-    val expected = hi - lo + 1
-    var live = 0L
-    var attempt = 0
-    while ({
-      live = source.read(topic)
-        .filter(col("lsn").isNotNull && col("id") >= lo && col("id") <= hi).count()
-      live != expected && attempt < 3
-    }) {
-      attempt += 1
-      Thread.sleep(100L * attempt)
-    }
-    if (live != expected)
-      throw new IllegalStateException(
-        s"gapped delivery for $topic: ids [$lo, $hi] are missing from the source " +
-          s"($live of $expected live) — recover with Replicator.run() then restart the stream")
-  }
 
   /** Fixed-delay scheduling loop — the reference's per-topic worker
     * cadence (EventReplicator.java:138, 174-183: schedule at
@@ -403,13 +253,6 @@ object Replicator {
   val DefaultBatchSize = 100
 
   /** One drain poll's outcome: events committed + whether the committed
-    * window reached its upper bound (more backlog may exist). A poll that
-    * aborted on a transient visibility gap reports (0, false). */
+    * window reached its upper bound (more backlog may exist). */
   private[replicate] final case class Poll(sent: Long, windowFull: Boolean)
-
-  /** A poll observed a source listing mid-append-commit (ids live beyond
-    * what the scan saw) — abort without committing; the next poll retries
-    * against a settled listing. */
-  private[replicate] final class TransientVisibilityGap(msg: String)
-    extends Exception(msg)
 }

@@ -29,8 +29,7 @@ import graft.store.TopicOffsets
   * tail. The filter is row-level over the committed files (appendTxn
   * hashes topics across shared task files, so per-file topic/offset
   * pruning would need per-file stats in the manifest); poll cost therefore
-  * grows with committed history, and long-lived logs should compact or
-  * the consumer should tail via Subscribe's file source instead.
+  * grows with committed history, and long-lived logs should compact.
   */
 final class KafkaShapedConsumer(
     log: KafkaShapedLog,

@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.codec.Cursor
+import graft.store.FileTree
 
 /** A Kafka-shaped record log with transactional appends — the replication
   * sink (S2/S12) re-expressed without a broker.
@@ -44,7 +45,7 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
 
   def manifest(): Manifest =
     if (Files.exists(manifestPath)) Manifest.parse(Files.readString(manifestPath))
-    else Manifest(Nil, Map.empty, Map.empty, Map.empty)
+    else Manifest(Nil, Map.empty, Map.empty)
 
   private def commitManifest(m: Manifest): Unit = {
     val tmp = root.resolve(s"manifest.${UUID.randomUUID()}.tmp")
@@ -71,8 +72,7 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
     * (`newCursor` is never evaluated, no manifest write) and returns 0 —
     * so callers need no pre-write emptiness probe; the probe's job is
     * folded into the write's own metrics. */
-  def appendTxn(records: DataFrame, sourceTable: String, newCursor: => Cursor,
-      dropPending: Seq[Pending] = Nil): Long = synchronized {
+  def appendTxn(records: DataFrame, sourceTable: String, newCursor: => Cursor): Long = synchronized {
     val m = manifest()
     // Partition by key hash (per-key order), offsets dense per partition.
     // The explicit repartition produces HashPartitioning(topic, partition,
@@ -127,11 +127,11 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
     observed.select("topic", "partition", "offset", "key", "value", "headers", "timestamp")
       .write.parquet(stage.toString)
     val n = obs.get("n").asInstanceOf[Long]
-    if (n == 0 && dropPending.isEmpty) {
+    if (n == 0) {
       // empty transaction: nothing staged, nothing to commit — drop the
       // (file-less) stage dir and leave the manifest untouched, so idle
       // replication polls cost one pruned scan and zero manifest churn
-      deleteDir(stage)
+      FileTree.deleteRecursively(stage)
       return 0L
     }
     val files = {
@@ -159,65 +159,10 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
             acc + ((r.getString(0), r.getInt(1)) -> (r.getLong(2) + 1))
           }
       }
-    val pend =
-      if (dropPending.isEmpty) m.pending
-      else m.pending.updated(sourceTable,
-        m.pending.getOrElse(sourceTable, Nil).filterNot(dropPending.contains))
     commitManifest(Manifest(m.files ++ files, newOffsets,
-      m.cursors + (sourceTable -> newCursor), pend))
-    // promoted runs were re-staged as committed files above — their parked
-    // dirs are now unreferenced; without this, every park leaks its staged
-    // copy forever and pollutes the stagedFileCount orphan gauge. (A crash
-    // between the commit and this delete leaves an orphan the gauge
-    // reports — same contract as any staged write.)
-    dropPending.foreach(p => deletePendingDir(p))
+      m.cursors + (sourceTable -> newCursor)))
     n
   }
-
-  /** Parked out-of-order runs for a source table (id ranges delivered
-    * ahead of the dense prefix — see [[parkRange]]), sorted by `from`. */
-  def pendingRanges(sourceTable: String): List[Pending] =
-    manifest().pending.getOrElse(sourceTable, Nil).sortBy(_.from)
-
-  /** Park an out-of-order run: stage the RAW source rows (no offsets — Kafka
-    * offset assignment must follow id order, and earlier ids haven't
-    * arrived) and record the id range in the manifest atomically. The rows
-    * re-enter the normal [[appendTxn]] pipeline at promotion time, once
-    * the dense prefix has been committed, so per-partition offset order
-    * still equals (lsn, id) order (G1/G9 preserved across reordering). */
-  def parkRange(rows: DataFrame, sourceTable: String,
-      from: Long, to: Long, lsnMax: Long): Unit = synchronized {
-    val m = manifest()
-    val dir = root.resolve("staging").resolve(s"pending-${UUID.randomUUID()}")
-    rows.write.parquet(dir.toString)
-    val p = Pending(from, to, lsnMax, root.relativize(dir).toString)
-    commitManifest(m.copy(pending = m.pending.updated(sourceTable,
-      (m.pending.getOrElse(sourceTable, Nil) :+ p).sortBy(_.from))))
-  }
-
-  /** Read a parked run's raw rows back. */
-  def readPending(p: Pending): DataFrame =
-    spark.read.parquet(root.resolve(p.dir).toString)
-
-  /** Drop a parked range without committing records (stale range whose ids
-    * were drained by another path, e.g. a Replicator.run() recovery). */
-  def discardPending(sourceTable: String, p: Pending): Unit = synchronized {
-    val m = manifest()
-    commitManifest(m.copy(pending = m.pending.updated(sourceTable,
-      m.pending.getOrElse(sourceTable, Nil).filterNot(_ == p))))
-    deletePendingDir(p)
-  }
-
-  /** Remove a dropped parked run's staged directory (never in `files`). */
-  private def deletePendingDir(p: Pending): Unit = deleteDir(root.resolve(p.dir))
-
-  private def deleteDir(dir: Path): Unit =
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
 
   /** read_committed view of one topic. */
   def read(topic: String): DataFrame = {
@@ -291,9 +236,8 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
     * (topic, partition, offset)-range-partitioned files: thousands of
     * small per-transaction files make the read_committed scan
     * file-open-bound at scale; compaction restores big sorted segments
-    * whose min/max stats still prune offset-resumed consumers. Offsets,
-    * progress cursors and parked ranges are untouched — only the `files`
-    * list swaps, in the same atomic manifest commit as every transaction,
+    * whose min/max stats still prune offset-resumed consumers. Offsets
+    * and progress cursors are untouched — only the `files` list swaps, in the same atomic manifest commit as every transaction,
     * so in-flight readers keep their old generation until [[vacuum]]. */
   def compact(targetFiles: Int = 1): Unit = synchronized {
     val m = manifest()
@@ -315,21 +259,17 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
   }
 
   /** Reclaim staged parquet no committed reader can reach: files under
-    * staging/ that are neither manifest-listed nor part of a parked
-    * (pending) run, older than `graceMs` (size the grace to the
-    * longest-running read, as with EventLog.vacuum). Returns files
-    * deleted. */
+    * staging/ that are not manifest-listed, older than `graceMs` (size the
+    * grace to the longest-running read, as with EventLog.vacuum). Returns
+    * files deleted. */
   def vacuum(graceMs: Long = 0L): Int = synchronized {
-    val m = manifest()
-    val keepDirs = m.pending.values.flatten.map(p => root.resolve(p.dir)).toSet
-    val live = m.files.toSet
+    val live = manifest().files.toSet
     val cutoff = System.currentTimeMillis() - graceMs
     val s = Files.walk(root.resolve("staging"))
     val dead =
       try s.iterator().asScala.filter(p =>
         p.getFileName.toString.endsWith(".parquet") &&
           !live.contains(root.relativize(p).toString) &&
-          !keepDirs.exists(p.startsWith) &&
           Files.getLastModifiedTime(p).toMillis <= cutoff).toList
       finally s.close()
     dead.foreach(Files.deleteIfExists(_))
@@ -337,13 +277,13 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
     // markers) so the staging tree stays bounded
     val d = Files.list(root.resolve("staging"))
     try d.iterator().asScala
-      .filter(p => Files.isDirectory(p) && !keepDirs.contains(p))
+      .filter(p => Files.isDirectory(p))
       .foreach { p =>
         val c = Files.walk(p)
         val hasParquet =
           try c.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet"))
           finally c.close()
-        if (!hasParquet) deleteDir(p)
+        if (!hasParquet) FileTree.deleteRecursively(p)
       }
     finally d.close()
     dead.size
@@ -363,19 +303,12 @@ object KafkaShapedLog {
       nullable = true),
     StructField("timestamp", TimestampType, nullable = false)))
 
-  /** A parked out-of-order id run: raw rows staged at `dir`, covering
-    * source ids `[from, to]` whose max lsn is `lsnMax`, awaiting the dense
-    * prefix before promotion through appendTxn. */
-  final case class Pending(from: Long, to: Long, lsnMax: Long, dir: String)
-
   /** Committed state: files + per-(topic,partition) next offsets + per-source
-    * progress cursors + parked out-of-order ranges. Hand-rolled JSON (flat,
-    * driver-side, tiny). */
+    * progress cursors. Hand-rolled JSON (flat, driver-side, tiny). */
   final case class Manifest(
       files: List[String],
       offsets: Map[(String, Int), Long],
-      cursors: Map[String, Cursor],
-      pending: Map[String, List[Pending]] = Map.empty) {
+      cursors: Map[String, Cursor]) {
     def render: String = {
       def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
       val fs = files.map(q).mkString("[", ",", "]")
@@ -383,26 +316,21 @@ object KafkaShapedLog {
         .map { case ((t, p), o) => s"${q(s"$t/$p")}: $o" }.mkString("{", ",", "}")
       val cs = cursors.toSeq.sortBy(_._1)
         .map { case (t, c) => s"${q(t)}: ${q(c.encoded)}" }.mkString("{", ",", "}")
-      val ps = pending.toSeq.sortBy(_._1).filter(_._2.nonEmpty)
-        .map { case (t, l) =>
-          s"${q(t)}: ${l.map(p => q(s"${p.from}:${p.to}:${p.lsnMax}:${p.dir}")).mkString("[", ",", "]")}"
-        }.mkString("{", ",", "}")
-      s"""{"files": $fs, "offsets": $os, "cursors": $cs, "pending": $ps}"""
+      s"""{"files": $fs, "offsets": $os, "cursors": $cs}"""
     }
   }
 
   object Manifest {
-    /** Minimal parser for the exact shape [[Manifest.render]] emits. */
+    /** Minimal parser for the exact shape [[Manifest.render]] emits (other
+      * sections, such as the `pending` one older manifests carry, are
+      * ignored). */
     def parse(s: String): Manifest = {
       def strings(arr: String): List[String] =
         "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(arr)
           .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).toList
-      def section(name: String, required: Boolean = true): String = {
+      def section(name: String): String = {
         val i = s.indexOf("\"" + name + "\"")
-        if (i < 0) {
-          require(!required, s"manifest missing $name")
-          return ""
-        }
+        require(i >= 0, s"manifest missing $name")
         val start = s.indexOf(if (name == "files") '[' else '{', i)
         val end = s.indexOf(if (name == "files") ']' else '}', start)
         s.substring(start + 1, end)
@@ -417,20 +345,7 @@ object KafkaShapedLog {
       val cursors = "\"([^\"]+)\"\\s*:\\s*\"([^\"]*)\"".r
         .findAllMatchIn(section("cursors"))
         .map(m => m.group(1) -> Cursor.parse(m.group(2))).toMap
-      // pending is optional (absent in pre-range manifests); entries are
-      // "from:to:lsnMax:dir" strings per source table — strict parse, a
-      // malformed range must fail init like a malformed cursor
-      val pending = "\"([^\"]+)\"\\s*:\\s*\\[([^\\]]*)\\]".r
-        .findAllMatchIn(section("pending", required = false))
-        .map { m =>
-          m.group(1) -> strings(m.group(2)).map { e =>
-            e.split(":", 4) match {
-              case Array(f, t, l, d) => Pending(f.toLong, t.toLong, l.toLong, d)
-              case _ => throw new IllegalStateException(s"malformed pending range: $e")
-            }
-          }
-        }.toMap
-      Manifest(files, offsets, cursors, pending)
+      Manifest(files, offsets, cursors)
     }
   }
 

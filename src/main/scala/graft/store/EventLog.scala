@@ -96,6 +96,18 @@ final class EventLog(val root: Path, spark: SparkSession) {
     else listParquet(topicDir(topic))
   }
 
+  /** Committed segment files that can hold an lsn in `(after, upTo]`: each
+    * append's `seg-<lsn>-…` files by name, plus every file without an
+    * append name (compacted generations and legacy files span many lsns,
+    * so readers must filter their rows on lsn). */
+  private[graft] def segmentsBetween(topic: String, after: Long, upTo: Long): Seq[Path] =
+    liveFiles(topic).filter { f =>
+      f.getFileName.toString match {
+        case EventLog.SegmentName(l) => l.toLong > after && l.toLong <= upTo
+        case _ => true
+      }
+    }
+
   /** The manifest's first line carries the append cursor, committed in the
     * SAME atomic rename as the file list — so a reader who sees the data
     * always sees the matching cursor (no crash window between a parquet
@@ -260,7 +272,7 @@ final class EventLog(val root: Path, spark: SparkSession) {
       // orphans (cursor untouched, so no (lsn,id) was ever visible)
       val live = ensureManifest(topic)
       val stage = topicDir(topic).resolve("_graft_stage_append")
-      if (Files.exists(stage)) deleteRecursively(stage)
+      FileTree.deleteRecursively(stage)
       staged.join(broadcast(offDf), col("_p") === col("_p2"))
         .select(
           (lit(base) + col("_off") +
@@ -277,7 +289,7 @@ final class EventLog(val root: Path, spark: SparkSession) {
       val next = Cursor(lsn, base + n)
       // ONE commit point: files + cursor land in the same manifest rename
       writeSegments(topic, live ++ moved, next)
-      deleteRecursively(stage)
+      FileTree.deleteRecursively(stage)
       next
     } finally { if (!deterministicInput) staged.unpersist(); () }
   }
@@ -432,7 +444,7 @@ final class EventLog(val root: Path, spark: SparkSession) {
     val oldFiles = ensureManifest(topic)
     if (oldFiles.isEmpty) return
     val stage = dir.resolve("_graft_compact_tmp")
-    if (Files.exists(stage)) deleteRecursively(stage)
+    FileTree.deleteRecursively(stage)
     read(topic)
       .repartitionByRange(targetFiles, col("lsn"), col("id"))
       .sortWithinPartitions(col("lsn"), col("id"))
@@ -444,7 +456,7 @@ final class EventLog(val root: Path, spark: SparkSession) {
       t
     }
     writeSegments(topic, moved, currentCursor(topic))
-    deleteRecursively(stage)
+    FileTree.deleteRecursively(stage)
   }
 
   /** Reclaim disk from files no committed reader can reach: parquet files
@@ -468,19 +480,12 @@ final class EventLog(val root: Path, spark: SparkSession) {
     Seq("_graft_stage_append", "_graft_compact_tmp").foreach { n =>
       val s = dir.resolve(n)
       if (Files.isDirectory(s) && Files.getLastModifiedTime(s).toMillis <= cutoff)
-        deleteRecursively(s)
+        FileTree.deleteRecursively(s)
     }
     // a legacy _SUCCESS marker from the pre-manifest direct-append layout
     val succ = dir.resolve("_SUCCESS")
     if (Files.isRegularFile(succ)) Files.delete(succ)
     dead.size
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(p)
-    try s.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.foreach(Files.delete)
-    finally s.close()
   }
 
   /** Number of parquet segment files in a topic (compaction observability). */
@@ -524,6 +529,9 @@ object EventLog {
 
   /** Manifest line prefix for the atomically-committed append cursor. */
   private val CursorLine = "cursor="
+
+  /** An append's segment file name, `seg-<lsn>-<stamp>-<i>.parquet`. */
+  private val SegmentName = "seg-(\\d+)-.*".r
 
   def apply(root: String, spark: SparkSession): EventLog =
     new EventLog(Paths.get(root), spark)

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.{Files, Path}
 
+import graft.store.FileTree
+
 /** The staged-swap protocol behind the maintained indexes' `compact()`:
   * the batch-partitioned stream layouts have no `_current` pointer to
   * swap (readers gate on the EOS marker instead), so an in-place fold
@@ -23,22 +25,14 @@ import java.nio.file.{Files, Path}
   *    reading an empty corpus.
   */
 private[graft] object CompactSwap {
-  def deleteRec(dir: Path): Unit = if (Files.exists(dir)) {
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(dir)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(Files.delete)
-    finally s.close()
-  }
-
   /** Swap every still-staged dir into place, clear the applied tombstone
     * artifacts, delete the marker. Idempotent (see header). */
   def roll(marker: Path, swaps: Seq[(Path, Path)], drops: Seq[Path]): Unit = {
     for ((live, staged) <- swaps; if Files.exists(staged)) {
-      deleteRec(live)
+      FileTree.deleteRecursively(live)
       Files.move(staged, live)
     }
-    drops.foreach(deleteRec)
+    drops.foreach(FileTree.deleteRecursively)
     Files.deleteIfExists(marker)
   }
 

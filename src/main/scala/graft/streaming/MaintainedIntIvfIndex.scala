@@ -143,7 +143,7 @@ final class MaintainedIntIvfIndex(path: Path, spark: SparkSession) {
     if (CompactSwap.batchIds(vecsDir) == Seq(0L) && !Files.exists(tombDir))
       return
     val Seq((_, staged)) = compactSwaps
-    CompactSwap.deleteRec(staged)
+    graft.store.FileTree.deleteRecursively(staged)
     maskedCorpus(spark.read.parquet(vecsDir.toString)
         .filter(col("batch") <= last)
         .select(col("vec_id"), col("qv"), col("codes"), col("cluster")))

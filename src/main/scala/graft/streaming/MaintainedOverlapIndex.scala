@@ -157,7 +157,7 @@ final class MaintainedOverlapIndex(path: Path, spark: SparkSession) {
     if (CompactSwap.batchIds(occDir) == Seq(0L) &&
         !Files.exists(path.resolve(s"eos/batch-$last/tombstones"))) return
     val Seq((_, so)) = compactSwaps
-    CompactSwap.deleteRec(so)
+    graft.store.FileTree.deleteRecursively(so)
     committedOcc.repartition(32, col("h")).withColumn("batch", lit(0L))
       .write.partitionBy("batch").parquet(so.toString)
     Files.createFile(compactMarker)

@@ -224,7 +224,7 @@ final class MaintainedShingleIndex(path: Path, spark: SparkSession) {
         CompactSwap.batchIds(countsDir) == Seq(0L) &&
         !Files.exists(path.resolve(s"eos/batch-$last/tombstones"))) return
     val Seq((_, sp), (_, sc)) = compactSwaps
-    CompactSwap.deleteRec(sp); CompactSwap.deleteRec(sc)
+    graft.store.FileTree.deleteRecursively(sp); graft.store.FileTree.deleteRecursively(sc)
     committedPairs.repartition(32, col("h")).withColumn("batch", lit(0L))
       .write.partitionBy("batch").parquet(sp.toString)
     committedCounts.withColumn("batch", lit(0L))

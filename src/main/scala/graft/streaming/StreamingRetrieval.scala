@@ -260,7 +260,7 @@ final class MaintainedBm25Index(path: Path, spark: SparkSession, buckets: Int = 
     if (CompactSwap.batchIds(postingsDir) == Seq(0L) &&
         !Files.exists(path.resolve(s"eos/batch-$last/tombstones"))) return
     val Seq((_, staged)) = compactSwaps
-    CompactSwap.deleteRec(staged)
+    graft.store.FileTree.deleteRecursively(staged)
     val committed = spark.read.parquet(postingsDir.toString)
       .filter(col("batch") <= last)
     val masked = tombstones(last) match {

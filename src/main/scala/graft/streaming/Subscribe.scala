@@ -6,17 +6,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-import graft.store.EventLogSchema
+import graft.store.FileTree
 
 /** Unbounded subscribe (S5/S6) over the native event log, plus the
   * exactly-once projection helper (G4).
   *
-  * `stream` = Structured Streaming file source tailing a topic directory:
+  * `stream` tails a topic through its segment manifest ([[EventLogSource]]):
   * the Spark analog of the reference's
   * `subscribe(topic): Flux<Mono<Event>>` (ReactorKafkaEventStore.java:233-246).
-  * New appends arrive as new parquet files; per-file ordering is the
-  * append's (lsn, id) order. Downstream gets a typed decode pipeline via
-  * graft.functions.EventFunctions (F5→E2→T2→T7).
+  * The stream offset is the topic's committed lsn, so micro-batches hold
+  * whole committed appends in lsn order. Downstream gets a typed decode
+  * pipeline via graft.functions.EventFunctions (F5→E2→T2→T7).
   *
   * `EosProjection` mirrors G4 (offsets stored transactionally with the
   * user's effects — usage pattern ReactorKafkaEventStore.java:218-225):
@@ -28,36 +28,26 @@ import graft.store.EventLogSchema
   */
 object Subscribe {
 
-  /** Tail a topic directory as a stream of event rows. */
+  /** Tail a topic as a stream of event rows, in whole appends. */
   def stream(spark: SparkSession, logRoot: String, topic: String,
-      maxFilesPerTrigger: Int = 100): DataFrame =
-    spark.readStream
-      .schema(EventLogSchema.schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(Paths.get(logRoot).resolve(topic).toString)
+      maxAppendsPerTrigger: Int = 100): DataFrame =
+    streamTopics(spark, logRoot, Seq(topic), maxAppendsPerTrigger).drop("topic")
 
-  /** Tail SEVERAL topics as ONE stream, each row tagged with its `topic`
-    * (derived from the segment file's parent directory). N topics cost one
-    * file source + one checkpoint instead of N queries — the fan-in the
-    * reference runs as one replicator process over all discovered topics
-    * (EventReplicator.java:168-184). The glob is explicit (`{a,b}`), not
-    * `*_events`: a topic created after the stream started must not
-    * silently join mid-checkpoint. */
+  /** Tail SEVERAL topics as ONE stream, each row tagged with its `topic`.
+    * N topics cost one source + one checkpoint instead of N queries — the
+    * fan-in the reference runs as one replicator process over all
+    * discovered topics (EventReplicator.java:168-184). The topic set is
+    * fixed: a topic created later does not join mid-checkpoint. At most
+    * `maxAppendsPerTrigger` appends per topic go into one micro-batch. */
   def streamTopics(spark: SparkSession, logRoot: String, topics: Seq[String],
-      maxFilesPerTrigger: Int = 100): DataFrame = {
+      maxAppendsPerTrigger: Int = 100): DataFrame = {
     require(topics.nonEmpty, "streamTopics needs at least one topic")
-    // whitelist, not a blacklist: the names are interpolated into a Hadoop
-    // GLOB, where '*'/'?'/'['/'{' are live metacharacters — a topic named
-    // `x*_events` would otherwise match EVERY topic directory and commit
-    // cursors for topics the caller never listed
-    require(topics.forall(_.matches("[A-Za-z0-9_.-]+")),
-      s"illegal topic names (allowed: [A-Za-z0-9_.-]+): $topics")
     spark.readStream
-      .schema(EventLogSchema.schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(Paths.get(logRoot).resolve(topics.mkString("{", ",", "}")).toString)
-      .withColumn("topic",
-        regexp_extract(input_file_name(), "/([^/]+)/[^/]*$", 1))
+      .format(classOf[EventLogSourceProvider].getName)
+      .option("path", logRoot)
+      .option("topics", topics.mkString("/"))
+      .option("maxAppendsPerTrigger", maxAppendsPerTrigger)
+      .load()
   }
 
   /** Event-time tumbling aggregation with a watermark — the §2.7 extension
@@ -89,11 +79,11 @@ final class EosProjection(stateDir: Path) {
   def foreachBatch(effects: (DataFrame, Long, Path) => Unit)(df: DataFrame, batchId: Long): Unit = {
     if (batchId <= lastCommitted) return // replay after restart → skip (G4)
     val stage = stateDir.resolve(s"stage-$batchId")
-    if (Files.exists(stage)) deleteRecursively(stage)
+    FileTree.deleteRecursively(stage)
     Files.createDirectories(stage)
     effects(df, batchId, stage)
     val committed = stateDir.resolve(s"batch-$batchId")
-    if (Files.exists(committed)) deleteRecursively(committed)
+    FileTree.deleteRecursively(committed)
     Files.move(stage, committed, StandardCopyOption.ATOMIC_MOVE)
     val tmp = stateDir.resolve("last_batch.tmp")
     Files.writeString(tmp, batchId.toString)
@@ -104,13 +94,6 @@ final class EosProjection(stateDir: Path) {
   def attach(w: DataStreamWriter[org.apache.spark.sql.Row])(
       effects: (DataFrame, Long, Path) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
     w.foreachBatch(foreachBatch(effects) _)
-
-  private def deleteRecursively(p: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(p)
-    try s.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.foreach(Files.delete)
-    finally s.close()
-  }
 }
 
 object EosProjection {

@@ -28,19 +28,6 @@ class ReplicatorSpec extends AnyFunSuite {
       Instant.parse("2024-01-01T00:00:00Z").plusSeconds(i),
       Map("mk" -> s"mv-$i".getBytes(UTF_8)))
 
-  /** Parked-run directories still on disk under staging/. */
-  private def pendingDirCount(sink: KafkaShapedLog): Int = {
-    val staging = sink.root.resolve("staging")
-    if (!Files.isDirectory(staging)) 0
-    else {
-      val s = Files.list(staging)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.count(_.getFileName.toString.startsWith("pending-"))
-      } finally s.close()
-    }
-  }
-
   test("drain loop replicates everything in multiple polls (multi-poll drain)") {
     val (log, sink, rep) = fixture()
     log.saveAll("t_events", (1 to 5).map(ev))
@@ -213,10 +200,9 @@ class ReplicatorSpec extends AnyFunSuite {
   }
 
   test("streaming replication stays exactly-once across mid-stream compaction and vacuum") {
-    // compaction republishes EVERY row inside a fresh file generation, so
-    // the directory-listing file source delivers the whole history again;
-    // the sink-cursor replay filter must drop the already-committed prefix
-    // while still committing genuinely new rows — and vacuuming the old
+    // compaction republishes EVERY row inside a fresh file generation; the
+    // stream must still commit each row exactly once — committed rows are
+    // not re-committed, genuinely new ones are — and vacuuming the old
     // generation (already-processed files) must not disturb the stream.
     val (log, sink, rep) = fixture()
     val ckpt = Files.createTempDirectory("graft-repl-cv-")
@@ -239,7 +225,6 @@ class ReplicatorSpec extends AnyFunSuite {
     assert(log.vacuum("cv_events") > 0)
     rep.replicateStream("cv_events", ckpt.resolve("c").toString).awaitTermination()
     assert(sink.read("cv_events").count() == 8)
-    assert(sink.pendingRanges("cv_events").isEmpty, "no ranges parked by replays")
   }
 
   test("drain heals a retention gap above the sink cursor (fallback to ordered scan)") {
@@ -268,9 +253,8 @@ class ReplicatorSpec extends AnyFunSuite {
     log.saveAll("tf_events", (1 to 3).map(ev))  // lsn 1, ids 1-3
     log.saveAll("tf_events", (4 to 6).map(ev))  // lsn 2, ids 4-6
     assert(log.truncateBefore("tf_events", Cursor(1, 3)) > 0) // ids 1-3 expire
-    // the streaming tail is a FILE source (directory listing), so the gap
-    // becomes visible to it at PHYSICAL removal — retention alone only
-    // drops the manifest and retains the file for in-flight batch readers
+    // retention drops the files from the manifest (the stream's view);
+    // vacuum then removes them from disk too
     assert(log.vacuum("tf_events") > 0)
     val ckpt = Files.createTempDirectory("graft-repl-gap-")
     val q = rep.replicateStream("tf_events", ckpt.toString)
@@ -282,70 +266,6 @@ class ReplicatorSpec extends AnyFunSuite {
     assert(chain(err).exists(c => c.isInstanceOf[IllegalStateException] &&
       c.getMessage.contains("gapped delivery")))
     assert(sink.read("tf_events").count() == 0) // nothing half-committed
-    assert(sink.pendingRanges("tf_events").isEmpty,
-      "a permanent gap must fail fast, not park forever")
-  }
-
-  test("commitStreamBatch parks a run delivered ahead and promotes it when the prefix lands") {
-    import org.apache.spark.sql.functions.col
-    val (log, sink, rep) = fixture()
-    log.saveAll("t_events", (1 to 6).map(ev)) // lsn 1, ids 1-6
-    val all = log.read("t_events")
-    // deliver the tail first (out-of-order file delivery): parked, nothing visible
-    assert(rep.commitStreamBatch("t_events", all.filter(col("id") >= 4)) == 0L)
-    assert(sink.pendingRanges("t_events").map(p => (p.from, p.to)) == List((4L, 6L)))
-    assert(sink.read("t_events").count() == 0)
-    assert(sink.cursorFor("t_events") == Cursor.zero)
-    // the dense prefix lands: commit + promote, atomically dropping the range
-    assert(rep.commitStreamBatch("t_events", all.filter(col("id") <= 3)) == 6L)
-    assert(sink.pendingRanges("t_events").isEmpty)
-    assert(pendingDirCount(sink) == 0, "promoted parked dirs must be deleted from staging/")
-    val rows = sink.read("t_events").orderBy("offset").collect()
-    assert(rows.map(_.getAs[Long]("offset")).toSeq == (0L to 5L), "offsets dense")
-    assert(rows.map(r => new String(r.getAs[Array[Byte]]("key"), UTF_8)).toSeq ==
-      (1 to 6).map(i => s"key-$i"), "offset order == id order across the reordering")
-    assert(sink.cursorFor("t_events") == Cursor(1, 6))
-    // full replay (wiped checkpoint) → EOS re-filter drops everything
-    assert(rep.commitStreamBatch("t_events", all) == 0L)
-    assert(sink.read("t_events").count() == 6)
-  }
-
-  test("commitStreamBatch orders interleaved runs within one gapped batch") {
-    import org.apache.spark.sql.functions.col
-    val (log, sink, rep) = fixture()
-    log.saveAll("t_events", (1 to 9).map(ev))
-    // one batch containing runs [1-2], [4-5], [7-9] (ids 3 and 6 withheld)
-    val holes = log.read("t_events").filter(col("id") =!= 3 && col("id") =!= 6)
-    assert(rep.commitStreamBatch("t_events", holes) == 2L) // only [1-2] is dense
-    assert(sink.pendingRanges("t_events").map(p => (p.from, p.to)) ==
-      List((4L, 5L), (7L, 9L)))
-    assert(sink.cursorFor("t_events") == Cursor(1, 2))
-    // the missing ids arrive → both parked runs promote in id order
-    assert(rep.commitStreamBatch("t_events",
-      log.read("t_events").filter(col("id") === 3 || col("id") === 6)) == 7L)
-    assert(sink.pendingRanges("t_events").isEmpty)
-    val rows = sink.read("t_events").orderBy("offset").collect()
-    assert(rows.map(r => new String(r.getAs[Array[Byte]]("key"), UTF_8)).toSeq ==
-      (1 to 9).map(i => s"key-$i"))
-    assert(sink.cursorFor("t_events") == Cursor(1, 9))
-  }
-
-  test("run() recovery drains parked ids; stale pending ranges are discarded") {
-    import org.apache.spark.sql.functions.col
-    val (log, sink, rep) = fixture()
-    log.saveAll("t_events", (1 to 6).map(ev))
-    rep.commitStreamBatch("t_events", log.read("t_events").filter(col("id") >= 4))
-    assert(sink.pendingRanges("t_events").nonEmpty)
-    // operator recovery: ordered drain covers ids 1-6 (including the parked run)
-    assert(rep.run("t_events") == 6L)
-    assert(sink.cursorFor("t_events") == Cursor(1, 6))
-    // next stream batch GCs the now-stale parked range, commits nothing twice
-    assert(rep.commitStreamBatch("t_events", log.read("t_events")) == 0L)
-    assert(sink.pendingRanges("t_events").isEmpty)
-    assert(pendingDirCount(sink) == 0, "discarded parked dirs must be deleted from staging/")
-    assert(sink.read("t_events").count() == 6)
-    assert(sink.read("t_events").collect().map(_.getAs[Long]("offset")).sorted.toSeq ==
-      (0L to 5L), "no duplicates from the parked copy")
   }
 
   test("streaming replication survives out-of-order file delivery (park + promote, EOS)") {
@@ -356,9 +276,9 @@ class ReplicatorSpec extends AnyFunSuite {
     val rep = new Replicator(log, sink)
     log.saveAll("oo_events", (1 to 3).map(ev)) // lsn 1, ids 1-3
     log.saveAll("oo_events", (4 to 6).map(ev)) // lsn 2, ids 4-6
-    // Invert modification times so the file source (which processes oldest
-    // mtime first) delivers later-id files BEFORE earlier-id ones — the
-    // coarse-mtime reordering the park/promote path exists for.
+    // Invert modification times so a reader ordering files by mtime would
+    // deliver later-id files BEFORE earlier-id ones (coarse-mtime
+    // reordering); delivery must stay in (lsn, id) order regardless.
     val perFile = log.read("oo_events")
       .groupBy(input_file_name().as("f")).agg(smin(col("id")).as("lo")).collect()
       .map(r => r.getString(0).stripPrefix("file:") -> r.getLong(1))
@@ -372,9 +292,8 @@ class ReplicatorSpec extends AnyFunSuite {
     }
     val ckpt = Files.createTempDirectory("graft-ooo-ckpt-")
     val q = rep.replicateStream("oo_events", ckpt.resolve("c1").toString,
-      maxFilesPerTrigger = 1)
+      maxAppendsPerTrigger = 1)
     q.awaitTermination()
-    assert(sink.pendingRanges("oo_events").isEmpty, "everything promoted")
     val rows = sink.read("oo_events").orderBy("offset").collect()
     assert(rows.map(_.getAs[Long]("offset")).toSeq == (0L to 5L), "offsets dense")
     assert(rows.map(r => new String(r.getAs[Array[Byte]]("key"), UTF_8)).toSeq ==
@@ -382,9 +301,68 @@ class ReplicatorSpec extends AnyFunSuite {
     assert(sink.cursorFor("oo_events") == Cursor(2, 6))
     // crash-replay: fresh checkpoint = full source replay → no duplicates
     val q2 = rep.replicateStream("oo_events", ckpt.resolve("c2").toString,
-      maxFilesPerTrigger = 1)
+      maxAppendsPerTrigger = 1)
     q2.awaitTermination()
     assert(sink.read("oo_events").count() == 6)
+  }
+
+  test("a segment a crashed append left unlisted is never published (stream == drain)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.Trigger
+    val srcDir = Files.createTempDirectory("graft-crash-src-")
+    EventLog(srcDir.toString, spark).saveAll("cr_events", (1 to 3).map(ev)) // lsn 1, ids 1-3
+    // The crash: an append moved its file into the topic dir, carrying the
+    // next range (lsn 2, ids 4-6), and died before its manifest write. A
+    // throwaway log sharing the committed prefix mints that file.
+    val other = EventLog(Files.createTempDirectory("graft-crash-other-").toString, spark)
+    other.saveAll("cr_events", (1 to 3).map(ev))
+    other.saveAll("cr_events", (4 to 6).map(i =>
+      Event(s"phantom-$i".getBytes(UTF_8), s"phantom-$i".getBytes(UTF_8),
+        Instant.parse("2024-01-01T00:00:00Z"), Map.empty[String, Array[Byte]])))
+    val phantoms = {
+      val s = Files.list(other.root.resolve("cr_events"))
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.filter(_.getFileName.toString.startsWith("seg-2-")).toList
+      } finally s.close()
+    }
+    assert(phantoms.nonEmpty)
+    phantoms.foreach(f => Files.copy(f, srcDir.resolve("cr_events").resolve(f.getFileName)))
+    // restart the writer and append: the real lsn 2 reuses ids 4-6
+    val log = EventLog(srcDir.toString, spark)
+    log.saveAll("cr_events", (4 to 6).map(ev))
+    log.saveAll("cr_events", (7 to 8).map(ev))
+    assert(phantoms.forall(f => Files.exists(srcDir.resolve("cr_events").resolve(f.getFileName))))
+
+    def records(k: KafkaShapedLog): Seq[(Int, Long, String, String, String)] =
+      k.read("cr_events").orderBy("partition", "offset").collect().toSeq.map { r =>
+        (r.getAs[Int]("partition"), r.getAs[Long]("offset"),
+          new String(r.getAs[Array[Byte]]("key"), UTF_8),
+          new String(r.getAs[Array[Byte]]("value"), UTF_8),
+          r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("headers"))
+            .map(h => h.getString(0) + "=" + new String(h.getAs[Array[Byte]](1), UTF_8))
+            .mkString(","))
+      }
+    val drained = KafkaShapedLog(Files.createTempDirectory("graft-crash-run-").toString, spark)
+    assert(new Replicator(log, drained).run("cr_events") == 8L)
+    val streamed = KafkaShapedLog(Files.createTempDirectory("graft-crash-str-").toString, spark)
+    new Replicator(log, streamed).replicateStream("cr_events",
+      Files.createTempDirectory("graft-crash-ckpt-").toString).awaitTermination()
+    assert(records(drained).map(_._3) == (1 to 8).map(i => s"key-$i"))
+    assert(records(streamed) == records(drained), "stream must publish what run() does")
+    assert(streamed.cursorFor("cr_events") == Cursor(3, 8))
+
+    val keys = scala.collection.mutable.ArrayBuffer.empty[String]
+    graft.streaming.Subscribe.stream(spark, srcDir.toString, "cr_events")
+      .writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", Files.createTempDirectory("graft-crash-sub-").toString)
+      .foreachBatch { (df: DataFrame, _: Long) =>
+        keys ++= df.select("key").collect().map(r => new String(r.getAs[Array[Byte]](0), UTF_8))
+        ()
+      }
+      .start().awaitTermination()
+    assert(keys.sorted.toSeq == (1 to 8).map(i => s"key-$i"), "no phantom, none dropped")
   }
 
   test("multi-topic streaming replication: one query, per-topic cursors exact (≥3 topics, interleaved)") {
@@ -401,7 +379,7 @@ class ReplicatorSpec extends AnyFunSuite {
     val topics = Seq("ma_events", "mb_events", "mc_events")
     val ckpt = Files.createTempDirectory("graft-mt-ckpt-")
     val q = rep.replicateStreamAll(topics, ckpt.resolve("c1").toString,
-      maxFilesPerTrigger = 2) // several micro-batches, topics interleaved within them
+      maxAppendsPerTrigger = 2) // several micro-batches, topics interleaved within them
     q.awaitTermination()
     assert(sink.cursorFor("ma_events") == Cursor(2, 4))
     assert(sink.cursorFor("mb_events") == Cursor(2, 4))
@@ -461,17 +439,13 @@ class ReplicatorSpec extends AnyFunSuite {
     assert(seen.toSeq == Seq(6L), "failed batch redelivered exactly")
   }
 
-  test("sink compaction: files collapse, rows/offsets/cursor unchanged, vacuum reclaims, parked runs survive") {
+  test("sink compaction: files collapse, rows/offsets/cursor stay, vacuum reclaims") {
     val (log, sink, rep) = fixture() // batchSize = 2 → several transactions
     log.saveAll("t_events", (1 to 7).map(ev))
     assert(rep.run("t_events") == 7L)
     val before = sink.read("t_events").orderBy("partition", "offset").collect().toSeq
     val filesBefore = sink.manifest().files.size
     assert(filesBefore >= 3, s"fixture should commit several files, got $filesBefore")
-    // park a fake out-of-order range: its staged dir must survive vacuum
-    import spark.implicits._
-    sink.parkRange(
-      log.read("t_events").filter($"id" === 7L), "t_events", 9L, 9L, 3L)
     sink.compact(targetFiles = 1)
     assert(sink.manifest().files.size == 1, "one compacted segment")
     assert(sink.read("t_events").orderBy("partition", "offset").collect().toSeq == before,
@@ -481,9 +455,6 @@ class ReplicatorSpec extends AnyFunSuite {
     assert(reclaimed >= filesBefore, s"old generation reclaimed, got $reclaimed")
     assert(sink.read("t_events").orderBy("partition", "offset").collect().toSeq == before,
       "read_committed view intact after vacuum")
-    assert(sink.pendingRanges("t_events").size == 1, "parked range metadata intact")
-    assert(sink.readPending(sink.pendingRanges("t_events").head).count() == 1L,
-      "parked rows must survive vacuum")
     // idempotent append continues on the compacted generation
     log.saveAll("t_events", Seq(ev(8)))
     assert(rep.run("t_events") == 1L)
@@ -552,27 +523,9 @@ class ReplicatorSpec extends AnyFunSuite {
       Map(("a_events", 0) -> 5L, ("b_events", 2) -> 9L),
       Map("a_events" -> Cursor(3, 17)))
     assert(Manifest.parse(m.render) == m)
-  }
-
-  test("manifest with non-empty pending ranges round-trips; malformed pending fails fast") {
-    import graft.sources.KafkaShapedLog.{Manifest, Pending}
-    val m = Manifest(
-      List("staging/x/part-0.parquet"),
-      Map(("a_events", 0) -> 5L),
-      Map("a_events" -> Cursor(3, 17)),
-      Map("a_events" -> List(
-        Pending(18, 25, 4, "staging/pending-1/part.parquet"),
-        Pending(30, 31, 5, "staging/pending-2/part.parquet"))))
-    val back = Manifest.parse(m.render)
-    assert(back == m)
-    assert(back.pending("a_events").map(p => (p.from, p.to, p.lsnMax)) ==
-      List((18L, 25L, 4L), (30L, 31L, 5L)))
-    // empty pending lists are dropped on render, not kept as empty sections
-    val m2 = m.copy(pending = Map("a_events" -> Nil))
-    assert(Manifest.parse(m2.render).pending == Map.empty)
-    // a malformed range entry must fail init like a malformed cursor
-    intercept[IllegalStateException](Manifest.parse(
-      """{"files": [], "offsets": {}, "cursors": {}, "pending": {"a_events": ["1:2"]}}"""))
+    // older manifests carry a `pending` section; it is ignored
+    assert(Manifest.parse(m.render.stripSuffix("}") +
+      """, "pending": {"a_events": ["18:25:4:staging/pending-1/part.parquet"]}}""") == m)
   }
 
   test("drain job budget: full drain = ONE Spark job, idle poll = ZERO (scale: poll cadence)") {

@@ -51,6 +51,32 @@ class StreamingSpec extends AnyFunSuite {
     assert(seen.sorted.toSeq == (1L to 9L), "resume processes only the delta")
   }
 
+  test("subscribe resumed after compaction + vacuum re-delivers nothing") {
+    val logDir = Files.createTempDirectory("graft-stream-cv-").toString
+    val log = EventLog(logDir, spark)
+    log.saveAll("cv_events", (1 to 4).map(ev(_, 0)))
+    log.saveAll("cv_events", (5 to 6).map(ev(_, 1)))
+    val checkpoint = Files.createTempDirectory("graft-ckpt-cv-").toString
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def drain(): Int = {
+      val before = seen.size
+      Subscribe.stream(spark, logDir, "cv_events")
+        .writeStream
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          seen ++= df.select("id").collect().map(_.getLong(0)); ()
+        }
+        .start().awaitTermination()
+      seen.size - before
+    }
+    assert(drain() == 6)
+    log.compact("cv_events", targetFiles = 1)
+    assert(log.vacuum("cv_events") > 0)
+    assert(drain() == 0, "the compacted generation must not be re-delivered")
+    assert(seen.sorted.toSeq == (1L to 6L), "no event id seen twice")
+  }
+
   test("replayed batch ids are skipped (idempotent foreachBatch)") {
     val stateDir = Files.createTempDirectory("graft-proj2-")
     val proj = new EosProjection(stateDir)
@@ -82,12 +108,12 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.StatefulOps
     val logDir = Files.createTempDirectory("graft-state-").toString
     val log = EventLog(logDir, spark)
-    // two appends → (with maxFilesPerTrigger=1) at least two micro-batches
+    // two appends → (with maxAppendsPerTrigger=1) at least two micro-batches
     log.saveAll("st_events", (1 to 4).map(ev(_, 0)))
     log.saveAll("st_events", (5 to 6).map(ev(_, 1)))
 
     // key = id % 2 (derive a keyed column from the event rows)
-    val keyed = Subscribe.stream(spark, logDir, "st_events", maxFilesPerTrigger = 1)
+    val keyed = Subscribe.stream(spark, logDir, "st_events", maxAppendsPerTrigger = 1)
       .selectExpr("id % 2 AS user_id", "CAST(id AS DOUBLE) AS value", "timestamp")
     val finalCounts = scala.collection.mutable.Map.empty[Long, Long]
     val q = StatefulOps.runningCountPerKey(keyed)
