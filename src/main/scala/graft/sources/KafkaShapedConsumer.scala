@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, StandardCopyOption}
-
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.store.TopicOffsets
@@ -24,44 +22,54 @@ import graft.store.TopicOffsets
   *  - exactly-once composes with graft.streaming.EosProjection by doing
   *    the offset write inside the projection's staged commit (G4).
   *
-  * Each poll reads the manifest's committed view and filters
-  * `offset > last` per partition — a resumed consumer DELIVERS only the
-  * tail. The filter is row-level over the committed files (appendTxn
-  * hashes topics across shared task files, so per-file topic/offset
-  * pruning would need per-file stats in the manifest); poll cost therefore
-  * grows with committed history, and long-lived logs should compact.
+  * Poll cost: each poll reads the manifest once and compares, per
+  * partition, the last consumed offset with the manifest's next offset —
+  * driver-side metadata, so a poll with nothing new launches no Spark job
+  * (a Kafka idle fetch analog). A delivering poll launches no job of its
+  * own either: the handler gets that manifest's files filtered to
+  * `last < offset < next` per partition, and only what the handler runs
+  * executes. The count needs no job because `appendTxn` writes dense
+  * offsets per partition. The filter is row-level over the committed
+  * files (appendTxn hashes topics across shared task files, so per-file
+  * topic/offset pruning would need per-file stats in the manifest); a
+  * delivering poll's scan therefore grows with committed history, and
+  * long-lived logs should compact.
   */
 final class KafkaShapedConsumer(
     log: KafkaShapedLog,
     topic: String,
     offsets: TopicOffsets) {
 
-  /** Committed-but-unconsumed records, per the offset store. */
+  /** One manifest read: the manifest, and for each partition of this topic
+    * with unconsumed records, (partition, last consumed, next committed). */
+  private def snapshot(): (KafkaShapedLog.Manifest, Seq[(Int, Long, Long)]) = {
+    val m = log.manifest()
+    val due = m.offsets.toSeq.collect { case ((t, p), next) if t == topic =>
+      (p, offsets.offsetFor(topic, p), next)
+    }.filter { case (_, last, next) => next - 1 > last }
+    (m, due)
+  }
+
+  /** The records of `due` in manifest `m`. */
+  private def records(m: KafkaShapedLog.Manifest, due: Seq[(Int, Long, Long)]): DataFrame =
+    log.read(topic, m).filter(due.map { case (p, last, next) =>
+      col("partition") === p && col("offset") > last && col("offset") < next
+    }.foldLeft(lit(false): Column)(_ || _))
+
+  /** Committed-but-unconsumed records, per the offset store, as of one
+    * manifest snapshot. */
   def pending(): DataFrame = {
-    val committed = log.read(topic)
-    val parts = log.manifest().offsets.keys.collect {
-      case (t, p) if t == topic => p
-    }.toSeq
-    parts.foldLeft(committed) { (df, p) =>
-      df.filter(!(col("partition") === p) ||
-        col("offset") > offsets.offsetFor(topic, p))
-    }
+    val (m, due) = snapshot()
+    records(m, due)
   }
 
   /** Deliver pending records; offsets advance only after `handle` returns.
     * @return records delivered */
   def poll(handle: DataFrame => Unit): Long = {
-    // persist across the three uses (maxima/count + the handler's own
-    // evaluation) — otherwise every poll re-reads the manifest parquet 3×
-    val batch = pending().persist()
-    try {
-      val stats = batch.groupBy(col("partition"))
-        .agg(max(col("offset")).as("mx"), count(lit(1)).as("n"))
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      if (stats.isEmpty) return 0L
-      handle(batch)
-      stats.foreach { case (p, mx, _) => offsets.update(topic, p, mx) }
-      stats.map(_._3).sum
-    } finally batch.unpersist()
+    val (m, due) = snapshot()
+    if (due.isEmpty) return 0L
+    handle(records(m, due))
+    due.foreach { case (p, _, next) => offsets.update(topic, p, next - 1) }
+    due.map { case (_, last, next) => next - 1 - last }.sum
   }
 }

@@ -164,9 +164,9 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
     n
   }
 
-  /** read_committed view of one topic. */
-  def read(topic: String): DataFrame = {
-    val files = manifest().files.map(f => root.resolve(f).toString)
+  /** read_committed view of one topic, as of manifest `at`. */
+  def read(topic: String, at: Manifest = manifest()): DataFrame = {
+    val files = at.files.map(f => root.resolve(f).toString)
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], recordSchema)
         .filter(col("topic") === topic)

@@ -201,43 +201,24 @@ final class EventLog(val root: Path, spark: SparkSession) {
 
   private def hasData(topic: String): Boolean = liveFiles(topic).nonEmpty
 
-  /** Append a batch as one transaction: every row gets `lsn = cursor.lsn+1`
-    * and a consecutive `id`. Single-writer per topic (synchronized
-    * in-process; see class doc for the cross-process lock).
-    *
-    * The first append to a topic per EventLog instance reconciles the
-    * cursor from data first: a previous process may have crashed between
-    * the parquet commit and the cursor move, and allocating from the stale
-    * meta cursor would mint duplicate (lsn, id) pairs — breaking the
-    * dense-id invariant everything downstream relies on. */
-  def append(topic: String, batch: DataFrame): Cursor = writeLock(topic).synchronized {
-    createTopic(topic)
-    if (!reconciled.contains(topic)) {
-      // a manifest-embedded cursor is data-consistent BY CONSTRUCTION
-      // (one atomic rename commits both), so the boot-time repair scan
-      // only runs for pre-manifest-cursor topics — on a TB-scale topic
-      // that scan is a whole extra job per writer boot
-      if (manifestCursor(topic).isEmpty) reconcile(topic)
-      reconciled.add(topic)
-    }
-    val cur = currentCursor(topic)
-    val lsn = cur.lsn + 1
-    val base = cur.id
+  /** Append a distributed batch as one transaction: every row gets
+    * `lsn = cursor.lsn+1` and a consecutive `id` in the batch's row order
+    * (G9). Single-writer per topic (synchronized in-process; see class doc
+    * for the cross-process lock). Costs a sizes job plus the write job —
+    * driver-side batches use [[saveAll]], which needs only the write. */
+  def append(topic: String, batch: DataFrame): Cursor = commit(topic) { (cur, stage) =>
     // Two passes: (1) per-partition sizes, (2) id-stamped write. Ids are
-    // base + cumulative-partition-offset + within-partition position,
+    // cursor id + cumulative-partition-offset + within-partition position,
     // preserving the caller's row order deterministically (G9). Fully
     // columnar — `spark_partition_id` + `monotonically_increasing_id`
     // (= partitionId·2³³ + position) pin each row's (partition, position)
-    // inside whole-stage codegen; the old spelling dropped to `.rdd`,
-    // which deserialized every row to a Java object and re-serialized it
-    // for the write.
+    // inside whole-stage codegen.
     // The persist guards against a NONDETERMINISTIC input plan changing
     // partition sizes between the two passes (which would corrupt the id
-    // allocation). A fully deterministic plan — the overwhelmingly common
-    // case: reads + pure projections — re-evaluates identically (file
-    // splits are frozen in the resolved relation), so the sizes pass can
-    // just re-scan, skipping the materialization copy entirely; it then
-    // decodes no data columns at all.
+    // allocation). A fully deterministic plan — reads + pure projections —
+    // re-evaluates identically (file splits are frozen in the resolved
+    // relation), so the sizes pass just re-scans and decodes no data
+    // columns at all.
     val deterministicInput = batch.queryExecution.analyzed.find(p =>
       p.expressions.exists(e => e.find(!_.deterministic).isDefined)).isEmpty
     val projected = batch.selectExpr("key", "data", "metadata", "timestamp")
@@ -250,7 +231,6 @@ final class EventLog(val root: Path, spark: SparkSession) {
       // partial agg: one row per input partition reaches the driver
       val sizes = staged.groupBy(col("_p")).agg(count(lit(1)).as("n"))
         .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-      val n = sizes.map(_._2).sum
       val offsets = {
         var acc = 0L
         sizes.map { case (p, c) => val o = (p, acc); acc += c; o }
@@ -265,32 +245,14 @@ final class EventLog(val root: Path, spark: SparkSession) {
             org.apache.spark.sql.types.IntegerType, nullable = false),
           org.apache.spark.sql.types.StructField("_off",
             org.apache.spark.sql.types.LongType, nullable = false))))
-      // stage → move → manifest: the write lands in a staging dir, files
-      // move into the topic dir under unique names, and the MANIFEST move
-      // is the commit point — readers never see partial task output, and
-      // a crash anywhere before the manifest leaves only vacuum-able
-      // orphans (cursor untouched, so no (lsn,id) was ever visible)
-      val live = ensureManifest(topic)
-      val stage = topicDir(topic).resolve("_graft_stage_append")
-      FileTree.deleteRecursively(stage)
       staged.join(broadcast(offDf), col("_p") === col("_p2"))
         .select(
-          (lit(base) + col("_off") +
+          (lit(cur.id) + col("_off") +
             (col("_m") - col("_p").cast("long") * lit(1L << 33)) + lit(1L)).as("id"),
           col("key"), col("data"), col("metadata"), col("timestamp"),
-          lit(lsn).as("lsn"))
+          lit(cur.lsn + 1).as("lsn"))
         .write.mode("overwrite").parquet(stage.toString)
-      val stamp = System.nanoTime()
-      val moved = listParquet(stage).zipWithIndex.map { case (f, i) =>
-        val t = topicDir(topic).resolve(s"seg-$lsn-$stamp-$i.parquet")
-        Files.move(f, t)
-        t
-      }
-      val next = Cursor(lsn, base + n)
-      // ONE commit point: files + cursor land in the same manifest rename
-      writeSegments(topic, live ++ moved, next)
-      FileTree.deleteRecursively(stage)
-      next
+      sizes.map(_._2).sum
     } finally { if (!deterministicInput) staged.unpersist(); () }
   }
 
@@ -301,13 +263,64 @@ final class EventLog(val root: Path, spark: SparkSession) {
   private val reconciled =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Driver-side convenience append (S1 `save`/`saveAll` analog). */
-  def saveAll(topic: String, events: Seq[Event]): Cursor = {
+  /** Driver-side append (S1 `save`/`saveAll` analog), one transaction with
+    * the same rows and cursor as [[append]] of the same events. The rows
+    * are already on the driver, so each is stamped here with
+    * `id = cursor.id + 1 + i` and `lsn = cursor.lsn + 1`, and the commit
+    * costs one Spark job: the staged write. */
+  def saveAll(topic: String, events: Seq[Event]): Cursor = commit(topic) { (cur, stage) =>
     import scala.jdk.CollectionConverters._
-    val df = spark.createDataFrame(
-      events.map(EventLogSchema.appendRow).asJava, EventLogSchema.appendSchema)
-    append(topic, df)
+    val lsn = cur.lsn + 1
+    val rows = events.iterator.zipWithIndex
+      .map { case (e, i) => EventLogSchema.storedRow(e, lsn, cur.id + 1 + i) }.toList
+    spark.createDataFrame(rows.asJava, EventLogSchema.schema)
+      .write.mode("overwrite").parquet(stage.toString)
+    events.size.toLong
   }
+
+  /** One append transaction around `writeStage(cursor, stageDir)`, which
+    * writes the batch's rows, stamped `lsn = cursor.lsn + 1` and ids
+    * `cursor.id + 1 …`, as parquet into `stageDir` and returns their count.
+    *
+    * The first append to a topic per EventLog instance reconciles the
+    * cursor from data first when the topic predates the manifest cursor: a
+    * previous process may have crashed between the parquet commit and the
+    * cursor move, and allocating from the stale cursor would mint
+    * duplicate (lsn, id) pairs — breaking the dense-id invariant
+    * everything downstream relies on. A manifest-embedded cursor is
+    * data-consistent by construction (one atomic rename commits both), so
+    * it needs no repair scan.
+    *
+    * stage → move → manifest: the write lands in a staging dir, files move
+    * into the topic dir under unique names, and the MANIFEST move is the
+    * commit point — readers never see partial task output, and a crash
+    * anywhere before the manifest leaves only vacuum-able orphans (cursor
+    * untouched, so no (lsn,id) was ever visible). */
+  private def commit(topic: String)(writeStage: (Cursor, Path) => Long): Cursor =
+    writeLock(topic).synchronized {
+      createTopic(topic)
+      if (!reconciled.contains(topic)) {
+        if (manifestCursor(topic).isEmpty) reconcile(topic)
+        reconciled.add(topic)
+      }
+      val cur = currentCursor(topic)
+      val live = ensureManifest(topic)
+      val stage = topicDir(topic).resolve("_graft_stage_append")
+      FileTree.deleteRecursively(stage)
+      val n = writeStage(cur, stage)
+      val lsn = cur.lsn + 1
+      val stamp = System.nanoTime()
+      val moved = listParquet(stage).zipWithIndex.map { case (f, i) =>
+        val t = topicDir(topic).resolve(s"seg-$lsn-$stamp-$i.parquet")
+        Files.move(f, t)
+        t
+      }
+      val next = Cursor(lsn, cur.id + n)
+      // ONE commit point: files + cursor land in the same manifest rename
+      writeSegments(topic, live ++ moved, next)
+      FileTree.deleteRecursively(stage)
+      next
+    }
 
   /** Full bounded read of a topic (unordered; order with scan()) —
     * manifest-gated: only committed segment files are visible, never

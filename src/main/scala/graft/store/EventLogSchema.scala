@@ -45,6 +45,10 @@ object EventLogSchema {
     else graft.codec.MetadataCodec.encode(e.metadata),
     Timestamp.from(e.timestamp))
 
+  /** `e` as a stored row of [[schema]], stamped with its `(lsn, id)`. */
+  def storedRow(e: Event, lsn: Long, id: Long): Row =
+    Row.fromSeq((id +: appendRow(e).toSeq) :+ lsn)
+
   def toEvent(r: Row): Event = {
     val md = r.getAs[Array[Byte]]("metadata")
     new Event(

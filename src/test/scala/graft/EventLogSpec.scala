@@ -141,6 +141,62 @@ class EventLogSpec extends AnyFunSuite {
     assert(c == Cursor(2, 4))
   }
 
+  test("saveAll launches exactly one Spark job per append") {
+    val log = newLog()
+    assert(TestSpark.jobsDuring(log.saveAll("sj_events", (1 to 3).map(ev))) == ((Cursor(1, 3), 1)))
+    assert(TestSpark.jobsDuring(log.saveAll("sj_events", (4 to 600).map(ev))) ==
+      ((Cursor(2, 600), 1)))
+  }
+
+  /** Stored rows as comparable values: (lsn, id, key, data, metadata, timestamp). */
+  private def stored(log: EventLog, topic: String) =
+    log.read(topic).orderBy("lsn", "id").collect().toSeq.map(r => (
+      r.getAs[Long]("lsn"), r.getAs[Long]("id"), r.getAs[Array[Byte]]("key").toSeq,
+      r.getAs[Array[Byte]]("data").toSeq, Option(r.getAs[Array[Byte]]("metadata")).map(_.toSeq),
+      r.getAs[java.sql.Timestamp]("timestamp")))
+
+  private def appendDf(events: Seq[Event]) = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(events.map(graft.store.EventLogSchema.appendRow).asJava,
+      graft.store.EventLogSchema.appendSchema)
+  }
+
+  test("saveAll stores the same rows and cursor as append(DataFrame): 1-event and empty batches") {
+    val (a, b) = (newLog(), newLog())
+    val noMeta = Event("k".getBytes(UTF_8), Array[Byte](1, 2), Instant.parse("2024-01-02T00:00:00Z"))
+    assert(a.saveAll("pa_events", (1 to 3).map(ev)) == b.append("pa_events", appendDf((1 to 3).map(ev))))
+    assert(a.saveAll("pa_events", Seq(noMeta)) == Cursor(2, 4))
+    assert(b.append("pa_events", appendDf(Seq(noMeta))) == Cursor(2, 4))
+    assert(stored(a, "pa_events") == stored(b, "pa_events"))
+    // an empty batch still takes an lsn and allocates no id
+    assert(a.saveAll("pa_events", Seq.empty) == Cursor(3, 4))
+    assert(b.append("pa_events", appendDf(Seq.empty)) == Cursor(3, 4))
+    assert(stored(a, "pa_events") == stored(b, "pa_events"))
+    assert(a.saveAll("pa_events", Seq(ev(5))) == b.append("pa_events", appendDf(Seq(ev(5)))))
+    assert(stored(a, "pa_events") == stored(b, "pa_events"))
+    assert(stored(a, "pa_events").map(r => (r._1, r._2)) ==
+      Seq((1L, 1L), (1L, 2L), (1L, 3L), (2L, 4L), (4L, 5L)))
+  }
+
+  test("saveAll and append(DataFrame) both reconcile a pre-manifest-cursor topic on first append") {
+    val base = Files.createTempDirectory("graft-legacy-")
+    EventLog(base.toString, spark).saveAll("pm_events", (1 to 3).map(ev))
+    val segments = base.resolve("pm_events/_graft_meta/segments")
+    Files.writeString(segments, Files.readString(segments).linesIterator
+      .filterNot(_.startsWith("cursor=")).mkString("", "\n", "\n"))
+    val copy = Files.createTempDirectory("graft-legacy-copy-")
+    Files.walk(base).sorted().forEach { p =>
+      val t = copy.resolve(base.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    }
+    val (a, b) = (EventLog(base.toString, spark), EventLog(copy.toString, spark))
+    assert(a.currentCursor("pm_events") == Cursor.zero)
+    assert(a.saveAll("pm_events", Seq(ev(4))) == Cursor(2, 4))
+    assert(b.append("pm_events", appendDf(Seq(ev(4)))) == Cursor(2, 4))
+    assert(stored(a, "pm_events") == stored(b, "pm_events"))
+    assert(stored(a, "pm_events").map(_._2) == (1L to 4L))
+  }
+
   test("concurrent appends: different topics parallelize, same topic stays single-writer (G1)") {
     // the write lock is per (root, topic) — a JVM-global lock would also
     // pass this, but the per-topic correctness contract is what matters:

@@ -439,6 +439,65 @@ class ReplicatorSpec extends AnyFunSuite {
     assert(seen.toSeq == Seq(6L), "failed batch redelivered exactly")
   }
 
+  private def consumerFixture(partitions: Int)
+      : (EventLog, KafkaShapedLog, Replicator, graft.sources.KafkaShapedConsumer) = {
+    val log = EventLog(Files.createTempDirectory("graft-src-").toString, spark)
+    val sink = KafkaShapedLog(Files.createTempDirectory("graft-sink-").toString, spark,
+      partitions)
+    val offsets = graft.store.TopicOffsets(Files.createTempDirectory("graft-cons-").toString)
+    (log, sink, new Replicator(log, sink, batchSize = 2),
+      new graft.sources.KafkaShapedConsumer(sink, "t_events", offsets))
+  }
+
+  test("consumer poll: an idle poll launches no Spark job, a delivering one only its handler's") {
+    val (log, _, rep, consumer) = consumerFixture(partitions = 3)
+    log.saveAll("t_events", (1 to 6).map(ev))
+    rep.run("t_events")
+    var handlerJobs = -1
+    val (n, ownJobs) = TestSpark.jobsDuring(consumer.poll { df =>
+      handlerJobs = TestSpark.jobsDuring(df.collect())._2
+    })
+    assert(n == 6L)
+    assert(handlerJobs >= 1, "the handler's collect is a job")
+    assert(ownJobs == 0, s"poll launched $ownJobs jobs beside its handler's")
+    assert(TestSpark.jobsDuring(consumer.poll(_ => fail("no batch expected"))) == ((0L, 0)))
+  }
+
+  test("consumer poll delivers one manifest snapshot: a commit during the handler waits for the next poll") {
+    val (log, sink, rep, consumer) = consumerFixture(partitions = 3)
+    log.saveAll("t_events", (1 to 5).map(ev))
+    rep.run("t_events")
+    log.saveAll("t_events", (6 to 9).map(ev))
+    val first = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+    val n = consumer.poll { df =>
+      assert(rep.run("t_events") == 4L) // commits before the handler reads
+      first ++= df.collect().map(r => (r.getAs[Int]("partition"), r.getAs[Long]("offset")))
+    }
+    assert(n == 5L, "the poll counts only its snapshot")
+    assert(first.size == 5, "the handler sees only its snapshot")
+    val rest = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+    assert(consumer.poll(df =>
+      rest ++= df.collect().map(r => (r.getAs[Int]("partition"), r.getAs[Long]("offset")))) == 4L)
+    assert(rest.size == 4)
+    assert(consumer.poll(_ => fail("no batch expected")) == 0L)
+    val all = sink.read("t_events").collect()
+      .map(r => (r.getAs[Int]("partition"), r.getAs[Long]("offset")))
+    assert((first ++ rest).sorted.toSeq == all.sorted.toSeq, "every record exactly once")
+  }
+
+  test("consumer pending() is one snapshot: unconsumed records bounded by its next offsets") {
+    val (log, sink, rep, consumer) = consumerFixture(partitions = 3)
+    log.saveAll("t_events", (1 to 5).map(ev))
+    rep.run("t_events")
+    val pending = consumer.pending()
+    log.saveAll("t_events", (6 to 9).map(ev))
+    rep.run("t_events")
+    assert(pending.count() == 5L, "records committed after the snapshot stay out")
+    assert(consumer.poll(_ => ()) == 9L)
+    assert(consumer.pending().count() == 0L)
+    assert(sink.read("t_events").count() == 9L)
+  }
+
   test("sink compaction: files collapse, rows/offsets/cursor stay, vacuum reclaims") {
     val (log, sink, rep) = fixture() // batchSize = 2 → several transactions
     log.saveAll("t_events", (1 to 7).map(ev))

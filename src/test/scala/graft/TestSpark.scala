@@ -15,6 +15,45 @@ object TestSpark {
     s
   }
 
+  private val JobTag = "graft.test.jobTag"
+
+  /** Runs `body` and returns its result with the number of Spark jobs it
+    * launched. Jobs are told apart by a local property set on this thread
+    * (inherited by the threads it starts), so jobs of other threads are not
+    * counted, and a nested call counts its own jobs only. The listener bus
+    * is asynchronous but delivers in order: a tagged sentinel job after
+    * `body` flushes it, so once the sentinel's start is seen every earlier
+    * start has been. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val sentinel = tag + "/sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(JobTag)).foreach {
+          case `tag` => jobs.incrementAndGet()
+          case `sentinel` => flushed.countDown()
+          case _ =>
+        }
+    }
+    val outer = sc.getLocalProperty(JobTag)
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(JobTag, tag)
+      val result = body
+      sc.setLocalProperty(JobTag, sentinel)
+      sc.parallelize(Seq(1), 1).count()
+      require(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the sentinel job")
+      (result, jobs.get)
+    } finally {
+      sc.setLocalProperty(JobTag, outer)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** Executes `df` and sums the parquet scans' `numFiles` metric — the
     * file-level partition-pruning probe shared by the layout specs
     * (`DataFrame.inputFiles` ignores filters, so it can't observe pruning). */
