@@ -63,7 +63,7 @@ object Bm25Index {
       .write.mode("overwrite").partitionBy("b").parquet(s"$path/$smalls/terms")
     dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_dl"))
       .write.mode("overwrite").parquet(s"$path/$smalls/stats")
-    writeState(path, 0L, smalls, "postings", 0L)
+    writeState(path, 0L, smalls, "postings", 0L, Seq(smalls, "postings"))
   }
 
   /** Incrementally fold a new document batch into an existing index —
@@ -93,14 +93,7 @@ object Bm25Index {
     * path (Bm25IndexSpec pins crashed-append invisibility + retry
     * equality). Legacy unbatched trees (pointer without a batch field)
     * keep the old append-then-swap behavior. */
-  def append(batch: DataFrame, path: String, buckets: Int = 32): Unit =
-    append(batch, path, buckets, failBeforeCommit = false)
-
-  /** `failBeforeCommit` is the spec's crash-injection seam: throw after
-    * every write but BEFORE the pointer swap — the widest possible
-    * crash window. Production callers never pass it. */
-  private[graft] def append(batch: DataFrame, path: String, buckets: Int,
-      failBeforeCommit: Boolean): Unit = {
+  def append(batch: DataFrame, path: String, buckets: Int = 32): Unit = {
     val spark = batch.sparkSession
     graft.GraftExtensions.register(spark)
     val (epoch, _, postingsRel, lastBatch) = currentState(path)
@@ -138,9 +131,8 @@ object Bm25Index {
     Seq((nz(oldStats, 0) + nz(delta, 0), nz(oldStats, 1) + nz(delta, 1)))
       .toDF("n_docs", "total_dl")
       .write.mode("overwrite").parquet(s"$path/$smalls/stats")
-    if (failBeforeCommit)
-      throw new IllegalStateException("injected crash before the append commit")
-    writeState(path, epoch, smalls, postingsRel, math.max(lastBatch + 1, 0L))
+    writeState(path, epoch, smalls, postingsRel, math.max(lastBatch + 1, 0L),
+      Seq(smalls, if (lastBatch < 0) postingsRel else s"$postingsRel/batch=${lastBatch + 1}"))
   }
 
   /** BM25 scores of `qterms` (query_id, term) against the index:
@@ -193,7 +185,7 @@ object Bm25Index {
   // ---------------------------------------------------------------------
   // Small-side versioning: terms/stats live in immutable snapshot dirs
   // (`smalls/<n>/{terms,stats}`) selected by a pointer file `_current`,
-  // swapped with an atomic rename. Every rewrite of the vocabulary-sized
+  // swapped with Commit.replace. Every rewrite of the vocabulary-sized
   // side therefore writes to a FRESH directory and commits by pointer
   // swap — no plan ever overwrites the files it is reading (the
   // read-path-you-write hazard cache()+count() only papered over: a lost
@@ -224,15 +216,14 @@ object Bm25Index {
     }
   }
 
+  /** Commit a new pointer. `written` are the dirs (relative to `path`)
+    * this commit publishes; their files are forced before the replace. */
   private def writeState(path: String, epoch: Long, smalls: String,
-      postings: String, lastBatch: Long): Unit = {
-    val tmp = java.nio.file.Paths.get(s"$path/_current.tmp")
-    java.nio.file.Files.createDirectories(tmp.getParent)
-    java.nio.file.Files.write(tmp,
-      s"$epoch\t$smalls\t$postings\t$lastBatch".getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, pointerFile(path),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      postings: String, lastBatch: Long, written: Seq[String]): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
+    graft.store.Commit.force(
+      written.flatMap(r => graft.store.FileTree.all(java.nio.file.Paths.get(s"$path/$r"))))
+    graft.store.Commit.replace(pointerFile(path), s"$epoch\t$smalls\t$postings\t$lastBatch")
     // GC superseded snapshots once the swap is durable — without this,
     // every append/delete would leave its predecessor dir forever. Safe
     // under the single-active-writer contract (G6): index mutations are
@@ -245,12 +236,7 @@ object Bm25Index {
       val dirs = java.nio.file.Files.list(root)
       try dirs.iterator().asScala.toList
         .filter(d => d.getFileName.toString != keep)
-        .foreach { d =>
-          val files = java.nio.file.Files.walk(d)
-          try files.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(java.nio.file.Files.delete)
-          finally files.close()
-        }
+        .foreach(graft.store.FileTree.deleteRecursively)
       finally dirs.close()
     }
   }
@@ -382,7 +368,7 @@ object Bm25Index {
       .toDF("n_docs", "total_dl")
       .write.mode("overwrite").parquet(s"$path/$smalls/stats")
     rows.unpersist()
-    writeState(path, maxPending.getLong(0), smalls, postingsRel, lastBatch)
+    writeState(path, maxPending.getLong(0), smalls, postingsRel, lastBatch, Seq(smalls))
   }
 
   /** Physically drop tombstoned postings — the compaction that turns the
@@ -412,13 +398,6 @@ object Bm25Index {
   def compact(spark: SparkSession, path: String): Unit = {
     applyPending(spark, path)
     val (epoch, smallsRel, postingsRel, lastBatch) = currentState(path)
-    def rmTree(p: java.nio.file.Path): Unit = if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-      finally s.close()
-    }
     // Orphan collection FIRST: a crash between a prior compact's pointer
     // swap and its trailing GC strands the superseded postings dir, and
     // the retry takes one of the skip paths below and would never revisit
@@ -437,7 +416,7 @@ object Bm25Index {
             val n = d.getFileName.toString
             (n == "postings" || n.startsWith("postings_e")) && n != postingsRel
           }
-          .foreach(rmTree)
+          .foreach(graft.store.FileTree.deleteRecursively)
         finally s.close()
       }
     }
@@ -460,11 +439,11 @@ object Bm25Index {
         .repartition(col("b"))
         .withColumn("batch", lit(0L))
         .write.mode("overwrite").partitionBy("batch", "b").parquet(s"$path/$newRel")
-      writeState(path, newEpoch, smallsRel, newRel, 0L)
+      writeState(path, newEpoch, smallsRel, newRel, 0L, Seq(newRel))
       // GC the superseded dir; a crash before this line is collected by
       // the next compact's opening sweep
-      rmTree(java.nio.file.Paths.get(s"$path/$postingsRel"))
+      graft.store.FileTree.deleteRecursively(java.nio.file.Paths.get(s"$path/$postingsRel"))
     }
-    rmTree(java.nio.file.Paths.get(tombDir(path)))
+    graft.store.FileTree.deleteRecursively(java.nio.file.Paths.get(tombDir(path)))
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Shared commit primitives for catalog-table index artifacts (the
   * Bm25Index/ShingleIndex single-commit discipline): a `_current` pointer
   * file at the table location holds the last COMMITTED batch id and is
-  * swapped by atomic rename; appends write their own `batch=<n>`
+  * swapped by [[graft.store.Commit.replace]]; appends write their own `batch=<n>`
   * partitions and become visible only at the swap, so a crash anywhere
   * inside an append leaves the index at its pre-append state and the
   * retry first clears the uncommitted partition dirs. Extracted from
@@ -35,14 +35,8 @@ private[graft] object CatalogCommit {
     else Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toLong)
   }
 
-  def writeLastBatch(spark: SparkSession, name: String, b: Long): Unit = {
-    val p = pointerPath(spark, name)
-    val tmp = p.resolveSibling("_current.tmp")
-    java.nio.file.Files.write(tmp, b.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  def writeLastBatch(spark: SparkSession, name: String, b: Long): Unit =
+    graft.store.Commit.replace(pointerPath(spark, name), b.toString)
 
   /** Physically drop an UNCOMMITTED batch partition (a crashed append's
     * leftovers — invisible to gated readers, removed before the retry

@@ -65,25 +65,12 @@ object Maintenance {
   final case class Compacted(kind: String, name: String,
       filesBefore: Long, filesAfter: Long)
 
-  private def dataFiles(p: java.nio.file.Path): Long = {
-    if (!java.nio.file.Files.exists(p)) 0L
-    else {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.walk(p)
-      try s.iterator().asScala.count { f =>
-        val n = f.getFileName.toString
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
-      finally s.close()
-    }
-  }
-
   private def tableFiles(spark: SparkSession, table: String): Long =
     if (!spark.catalog.tableExists(table)) 0L
-    else dataFiles(CatalogCommit.tableLocation(spark, table))
+    else CatalogCommit.dataFileCount(CatalogCommit.tableLocation(spark, table))
 
   private def pathFiles(dir: String): Long =
-    dataFiles(java.nio.file.Paths.get(dir))
+    CatalogCommit.dataFileCount(java.nio.file.Paths.get(dir))
 
   /** One artifact's physical layout: `batchParts` counts its `batch=`
     * partition dirs (0 for layouts without a batch axis), `files` its
@@ -140,7 +127,7 @@ object Maintenance {
       val dirs = streamedDataDirs(kind, root)
       Layout(kind, name,
         dirs.map(batchDirCount).maxOption.getOrElse(0L),
-        dirs.map(dataFiles).sum)
+        dirs.map(CatalogCommit.dataFileCount).sum)
     }
   }
 
@@ -272,7 +259,7 @@ object Maintenance {
       def files(): Long = l.kind match {
         case "shingle" | "overlap" | "line" => tableFiles(spark, l.name)
         case k if k.startsWith("stream-") =>
-          streamedDataDirs(k, java.nio.file.Paths.get(l.name)).map(dataFiles).sum
+          streamedDataDirs(k, java.nio.file.Paths.get(l.name)).map(CatalogCommit.dataFileCount).sum
         case _ => pathFiles(l.name)
       }
       val before = files()

@@ -85,11 +85,6 @@ object OverlapIndex {
     writeLastBatch(spark, name, 0L)
   }
 
-  /** Fold a new batch of training docs into the index (ids disjoint from
-    * the corpus). Single-commit: see the header. */
-  def append(batch: DataFrame, name: String, buckets: Int = 32): Unit =
-    append(batch, name, buckets, failBeforeCommit = false)
-
   /** [[append]] with an EXPLICIT target batch id — idempotent under
     * marker-driven retries (the ShingleIndex.appendAs contract verbatim;
     * see its scaladoc). */
@@ -108,10 +103,9 @@ object OverlapIndex {
     writeLastBatch(spark, name, target)
   }
 
-  /** `failBeforeCommit` is the spec's crash-injection seam (the
-    * ShingleIndex shape). Production callers never pass it. */
-  private[graft] def append(batch: DataFrame, name: String, buckets: Int,
-      failBeforeCommit: Boolean): Unit = {
+  /** Fold a new batch of training docs into the index (ids disjoint from
+    * the corpus). Single-commit: see the header. */
+  def append(batch: DataFrame, name: String, buckets: Int = 32): Unit = {
     val spark = batch.sparkSession
     graft.GraftExtensions.register(spark)
     val last = readLastBatch(spark, name).getOrElse(
@@ -119,8 +113,6 @@ object OverlapIndex {
     val next = last + 1
     dropUncommitted(spark, name, next)
     writeBatch(batch, name, buckets, batchNo = next, overwrite = false)
-    if (failBeforeCommit)
-      throw new IllegalStateException("injected crash before the append commit")
     writeLastBatch(spark, name, next)
   }
 

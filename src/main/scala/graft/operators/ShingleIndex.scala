@@ -87,18 +87,6 @@ object ShingleIndex {
     writeLastBatch(spark, name, 0L)
   }
 
-  /** Fold a new batch into the index — the daily path: the batch's
-    * distinct (doc_id, h) pairs and its per-doc counts land in their own
-    * `batch` partitions under the standing bucket layout (the corpus
-    * partitions never rewrite), and ONE atomic pointer swap commits both.
-    * Crash-safe: see the header — nothing is visible until the swap, and
-    * the retry clears the crashed attempt's partition dirs first. Batch
-    * doc_ids must be disjoint from the corpus (the [[probe]] contract).
-    * After append, probing a NEWER batch equals probing an index
-    * materialized over corpus ∪ batch — ShingleIndexSpec pins it. */
-  def append(batch: DataFrame, name: String, buckets: Int = 32): Unit =
-    append(batch, name, buckets, failBeforeCommit = false)
-
   /** [[append]] with an EXPLICIT target batch id — the idempotent form a
     * marker-driven retry protocol needs (DailyIncrement's apply steps):
     * plain append called twice appends twice, but a retry that staged
@@ -122,11 +110,16 @@ object ShingleIndex {
     writeLastBatch(spark, name, target)
   }
 
-  /** `failBeforeCommit` is the spec's crash-injection seam: throw after
-    * both partition writes but BEFORE the pointer swap — the widest
-    * possible crash window. Production callers never pass it. */
-  private[graft] def append(batch: DataFrame, name: String, buckets: Int,
-      failBeforeCommit: Boolean): Unit = {
+  /** Fold a new batch into the index — the daily path: the batch's
+    * distinct (doc_id, h) pairs and its per-doc counts land in their own
+    * `batch` partitions under the standing bucket layout (the corpus
+    * partitions never rewrite), and ONE atomic pointer swap commits both.
+    * Crash-safe: see the header — nothing is visible until the swap, and
+    * the retry clears the crashed attempt's partition dirs first. Batch
+    * doc_ids must be disjoint from the corpus (the [[probe]] contract).
+    * After append, probing a NEWER batch equals probing an index
+    * materialized over corpus ∪ batch — ShingleIndexSpec pins it. */
+  def append(batch: DataFrame, name: String, buckets: Int = 32): Unit = {
     val spark = batch.sparkSession
     graft.GraftExtensions.register(spark)
     val last = readLastBatch(spark, name).getOrElse(
@@ -135,8 +128,6 @@ object ShingleIndex {
     dropUncommitted(spark, name, next)
     dropUncommitted(spark, s"${name}_counts", next)
     writeBatch(batch, name, buckets, batchNo = next, overwrite = false)
-    if (failBeforeCommit)
-      throw new IllegalStateException("injected crash before the append commit")
     writeLastBatch(spark, name, next)
   }
 

@@ -92,7 +92,7 @@ object Takedown {
     val existing = if (java.nio.file.Files.exists(p))
       java.nio.file.Files.readString(p).linesIterator.toSeq else Seq.empty
     if (!existing.contains(line))
-      java.nio.file.Files.writeString(p, (existing :+ line).mkString("\n"))
+      graft.store.Commit.replace(p, (existing :+ line).mkString("\n"))
   }
 
   /** The tree-recorded index names of one kind. */
@@ -262,11 +262,6 @@ object Takedown {
       .foreach(n => IntIvfIndex.vacuum(spark, n))
     withRecorded(outDir, "overlap", overlapIndexes)
       .foreach(n => OverlapIndex.vacuum(spark, n))
-    val tomb = java.nio.file.Paths.get(tombDir(outDir))
-    import scala.jdk.CollectionConverters._
-    val s = java.nio.file.Files.walk(tomb)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.delete)
-    finally s.close()
+    graft.store.FileTree.deleteRecursively(java.nio.file.Paths.get(tombDir(outDir)))
   }
 }

@@ -153,15 +153,8 @@ object VectorIndex {
     clearTombstones(path)
   }
 
-  private def clearTombstones(path: String): Unit = {
-    val tomb = java.nio.file.Paths.get(tombDir(path))
-    if (!java.nio.file.Files.exists(tomb)) return // compact with no delete in flight
-    import scala.jdk.CollectionConverters._
-    val s = java.nio.file.Files.walk(tomb)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.delete)
-    finally s.close()
-  }
+  private def clearTombstones(path: String): Unit =
+    graft.store.FileTree.deleteRecursively(java.nio.file.Paths.get(tombDir(path)))
 
   /** Top-k cosine neighbors per query vector, scanning ONLY the probed
     * bucket partitions. `queries`: (query_id, embedding).

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.codec.Cursor
-import graft.store.FileTree
+import graft.store.{Commit, FileTree}
 
 /** A Kafka-shaped record log with transactional appends — the replication
   * sink (S2/S12) re-expressed without a broker.
@@ -47,11 +47,11 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
     if (Files.exists(manifestPath)) Manifest.parse(Files.readString(manifestPath))
     else Manifest(Nil, Map.empty, Map.empty)
 
-  private def commitManifest(m: Manifest): Unit = {
-    val tmp = root.resolve(s"manifest.${UUID.randomUUID()}.tmp")
-    Files.writeString(tmp, m.render)
-    Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+  /** Force the staged transaction dir, then replace the manifest that
+    * names its files: the one commit point of an append or a compaction. */
+  private def commitManifest(stage: Path, m: Manifest): Unit = {
+    Commit.force(FileTree.all(stage))
+    Commit.replace(manifestPath, m.render)
   }
 
   /** Progress cursor for a source table (S9 bootstrap scan analog — but a
@@ -159,7 +159,7 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
             acc + ((r.getString(0), r.getInt(1)) -> (r.getLong(2) + 1))
           }
       }
-    commitManifest(Manifest(m.files ++ files, newOffsets,
+    commitManifest(stage, Manifest(m.files ++ files, newOffsets,
       m.cursors + (sourceTable -> newCursor)))
     n
   }
@@ -255,7 +255,7 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
         .map(p => root.relativize(p).toString).toList.sorted
       finally s.close()
     }
-    commitManifest(m.copy(files = files))
+    commitManifest(stage, m.copy(files = files))
   }
 
   /** Reclaim staged parquet no committed reader can reach: files under

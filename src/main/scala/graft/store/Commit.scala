@@ -1,0 +1,62 @@
+package graft.store
+
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
+
+/** The one durable commit primitive. A manifest, cursor, offset, batch
+  * marker or index pointer is a small file replaced whole; the data files
+  * it names are forced before it.
+  *
+  * `replace(target, text)`: write `<target>.tmp`, fsync it, rename it over
+  * the target with `ATOMIC_MOVE`, then fsync the parent directory. Readers
+  * see the old or the new content, never a torn file; once `replace`
+  * returns the new content survives a power loss (a rename can otherwise
+  * reach the disk before the file it renames — Pillai et al., OSDI 2014).
+  *
+  * `force(paths)`: fsync each path (file or directory, not recursive) and
+  * each path's parent directory. Callers pass the data files a manifest is
+  * about to name, plus any directory they created, before the `replace`
+  * that publishes them.
+  *
+  * [[hook]] sees every step before it runs; tests throw from it to crash a
+  * protocol at any step.
+  */
+private[graft] object Commit {
+
+  /** A step about to run: `op` ∈ {write, sync, move, dirsync} for a
+    * `replace` of `paths.head`, or `force` of `paths`. */
+  final case class Step(op: String, paths: Seq[Path])
+
+  /** Per-thread step observer, unset outside tests. */
+  private[graft] val hook = new ThreadLocal[Step => Unit]
+
+  private def step(op: String, paths: Seq[Path]): Unit = {
+    val h = hook.get
+    if (h != null) h(Step(op, paths))
+  }
+
+  def replace(target: Path, text: String): Unit = {
+    val tmp = target.resolveSibling(s"${target.getFileName}.tmp")
+    step("write", Seq(target))
+    Files.writeString(tmp, text)
+    step("sync", Seq(target))
+    fsync(tmp)
+    step("move", Seq(target))
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    step("dirsync", Seq(target))
+    fsync(target.toAbsolutePath.getParent)
+  }
+
+  def force(paths: Seq[Path]): Unit = {
+    step("force", paths)
+    val abs = paths.map(_.toAbsolutePath)
+    abs.foreach(fsync)
+    abs.map(_.getParent).distinct.filterNot(abs.contains).foreach(fsync)
+  }
+
+  /** fsync a file or directory (Linux opens a directory read-only). */
+  private def fsync(p: Path): Unit = {
+    val ch = FileChannel.open(p, StandardOpenOption.READ)
+    try ch.force(true) finally ch.close()
+  }
+}

@@ -1,6 +1,6 @@
 package graft.store
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,7 +31,7 @@ import graft.model.{Event, KeyType}
   * naturally lsn-ranged; the cursor filter prunes all but the tail files
   * via parquet min/max stats — a resumed replicator never rescans history.
   * Readers resolve segments through the `_graft_meta/segments` MANIFEST
-  * (atomic rename = commit point), so compaction and retention are
+  * (its [[Commit.replace]] is the commit point), so compaction and retention are
   * concurrent-reader safe: they swap the manifest and leave superseded
   * files on disk until [[vacuum]]. The committed cursor rides the
   * manifest's first line, so cursor and file list commit in ONE atomic
@@ -63,7 +63,7 @@ final class EventLog(val root: Path, spark: SparkSession) {
 
   // ---- segment manifest ------------------------------------------------
   // Readers resolve the topic through `_graft_meta/segments` (one live
-  // parquet file name per line, committed by atomic rename), NOT by
+  // parquet file name per line, committed by Commit.replace), NOT by
   // directory listing — so compaction/retention swap the manifest and
   // leave old generation files on disk for in-flight readers; [[vacuum]]
   // is the only operation that deletes data files. "Committed" = listed:
@@ -116,12 +116,9 @@ final class EventLog(val root: Path, spark: SparkSession) {
   private def writeSegments(topic: String, files: Seq[Path],
       cursor: Cursor): Unit = {
     Files.createDirectories(metaDir(topic))
-    val tmp = metaDir(topic).resolve("segments.tmp")
-    Files.writeString(tmp,
+    Commit.replace(segmentsFile(topic),
       (Seq(EventLog.CursorLine + cursor.encoded) ++
         files.map(_.getFileName.toString).sorted).mkString("", "\n", "\n"))
-    Files.move(tmp, segmentsFile(topic), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Cursor committed atomically with the segment manifest, when present
@@ -157,7 +154,7 @@ final class EventLog(val root: Path, spark: SparkSession) {
   def createTopic(topic: String, keyType: KeyType = KeyType.Bytea): Unit = {
     Files.createDirectories(metaDir(topic))
     val kt = metaDir(topic).resolve("keytype")
-    if (!Files.exists(kt)) Files.writeString(kt, keyType.name)
+    if (!Files.exists(kt)) Commit.replace(kt, keyType.name)
   }
 
   def keyTypeOf(topic: String): KeyType = {
@@ -291,11 +288,10 @@ final class EventLog(val root: Path, spark: SparkSession) {
     * data-consistent by construction (one atomic rename commits both), so
     * it needs no repair scan.
     *
-    * stage → move → manifest: the write lands in a staging dir, files move
-    * into the topic dir under unique names, and the MANIFEST move is the
-    * commit point — readers never see partial task output, and a crash
-    * anywhere before the manifest leaves only vacuum-able orphans (cursor
-    * untouched, so no (lsn,id) was ever visible). */
+    * The write lands in a staging dir and [[publish]] commits it: readers
+    * never see partial task output, and a crash anywhere before the
+    * manifest replace leaves the cursor untouched, so no (lsn,id) was ever
+    * visible. */
   private def commit(topic: String)(writeStage: (Cursor, Path) => Long): Cursor =
     writeLock(topic).synchronized {
       createTopic(topic)
@@ -308,19 +304,26 @@ final class EventLog(val root: Path, spark: SparkSession) {
       val stage = topicDir(topic).resolve("_graft_stage_append")
       FileTree.deleteRecursively(stage)
       val n = writeStage(cur, stage)
-      val lsn = cur.lsn + 1
-      val stamp = System.nanoTime()
-      val moved = listParquet(stage).zipWithIndex.map { case (f, i) =>
-        val t = topicDir(topic).resolve(s"seg-$lsn-$stamp-$i.parquet")
-        Files.move(f, t)
-        t
-      }
-      val next = Cursor(lsn, cur.id + n)
-      // ONE commit point: files + cursor land in the same manifest rename
-      writeSegments(topic, live ++ moved, next)
-      FileTree.deleteRecursively(stage)
+      val next = Cursor(cur.lsn + 1, cur.id + n)
+      publish(topic, stage, s"seg-${next.lsn}", live, next)
       next
     }
+
+  /** Move `stage`'s parquet into the topic dir as
+    * `<prefix>-<stamp>-<i>.parquet`, force them, and commit `keep` plus
+    * them with `cursor` in ONE manifest replace; then clear the stage. A
+    * crash before the replace leaves only unlisted, vacuum-able files. */
+  private def publish(topic: String, stage: Path, prefix: String,
+      keep: Seq[Path], cursor: Cursor): Unit = {
+    val dir = topicDir(topic)
+    val stamp = System.nanoTime()
+    val moved = listParquet(stage).zipWithIndex.map { case (f, i) =>
+      Files.move(f, dir.resolve(s"$prefix-$stamp-$i.parquet"))
+    }
+    Commit.force(moved :+ dir)
+    writeSegments(topic, keep ++ moved, cursor)
+    FileTree.deleteRecursively(stage)
+  }
 
   /** Full bounded read of a topic (unordered; order with scan()) —
     * manifest-gated: only committed segment files are visible, never
@@ -462,14 +465,7 @@ final class EventLog(val root: Path, spark: SparkSession) {
       .repartitionByRange(targetFiles, col("lsn"), col("id"))
       .sortWithinPartitions(col("lsn"), col("id"))
       .write.parquet(stage.toString)
-    val stamp = System.nanoTime()
-    val moved = listParquet(stage).zipWithIndex.map { case (f, i) =>
-      val t = dir.resolve(s"compacted-$stamp-$i.parquet")
-      Files.move(f, t)
-      t
-    }
-    writeSegments(topic, moved, currentCursor(topic))
-    FileTree.deleteRecursively(stage)
+    publish(topic, stage, "compacted", Nil, currentCursor(topic))
   }
 
   /** Reclaim disk from files no committed reader can reach: parquet files

@@ -16,4 +16,13 @@ private[graft] object FileTree {
         .iterator().asScala.foreach(Files.deleteIfExists(_))
       finally s.close()
     }
+
+  /** `p` and every file and directory under it (empty when missing) — the
+    * tree a commit forces before naming it. */
+  def all(p: Path): Seq[Path] =
+    if (!Files.exists(p)) Nil
+    else {
+      val s = Files.walk(p)
+      try s.iterator().asScala.toList finally s.close()
+    }
 }

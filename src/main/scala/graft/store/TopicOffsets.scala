@@ -1,6 +1,6 @@
 package graft.store
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
@@ -13,9 +13,10 @@ import scala.jdk.CollectionConverters._
   *  - key `(topic, partition)`, value = last processed offset;
   *  - bootstrap inserts `-1` so consumers seek `offset + 1`
   *    (ReactorKafkaEventStore.java:95-98, 278);
-  *  - updates are atomic (rename), and the G4 exactly-once pattern stores
-  *    the offset file move inside the same staged-commit as the user's
-  *    effects (see graft.streaming.EosProjection).
+  *  - updates are durable and atomic ([[Commit.replace]]), and the G4
+  *    exactly-once pattern stores the offset file move inside the same
+  *    staged-commit as the user's effects (see
+  *    graft.streaming.EosProjection).
   *
   * Layout: one tiny file per (topic, partition) under the state dir —
   * driver-side metadata, never sharded data.
@@ -34,12 +35,8 @@ final class TopicOffsets(dir: Path) {
     else { update(topic, partition, -1L); -1L }
   }
 
-  def update(topic: String, partition: Int, offset: Long): Unit = {
-    val f = fileFor(topic, partition)
-    val tmp = dir.resolve(f.getFileName.toString + ".tmp")
-    Files.writeString(tmp, offset.toString)
-    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def update(topic: String, partition: Int, offset: Long): Unit =
+    Commit.replace(fileFor(topic, partition), offset.toString)
 
   /** All known (topic, partition) → offset rows. */
   def all(): Map[(String, Int), Long] = {

@@ -114,11 +114,7 @@ final class MaintainedIntIvfIndex(path: Path, spark: SparkSession) {
     kept.write.mode("overwrite")
       .partitionBy("batch", "cluster")
       .parquet(vecsDir.toString)
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(tombDir)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(Files.delete)
-    finally s.close()
+    graft.store.FileTree.deleteRecursively(tombDir)
   }
 
   // ---------------------------------------------------------------------

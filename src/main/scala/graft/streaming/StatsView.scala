@@ -58,12 +58,7 @@ final class StatsView(val stateDir: Path, spark: SparkSession) {
       try {
         ds.filter(p => p.getFileName.toString.startsWith("batch-") &&
             p.getFileName.toString.stripPrefix("batch-").toLong < last)
-          .forEach { p =>
-            val s = Files.walk(p)
-            try s.sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => Files.delete(f))
-            finally s.close()
-          }
+          .forEach(graft.store.FileTree.deleteRecursively(_))
       } finally ds.close()
     }
   }

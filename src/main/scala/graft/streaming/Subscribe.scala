@@ -1,12 +1,12 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-import graft.store.FileTree
+import graft.store.{Commit, FileTree}
 
 /** Unbounded subscribe (S5/S6) over the native event log, plus the
   * exactly-once projection helper (G4).
@@ -22,9 +22,10 @@ import graft.store.FileTree
   * user's effects — usage pattern ReactorKafkaEventStore.java:218-225):
   * the reference commits per record; Structured Streaming commits per
   * micro-batch — same end state, coarser commit unit (SURVEY §3-B). The
-  * batch id is persisted ATOMICALLY WITH the user's output (single rename),
-  * so replayed batches after a crash are detected and skipped — effects
-  * apply exactly once.
+  * user's output and the batch id commit together: the batch dir moves in
+  * first, and the `last_batch` marker replace is the commit point, so
+  * replayed batches after a crash are detected and skipped — effects apply
+  * exactly once.
   */
 object Subscribe {
 
@@ -62,7 +63,13 @@ object Subscribe {
 }
 
 /** Exactly-once micro-batch projection: user effects + progress marker
-  * commit atomically (file-rename transaction), replays are skipped.
+  * commit as one transaction, and replays are skipped.
+  *
+  * A batch stages its output in `stage-<id>`, which moves to `batch-<id>`
+  * and is forced; then [[graft.store.Commit.replace]] of the `last_batch`
+  * marker commits it. A `batch-<id>` beyond the marker is a crashed
+  * attempt: its replay deletes and rewrites it. Readers gate on
+  * [[lastCommitted]] and never read a batch dir beyond it.
   *
   * @param stateDir directory holding the last-committed batch id
   */
@@ -73,9 +80,8 @@ final class EosProjection(stateDir: Path) {
   def lastCommitted: Long =
     if (Files.exists(marker)) Files.readString(marker).trim.toLong else -1L
 
-  /** Wrap a foreachBatch body with idempotence: `effects` must stage its
-    * output under `stage(batchId)` and the commit is one atomic rename of
-    * the marker + staged dir. */
+  /** Wrap a foreachBatch body with idempotence: `effects` stages its
+    * output under the given dir, and the marker replace commits it. */
   def foreachBatch(effects: (DataFrame, Long, Path) => Unit)(df: DataFrame, batchId: Long): Unit = {
     if (batchId <= lastCommitted) return // replay after restart → skip (G4)
     val stage = stateDir.resolve(s"stage-$batchId")
@@ -84,11 +90,9 @@ final class EosProjection(stateDir: Path) {
     effects(df, batchId, stage)
     val committed = stateDir.resolve(s"batch-$batchId")
     FileTree.deleteRecursively(committed)
-    Files.move(stage, committed, StandardCopyOption.ATOMIC_MOVE)
-    val tmp = stateDir.resolve("last_batch.tmp")
-    Files.writeString(tmp, batchId.toString)
-    Files.move(tmp, marker, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Files.move(stage, committed)
+    Commit.force(FileTree.all(committed))
+    Commit.replace(marker, batchId.toString)
   }
 
   def attach(w: DataStreamWriter[org.apache.spark.sql.Row])(

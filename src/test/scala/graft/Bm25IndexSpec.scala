@@ -133,7 +133,7 @@ class Bm25IndexSpec extends AnyFunSuite {
       val preAppend = scores(incr)
       // crash at the widest window: every write done, pointer not swapped
       val boom = intercept[IllegalStateException] {
-        Bm25Index.append(batch, incr, 32, failBeforeCommit = true)
+        TestSpark.crashAtFirstCommit(Bm25Index.append(batch, incr, 32))
       }
       assert(boom.getMessage.contains("injected"))
       // the half-appended batch is INVISIBLE: probe, stats and df all

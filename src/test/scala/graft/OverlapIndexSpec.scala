@@ -127,7 +127,7 @@ class OverlapIndexSpec extends AnyFunSuite {
       OverlapIndex.materialize(day0, "graft_ovidx_crash")
       val preAppend = probe("graft_ovidx_crash")
       intercept[IllegalStateException] {
-        OverlapIndex.append(day1, "graft_ovidx_crash", 32, failBeforeCommit = true)
+        TestSpark.crashAtFirstCommit(OverlapIndex.append(day1, "graft_ovidx_crash", 32))
       }
       assert(probe("graft_ovidx_crash") == preAppend,
         "a crashed append changed probe results — partial partitions are visible")

@@ -83,24 +83,6 @@ class ReplicatorSpec extends AnyFunSuite {
     assert(r.getAs[java.sql.Timestamp]("timestamp").toInstant == e.timestamp)
   }
 
-  test("crash before manifest commit leaves no visible records; retry is idempotent (G3)") {
-    val (log, sink, rep) = fixture()
-    log.saveAll("t_events", (1 to 4).map(ev))
-    // Simulate the crash: stage records exactly like appendTxn but skip the
-    // manifest commit — by writing to staging dir directly.
-    val stagedBefore = sink.stagedFileCount()
-    rep.pollAndSendBatch("t_events") // one committed batch of 2
-    assert(sink.read("t_events").count() == 2)
-    // now a poll whose commit "fails" → manifest unchanged; emulate by
-    // reading cursor, then NOT calling appendTxn. The next poll re-reads
-    // from the committed cursor → no loss, no dup.
-    assert(sink.cursorFor("t_events") == Cursor(1, 2))
-    assert(rep.run("t_events") == 2L)
-    val offsets = sink.read("t_events").collect().map(_.getAs[Long]("offset")).sorted
-    assert(offsets.toSeq == (0L to 3L))
-    assert(stagedBefore <= sink.stagedFileCount()) // orphans never surface in reads
-  }
-
   test("replicateAll discovers topics and drains each (S8/F4)") {
     val (log, sink, rep) = fixture()
     log.saveAll("a_events", (1 to 2).map(ev))

@@ -179,7 +179,7 @@ class ShingleIndexSpec extends AnyFunSuite {
       // swap not reached — the round-11 two-job append would now be
       // half-committed (pairs without counts)
       intercept[IllegalStateException] {
-        ShingleIndex.append(day1, "graft_shidx_crash", 32, failBeforeCommit = true)
+        TestSpark.crashAtFirstCommit(ShingleIndex.append(day1, "graft_shidx_crash", 32))
       }
       assert(pairs() == preAppend,
         "a crashed append changed probe results — partial partitions are visible")

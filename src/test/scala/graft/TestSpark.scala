@@ -17,6 +17,15 @@ object TestSpark {
 
   private val JobTag = "graft.test.jobTag"
 
+  /** Runs `body` and throws IllegalStateException at the first durable
+    * commit step it reaches ([[graft.store.Commit.hook]]): for a
+    * single-commit protocol, the widest crash window, with every write
+    * done and nothing published. */
+  def crashAtFirstCommit(body: => Unit): Unit = {
+    graft.store.Commit.hook.set(s => throw new IllegalStateException(s"injected crash before ${s.op}"))
+    try body finally graft.store.Commit.hook.remove()
+  }
+
   /** Runs `body` and returns its result with the number of Spark jobs it
     * launched. Jobs are told apart by a local property set on this thread
     * (inherited by the threads it starts), so jobs of other threads are not
