@@ -35,8 +35,17 @@ private[graft] object CatalogCommit {
     else Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toLong)
   }
 
-  def writeLastBatch(spark: SparkSession, name: String, b: Long): Unit =
+  /** Commit batch `b` of index `name`: force what the pointer publishes in
+    * each of `tables` — its `batch=<b>` dir, or for batch 0 (a from-scratch
+    * materialize or a compaction, which rewrite the whole table) its whole
+    * table dir — then replace the pointer. */
+  def writeLastBatch(spark: SparkSession, name: String, b: Long, tables: Seq[String]): Unit = {
+    graft.store.Commit.force(tables.flatMap { t =>
+      val loc = tableLocation(spark, t)
+      graft.store.FileTree.all(if (b == 0L) loc else loc.resolve(s"batch=$b"))
+    })
     graft.store.Commit.replace(pointerPath(spark, name), b.toString)
+  }
 
   /** Physically drop an UNCOMMITTED batch partition (a crashed append's
     * leftovers — invisible to gated readers, removed before the retry

@@ -82,7 +82,7 @@ object OverlapIndex {
     graft.GraftExtensions.register(spark)
     clearOrphanLocation(spark, name)
     writeBatch(docs, name, buckets, batchNo = 0L, overwrite = true)
-    writeLastBatch(spark, name, 0L)
+    writeLastBatch(spark, name, 0L, Seq(name))
   }
 
   /** [[append]] with an EXPLICIT target batch id — idempotent under
@@ -100,7 +100,7 @@ object OverlapIndex {
         "serialized; a gap means the staged target is stale")
     dropUncommitted(spark, name, target)
     writeBatch(batch, name, buckets, batchNo = target, overwrite = false)
-    writeLastBatch(spark, name, target)
+    writeLastBatch(spark, name, target, Seq(name))
   }
 
   /** Fold a new batch of training docs into the index (ids disjoint from
@@ -113,7 +113,7 @@ object OverlapIndex {
     val next = last + 1
     dropUncommitted(spark, name, next)
     writeBatch(batch, name, buckets, batchNo = next, overwrite = false)
-    writeLastBatch(spark, name, next)
+    writeLastBatch(spark, name, next, Seq(name))
   }
 
   /** Tombstone-mask documents out of the index (right-to-be-forgotten
@@ -149,7 +149,7 @@ object OverlapIndex {
     kept.repartition(buckets, col("h")).withColumn("batch", lit(0L))
       .write.mode("overwrite").partitionBy("batch").bucketBy(buckets, "h")
       .saveAsTable(name)
-    writeLastBatch(spark, name, 0L)
+    writeLastBatch(spark, name, 0L, Seq(name))
     if (hasTomb) spark.sql(s"DROP TABLE ${name}_tombstones")
   }
 

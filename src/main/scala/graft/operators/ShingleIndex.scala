@@ -47,8 +47,11 @@ object ShingleIndex {
   // batch id, swapped by atomic rename (the Bm25Index pointer shape).
   // Primitives shared with OverlapIndex via [[CatalogCommit]].
 
-  import CatalogCommit.{readLastBatch, writeLastBatch, dropUncommitted,
-    clearOrphanLocation}
+  import CatalogCommit.{readLastBatch, dropUncommitted, clearOrphanLocation}
+
+  /** One pointer commits batch `b` of both tables. */
+  private def commit(spark: SparkSession, name: String, b: Long): Unit =
+    CatalogCommit.writeLastBatch(spark, name, b, Seq(name, s"${name}_counts"))
 
   /** The COMMITTED pairs frame (doc_id, h) — batch-gated, batch dropped
     * so downstream algebra is layout-agnostic. NOT tombstone-masked;
@@ -84,7 +87,7 @@ object ShingleIndex {
     clearOrphanLocation(spark, name)
     clearOrphanLocation(spark, s"${name}_counts")
     writeBatch(docs, name, buckets, batchNo = 0L, overwrite = true)
-    writeLastBatch(spark, name, 0L)
+    commit(spark, name, 0L)
   }
 
   /** [[append]] with an EXPLICIT target batch id — the idempotent form a
@@ -107,7 +110,7 @@ object ShingleIndex {
     dropUncommitted(spark, name, target)
     dropUncommitted(spark, s"${name}_counts", target)
     writeBatch(batch, name, buckets, batchNo = target, overwrite = false)
-    writeLastBatch(spark, name, target)
+    commit(spark, name, target)
   }
 
   /** Fold a new batch into the index — the daily path: the batch's
@@ -128,7 +131,7 @@ object ShingleIndex {
     dropUncommitted(spark, name, next)
     dropUncommitted(spark, s"${name}_counts", next)
     writeBatch(batch, name, buckets, batchNo = next, overwrite = false)
-    writeLastBatch(spark, name, next)
+    commit(spark, name, next)
   }
 
   /** Delete documents from the index — the right-to-be-forgotten path
@@ -210,7 +213,7 @@ object ShingleIndex {
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
       .withColumn("batch", lit(0L))
       .write.mode("overwrite").partitionBy("batch").saveAsTable(s"${name}_counts")
-    writeLastBatch(spark, name, 0L)
+    commit(spark, name, 0L)
     if (hasTomb) spark.sql(s"DROP TABLE ${name}_tombstones")
   }
 

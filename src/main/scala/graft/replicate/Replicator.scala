@@ -33,7 +33,7 @@ final class Replicator(
   /** Build sink records from scanned event rows (T9/T10/T5). Metadata
     * decode → headers happens columnar: the canonical Avro map bytes are
     * decoded on executors, never on the driver. */
-  private[replicate] def toRecords(topic: String, batch: DataFrame): DataFrame = {
+  private[replicate] def toRecords(batch: DataFrame): DataFrame = {
     // T4 decode via the native DecodeMetadata expression (stays in the
     // codegen stage; the old per-row Scala UDF boxed every metadata map and
     // was rebuilt on each toRecords call)
@@ -50,7 +50,6 @@ final class Replicator(
     batch
       .withColumn("meta", decodeMeta(col("metadata")))
       .select(
-        lit(topic).as("topic"),
         col("key"),
         col("data").as("value"),
         array_sort(concat(
@@ -84,7 +83,7 @@ final class Replicator(
       max(struct(col("lsn"), col("id"))).as("m"),
       count(lit(1)).as("n"))
     var windowFull = false
-    val sent = sink.appendTxn(toRecords(topic, observed), topic, {
+    val sent = sink.appendTxn(topic, toRecords(observed), topic, {
       val m = obs.get("m").asInstanceOf[org.apache.spark.sql.Row]
       // zero rows at write time is handled inside appendTxn (no commit);
       // this guard only survives as belt-and-braces for a null max
@@ -107,23 +106,28 @@ final class Replicator(
     * (once per boot, and only for PRE-manifest-cursor topics — a crashed
     * writer's standalone cursor file could lag its committed data and make
     * [[sourceIdle]] under-report the backlog until the topic's next
-    * append; manifest-embedded cursors are atomic with the data). */
-  private val sourceReconciled = scala.collection.mutable.Set.empty[String]
+    * append; manifest-embedded cursors are atomic with the data).
+    * Concurrent: the lag gauge reads cursors from a metrics thread. */
+  private val sourceReconciled =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Zero-job idle check: the source's committed append cursor vs the
-    * sink's progress cursor — two metadata file reads, no Spark job. The
-    * common steady-state poll (reference cadence: every second,
-    * EventReplicator.java:138) costs nothing when there is nothing to
-    * drain. A cursor written concurrently with this read is seen one poll
-    * late — the same staleness window any fixed-cadence poller has. */
-  private def sourceIdle(topic: String, sinkCursor: Cursor): Boolean = {
-    val src = source.manifestCursor(topic).getOrElse {
+  /** The source's committed append cursor: a metadata file read, no
+    * Spark job (a pre-manifest-cursor topic is reconciled from data once
+    * per boot). A cursor written concurrently with this read is seen one
+    * poll late — the same staleness window any fixed-cadence poller has. */
+  private def sourceCursor(topic: String): Cursor =
+    source.manifestCursor(topic).getOrElse {
       if (sourceReconciled.add(topic)) source.reconcile(topic)
       else source.currentCursor(topic)
     }
-    src.lsn < sinkCursor.lsn ||
-      (src.lsn == sinkCursor.lsn && src.id <= sinkCursor.id)
-  }
+
+  /** Zero-job idle check: ids are dense per topic, so the sink holds every
+    * source row once its cursor id reaches the source's. The common
+    * steady-state poll (reference cadence: every second,
+    * EventReplicator.java:138) costs nothing when there is nothing to
+    * drain — also after an empty append, which takes an lsn but no id. */
+  private def sourceIdle(topic: String, sinkCursor: Cursor): Boolean =
+    sourceCursor(topic).id <= sinkCursor.id
 
   /** Dense-window poll (drainRange — no global sort, both bounds pushed). */
   private def densePoll(topic: String): Replicator.Poll = {
@@ -184,8 +188,8 @@ final class Replicator(
   def replicateAll(): Map[String, Long] =
     source.topics().map(t => t -> run(t)).toMap
 
-  /** A1 lag gauge for monitoring. */
-  def lag(topic: String): Long = source.lag(topic, sink.cursorFor(topic))
+  /** A1 lag gauge for monitoring, with zero Spark jobs per read. */
+  def lag(topic: String): Long = EventLog.lag(sourceCursor(topic), sink.cursorFor(topic))
 
   /** Continuous replication as a Structured Streaming job: tail the source
     * log through its manifest ([[graft.streaming.Subscribe.stream]]) and

@@ -29,11 +29,11 @@ import graft.store.TopicOffsets
   * own either: the handler gets that manifest's files filtered to
   * `last < offset < next` per partition, and only what the handler runs
   * executes. The count needs no job because `appendTxn` writes dense
-  * offsets per partition. The filter is row-level over the committed
-  * files (appendTxn hashes topics across shared task files, so per-file
-  * topic/offset pruning would need per-file stats in the manifest); a
-  * delivering poll's scan therefore grows with committed history, and
-  * long-lived logs should compact.
+  * offsets per partition. Each `appendTxn` transaction stages one file of
+  * one topic, sorted by (partition, offset); the manifest keeps no per-file
+  * topic or offset ranges, so the filter is row-level over every committed
+  * file. A delivering poll's scan therefore grows with committed history,
+  * and long-lived logs should compact.
   */
 final class KafkaShapedConsumer(
     log: KafkaShapedLog,

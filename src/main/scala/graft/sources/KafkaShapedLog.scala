@@ -6,6 +6,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -32,8 +33,8 @@ import graft.store.{Commit, FileTree}
   * into one commit point.
   *
   * Scale: the manifest holds file names and counters only (O(appends), and
-  * compactable); record data never passes through the driver — Spark writes
-  * the staged parquet in parallel and commit is a metadata rename.
+  * compactable); record data never passes through the driver — one Spark
+  * task writes a transaction's staged file and commit is a metadata rename.
   */
 final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numPartitions: Int = 1) {
 
@@ -59,11 +60,20 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
   def cursorFor(sourceTable: String): Cursor =
     manifest().cursors.getOrElse(sourceTable, Cursor.zero)
 
-  /** One transaction: append `records` (topic, key, value, headers,
-    * timestamp, `_seq` columns; partition/offset assigned here, offsets
-    * follow `_seq` order — the source's (lsn,id) order, preserving G1's
-    * total order per partition) and advance the progress cursor of
-    * `sourceTable` — atomically.
+  /** One transaction: append `records` (key, value, headers, timestamp and
+    * `_seq` columns) to `topic` and advance the progress cursor of
+    * `sourceTable` — atomically. A record's partition is its key hash; its
+    * offset is dense per partition and follows `_seq` order (the source's
+    * (lsn,id) order, preserving G1's total order per partition).
+    *
+    * The transaction is one Spark job with no exchange: `coalesce(1)`
+    * gives the offset window a single-partition child, which satisfies its
+    * distribution, so the window only sorts locally and the transaction
+    * stages one parquet file sorted by (partition, offset). A partition's
+    * base offset is looked up in a literal array of this topic's next
+    * offsets, from the manifest snapshot the commit extends. The
+    * per-partition counts ride the write as `observe` metrics, so the next
+    * offsets need no second pass.
     *
     * `newCursor` is by-name and evaluated exactly once, AFTER the staged
     * write has completed — so callers may derive it from `observe` metrics
@@ -72,65 +82,27 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
     * (`newCursor` is never evaluated, no manifest write) and returns 0 —
     * so callers need no pre-write emptiness probe; the probe's job is
     * folded into the write's own metrics. */
-  def appendTxn(records: DataFrame, sourceTable: String, newCursor: => Cursor): Long = synchronized {
+  def appendTxn(topic: String, records: DataFrame, sourceTable: String,
+      newCursor: => Cursor): Long = synchronized {
     val m = manifest()
-    // Partition by key hash (per-key order), offsets dense per partition.
-    // The explicit repartition produces HashPartitioning(topic, partition,
-    // numPartitions), which already satisfies the window's required
-    // distribution — the window adds only a local sort (no second
-    // exchange), task count stays = numPartitions (AQE never coalesces an
-    // explicit repartition), and the staged write emits exactly one file
-    // per kafka-partition instead of shuffle.partitions mostly-empty ones.
-    val parted = records
-      .withColumn("partition", pmod(xxhash64(col("key")), lit(numPartitions)).cast("int"))
-      .repartition(numPartitions, col("topic"), col("partition"))
-      .withColumn("_rn",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("topic"), col("partition"))
-          .orderBy(col("_seq"))))
-    // base offsets join as a |known (topic,partition)|-row broadcast — the
-    // old per-entry withColumn(when(...)) fold grew the plan O(P) with the
-    // fleet's lifetime partition count and made Catalyst re-analyze the
-    // deepening chain on every commit (EventLog.append's offsets join is
-    // the same pattern)
-    val withOffsets = (if (m.offsets.isEmpty)
-        parted.withColumn("offset", col("_rn").cast("long") - 1)
-      else {
-        val offRows = m.offsets.toSeq.map { case ((t, p), next) =>
-          org.apache.spark.sql.Row(t, p, next)
-        }
-        val offDf = spark.createDataFrame(offRows.asJava, StructType(Seq(
-          StructField("_ot", StringType, nullable = false),
-          StructField("_op", org.apache.spark.sql.types.IntegerType, nullable = false),
-          StructField("_onext", LongType, nullable = false))))
-        parted.join(broadcast(offDf),
-            col("topic") === col("_ot") && col("partition") === col("_op"), "left")
-          .withColumn("offset",
-            col("_rn").cast("long") - 1 + coalesce(col("_onext"), lit(0L)))
-          .drop("_ot", "_op", "_onext")
-      }).drop("_rn")
-
-    // Per-(topic,partition) counts ride the staged write itself as observe
-    // metrics — offsets are DENSE per group (row_number), so the next
-    // offset is just base + group count, and no second pass over the
-    // staged files is needed. Conditional per-partition counters work
-    // because `partition` is always in [0, numPartitions); the observed
-    // min/max topic detects the (currently nonexistent) multi-topic batch,
-    // which falls back to a grouped read of the staged files.
+    val next = (0 until numPartitions).map(p => m.offsets.getOrElse((topic, p), 0L))
+    val partition = col("partition")
     val obs = org.apache.spark.sql.Observation()
-    val observed = withOffsets.observe(obs,
-      count(lit(1)).as("n"),
-      (Seq(min(col("topic")).as("t0"), max(col("topic")).as("t1")) ++
-        (0 until numPartitions).map(p =>
-          count(when(col("partition") === p, 1)).as(s"n$p"))): _*)
     val stage = root.resolve("staging").resolve(UUID.randomUUID().toString)
-    observed.select("topic", "partition", "offset", "key", "value", "headers", "timestamp")
+    records
+      .withColumn("partition", pmod(xxhash64(col("key")), lit(numPartitions)).cast("int"))
+      .coalesce(1)
+      .withColumn("offset", row_number().over(Window.partitionBy(partition).orderBy(col("_seq")))
+        .cast("long") - 1 + element_at(typedLit(next), partition + 1))
+      .observe(obs, count(lit(1)).as("n"),
+        (0 until numPartitions).map(p => count(when(partition === p, 1)).as(s"n$p")): _*)
+      .select(lit(topic).as("topic"), partition, col("offset"), col("key"), col("value"),
+        col("headers"), col("timestamp"))
       .write.parquet(stage.toString)
     val n = obs.get("n").asInstanceOf[Long]
     if (n == 0) {
       // empty transaction: nothing staged, nothing to commit — drop the
-      // (file-less) stage dir and leave the manifest untouched, so idle
-      // replication polls cost one pruned scan and zero manifest churn
+      // (file-less) stage dir and leave the manifest untouched
       FileTree.deleteRecursively(stage)
       return 0L
     }
@@ -141,25 +113,11 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
         .map(p => root.relativize(p).toString).toList
       finally s.close()
     }
-    val newOffsets =
-      if (obs.get("t0") == obs.get("t1") && obs.get("t0") != null) {
-        val topic = obs.get("t0").asInstanceOf[String]
-        (0 until numPartitions).foldLeft(m.offsets) { (acc, p) =>
-          val np = obs.get(s"n$p").asInstanceOf[Long]
-          if (np == 0) acc
-          else acc + ((topic, p) -> (acc.getOrElse((topic, p), 0L) + np))
-        }
-      } else {
-        // multi-topic batch (no current caller): one column-pruned pass
-        // over the staged files, the committed truth by definition
-        spark.read.schema(recordSchema).parquet(stage.toString)
-          .groupBy(col("topic"), col("partition"))
-          .agg(max(col("offset")).as("mx")).collect()
-          .foldLeft(m.offsets) { (acc, r) =>
-            acc + ((r.getString(0), r.getInt(1)) -> (r.getLong(2) + 1))
-          }
-      }
-    commitManifest(stage, Manifest(m.files ++ files, newOffsets,
+    val offsets = (0 until numPartitions).foldLeft(m.offsets) { (acc, p) =>
+      val np = obs.get(s"n$p").asInstanceOf[Long]
+      if (np == 0) acc else acc + ((topic, p) -> (next(p) + np))
+    }
+    commitManifest(stage, Manifest(m.files ++ files, offsets,
       m.cursors + (sourceTable -> newCursor)))
     n
   }
@@ -183,7 +141,6 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
     import java.sql.Timestamp
     val rows = events.zipWithIndex.map { case (e, i) =>
       org.apache.spark.sql.Row(
-        topic,
         e.key,
         e.payload,
         e.metadata.toSeq.sortBy(_._1).map { case (k, v) => org.apache.spark.sql.Row(k, v) },
@@ -191,18 +148,16 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
         i.toLong)
     }
     val schema = StructType(Seq(
-      StructField("topic", StringType, nullable = false),
       StructField("key", BinaryType, nullable = true),
       StructField("value", BinaryType, nullable = true),
       recordSchema("headers"),
       StructField("timestamp", TimestampType, nullable = false),
       StructField("_seq", LongType, nullable = false)))
-    import scala.jdk.CollectionConverters._
     val df = spark.createDataFrame(rows.asJava, schema)
     // the cursor read rides the BY-NAME argument so it evaluates inside
     // appendTxn's lock — reading it here would let two concurrent
     // publishers both advance from the same stale cursor
-    appendTxn(df, s"_publish.$topic", {
+    appendTxn(topic, df, s"_publish.$topic", {
       val cur = manifest().cursors.getOrElse(s"_publish.$topic", Cursor.zero)
       Cursor(cur.lsn + 1, cur.id + events.size)
     })

@@ -397,13 +397,9 @@ final class EventLog(val root: Path, spark: SparkSession) {
       .orderBy(col("lsn"), col("id"))
       .limit(limit)
 
-  /** A1: replication lag in sequence units: max(lsn) − cursor.lsn, null→0
-    * (EventReplicatorWorker.java:77, 242-248). */
-  def lag(topic: String, cursor: Cursor): Long = {
-    if (!hasData(topic)) return 0L
-    val m = read(topic).filter(col("lsn").isNotNull).agg(max(col("lsn"))).collect()(0)
-    if (m.isNullAt(0)) 0L else math.max(m.getLong(0) - cursor.lsn, 0L)
-  }
+  /** A1: replication lag of `cursor` behind the topic's committed append
+    * cursor, with no Spark job (see [[EventLog.lag]]). */
+  def lag(topic: String, cursor: Cursor): Long = EventLog.lag(currentCursor(topic), cursor)
 
   /** Point-in-time replay bound: all events with `(lsn,id) <= asOf`, in
     * order — the bounded-replay complement of [[scan]] (an event-sourced
@@ -541,6 +537,13 @@ object EventLog {
 
   /** An append's segment file name, `seg-<lsn>-<stamp>-<i>.parquet`. */
   private val SegmentName = "seg-(\\d+)-.*".r
+
+  /** A1: replication lag in sequence units (EventReplicatorWorker.java:77,
+    * 242-248): `head.lsn − cursor.lsn` while some id above `cursor` is
+    * committed at `head`, else 0. Ids are dense, so an id comparison tells
+    * pending rows apart from empty appends, which take an lsn but no id. */
+  def lag(head: Cursor, cursor: Cursor): Long =
+    if (head.id <= cursor.id) 0L else math.max(head.lsn - cursor.lsn, 0L)
 
   def apply(root: String, spark: SparkSession): EventLog =
     new EventLog(Paths.get(root), spark)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Event
-import graft.operators.Bm25Index
+import graft.operators.{Bm25Index, CatalogCommit, ShingleIndex}
 import graft.replicate.Replicator
 import graft.sources.{KafkaShapedConsumer, KafkaShapedLog}
 import graft.store.{Commit, EventLog, FileTree, TopicOffsets}
@@ -275,6 +275,38 @@ class CommitCrashMatrixSpec extends AnyFunSuite {
           val f = Files.readString(ptr).trim.split("\t")
           Seq(ptr -> (FileTree.all(root.resolve(f(1))) ++
             FileTree.all(root.resolve(f(2)).resolve(s"batch=${f(3)}"))).toSet)
+        }
+      }
+    }
+  }
+
+  test("ShingleIndex.append: every crash step leaves the index pre or post, retry completes it") {
+    GraftExtensions.register(spark)
+    val ss = spark
+    import ss.implicits._
+    val words = Seq("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")
+    def docs(ids: Range): DataFrame =
+      ids.map(i => (i.toLong, (0 to 8).map(j => words((i * 5 + 3 * j) % words.size)).mkString(" ")))
+        .toDF("doc_id", "text")
+    matrix("ShingleIndex.append") { () =>
+      new Fixture {
+        private val name = s"cm_shingle_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+        private val tables = Seq(name, s"${name}_counts")
+        ShingleIndex.materialize(docs(0 until 10), name, buckets = 4)
+        private def loc(t: String) = CatalogCommit.tableLocation(spark, t)
+        /** The warehouse dir holding both tables. */
+        val root = loc(name).getParent
+        def op(): Unit = ShingleIndex.append(docs(10 until 15), name, buckets = 4)
+        def idempotent = false
+        def units() = {
+          def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
+          Map("index" -> (rows(ShingleIndex.pairs(spark, name)), rows(ShingleIndex.counts(spark, name))))
+        }
+        /** The pointer names the `batch=<n>` dirs of both tables. */
+        def publishes() = {
+          val ptr = loc(name).resolve("_current")
+          val b = Files.readString(ptr).trim
+          Seq(ptr -> tables.flatMap(t => FileTree.all(loc(t).resolve(s"batch=$b"))).toSet)
         }
       }
     }

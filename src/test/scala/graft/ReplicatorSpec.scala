@@ -502,44 +502,53 @@ class ReplicatorSpec extends AnyFunSuite {
     assert(sink.read("t_events").count() == 8L)
   }
 
-  test("appendTxn multi-topic batch: offsets correct via the staged-read fallback") {
-    // no production caller mixes topics in one transaction, but the
-    // contract allows it — the observe fast path detects min(topic) !=
-    // max(topic) and falls back to a grouped read of the staged files;
-    // this pins that branch so it cannot rot unnoticed
+  test("appendTxn: two topics share one 4-partition sink, offsets dense per topic") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val spark2 = spark
-    val sink = KafkaShapedLog(Files.createTempDirectory("graft-mt-").toString, spark, numPartitions = 2)
+    import scala.jdk.CollectionConverters._
+    val sink = KafkaShapedLog(Files.createTempDirectory("graft-mt-").toString, spark, numPartitions = 4)
     val schema = StructType(Seq(
-      StructField("topic", StringType, nullable = false),
       StructField("key", BinaryType, nullable = true),
       StructField("value", BinaryType, nullable = true),
       KafkaShapedLog.recordSchema("headers"),
       StructField("timestamp", TimestampType, nullable = false),
       StructField("_seq", LongType, nullable = false)))
-    def rows(topic: String, n: Int, seq0: Long) = (0 until n).map(i =>
-      Row(topic, s"k$i".getBytes(UTF_8), s"v$i".getBytes(UTF_8),
-        Seq.empty[Row], java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), seq0 + i))
-    import scala.jdk.CollectionConverters._
-    val df = spark2.createDataFrame(
-      (rows("mta_events", 3, 0L) ++ rows("mtb_events", 2, 100L)).asJava, schema)
-    val sent = sink.appendTxn(df, "mixed", graft.codec.Cursor(1, 5))
-    assert(sent == 5L)
-    assert(sink.read("mta_events").count() == 3)
-    assert(sink.read("mtb_events").count() == 2)
-    // offsets dense per (topic, partition): next offsets sum to the counts
-    val m = sink.manifest()
-    assert(m.offsets.collect { case ((t, _), n) if t == "mta_events" => n }.sum == 3L)
-    assert(m.offsets.collect { case ((t, _), n) if t == "mtb_events" => n }.sum == 2L)
-    assert(sink.cursorFor("mixed") == Cursor(1, 5))
-    // a second mixed commit continues both topics' offsets
-    val df2 = spark2.createDataFrame(
-      (rows("mta_events", 2, 200L) ++ rows("mtb_events", 1, 300L)).asJava, schema)
-    assert(sink.appendTxn(df2, "mixed", Cursor(2, 8)) == 3L)
-    val m2 = sink.manifest()
-    assert(m2.offsets.collect { case ((t, _), n) if t == "mta_events" => n }.sum == 5L)
-    assert(m2.offsets.collect { case ((t, _), n) if t == "mtb_events" => n }.sum == 3L)
+    // rows arrive in descending `_seq`: offsets must follow `_seq`, not input order
+    def txn(topic: String, seqs: Range): Long = sink.appendTxn(topic,
+      spark.createDataFrame(seqs.reverse.map(q => Row(s"k${q % 7}".getBytes(UTF_8),
+        q.toString.getBytes(UTF_8), Seq.empty[Row],
+        java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), q.toLong)).asJava, schema),
+      topic, Cursor(1, seqs.last))
+    assert(txn("mta_events", 0 until 20) == 20L)
+    assert(txn("mtb_events", 100 until 112) == 12L)
+    assert(txn("mta_events", 20 until 30) == 10L)
+    assert(txn("mtb_events", 112 until 117) == 5L)
+    assert(sink.cursorFor("mta_events") == Cursor(1, 29))
+    for ((topic, total) <- Seq("mta_events" -> 30, "mtb_events" -> 17)) {
+      val byPartition = sink.read(topic).collect()
+        .map(r => (r.getAs[Int]("partition"), r.getAs[Long]("offset"),
+          new String(r.getAs[Array[Byte]]("value"), UTF_8).toLong))
+        .groupBy(_._1)
+      assert(byPartition.size > 1, s"$topic: fixture keys should span partitions")
+      byPartition.foreach { case (p, rs) =>
+        val byOffset = rs.sortBy(_._2)
+        assert(byOffset.map(_._2).toSeq == (0L until rs.length), s"$topic/$p offsets not dense")
+        assert(byOffset.map(_._3).toSeq == byOffset.map(_._3).sorted.toSeq, s"$topic/$p offsets not in _seq order")
+        assert(sink.nextOffset(topic, p) == rs.length.toLong)
+      }
+      assert(byPartition.values.map(_.length).sum == total)
+    }
+    // layout: one file per transaction, one topic each, rows in (partition, offset) order
+    val files = sink.manifest().files
+    assert(files.size == 4, s"one file per transaction, got $files")
+    files.foreach { f =>
+      val rows = spark.read.schema(KafkaShapedLog.recordSchema)
+        .parquet(sink.root.resolve(f).toString).collect()
+        .map(r => (r.getAs[String]("topic"), r.getAs[Int]("partition"), r.getAs[Long]("offset")))
+      assert(rows.map(_._1).distinct.length == 1, s"$f mixes topics")
+      val keys = rows.map(r => (r._2, r._3)).toSeq
+      assert(keys == keys.sorted, s"$f is not in (partition, offset) order")
+    }
   }
 
   test("malformed manifest fails fast (EventReplicatorIT.java:251-277 analog)") {
@@ -572,37 +581,76 @@ class ReplicatorSpec extends AnyFunSuite {
   test("drain job budget: full drain = ONE Spark job, idle poll = ZERO (scale: poll cadence)") {
     // The 100 TB shape of the drain loop: a backlog that fits one window
     // commits in a single observed write job (no pre-probe, no trailing
-    // empty-window probe, no fallback scan — dense ids prove drained-ness),
-    // and the steady-state idle poll is two metadata file reads, no job at
-    // all. A regression here is exactly the r6 pipeline slowdown.
+    // empty-window probe, no fallback scan — dense ids prove drained-ness,
+    // and the sink write has no exchange), and the steady-state idle poll
+    // is two metadata file reads, no job at all.
     val log = EventLog(Files.createTempDirectory("graft-src-").toString, spark)
     val sink = KafkaShapedLog(Files.createTempDirectory("graft-sink-").toString, spark)
     val rep = new Replicator(log, sink, batchSize = 100)
     log.saveAll("jb_events", (1 to 7).map(ev))
-    def stableJobCount(): Int = {
-      // statusTracker is fed by the async listener bus — wait until the
-      // count stops moving before trusting it
-      var last = -1
-      var cur = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-      while (cur != last) {
-        last = cur
-        Thread.sleep(150)
-        cur = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-      }
-      cur
-    }
-    val before = stableJobCount()
-    assert(rep.run("jb_events") == 7L)
-    // ONE observed staged write = ≤2 jobs (AQE runs the shuffle stage and
-    // the result stage as separate jobs); the old drain shape was 4-5
-    // (pre-probe + write + offset re-count + trailing probe + fallback)
-    assert(stableJobCount() - before <= 2,
-      "a one-window drain must cost only the observed staged write's jobs")
-    val afterDrain = stableJobCount()
-    assert(rep.pollAndSendBatch("jb_events") == 0L)
-    assert(rep.run("jb_events") == 0L)
-    assert(stableJobCount() == afterDrain,
+    assert(TestSpark.jobsDuring(rep.run("jb_events")) == ((7L, 1)),
+      "a one-window drain must cost only the observed staged write's job")
+    assert(TestSpark.jobsDuring(rep.pollAndSendBatch("jb_events")) == ((0L, 0)),
       "idle polls must cost zero Spark jobs (cursor-vs-cursor metadata check)")
+    assert(TestSpark.jobsDuring(rep.run("jb_events")) == ((0L, 0)))
+  }
+
+  test("a non-empty poll into a 4-partition sink is one Spark job") {
+    val log = EventLog(Files.createTempDirectory("graft-src-").toString, spark)
+    val sink = KafkaShapedLog(Files.createTempDirectory("graft-sink-").toString, spark, numPartitions = 4)
+    val rep = new Replicator(log, sink, batchSize = 100)
+    log.saveAll("pj_events", (1 to 40).map(ev))
+    assert(rep.pollAndSendBatch("pj_events") == 40L)
+    log.saveAll("pj_events", (41 to 80).map(ev))
+    assert(TestSpark.jobsDuring(rep.pollAndSendBatch("pj_events")) == ((40L, 1)))
+    assert((0 until 4).map(sink.nextOffset("pj_events", _)).sum == 80L)
+  }
+
+  test("one AvailableNow micro-batch of replicateStream is one Spark job") {
+    val log = EventLog(Files.createTempDirectory("graft-src-").toString, spark)
+    val sink = KafkaShapedLog(Files.createTempDirectory("graft-sink-").toString, spark, numPartitions = 4)
+    val rep = new Replicator(log, sink, batchSize = 100)
+    val ckpt = Files.createTempDirectory("graft-repl-jobs-").resolve("c").toString
+    log.saveAll("sj_events", (1 to 40).map(ev))
+    rep.replicateStream("sj_events", ckpt).awaitTermination()
+    log.saveAll("sj_events", (41 to 80).map(ev))
+    val (q, jobs) = TestSpark.jobsInGroup {
+      val q = rep.replicateStream("sj_events", ckpt)
+      q.awaitTermination()
+      q
+    }(_.runId.toString)
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1, "the run should be one micro-batch")
+    assert(jobs == 1, s"one micro-batch ran $jobs jobs")
+    assert(sink.read("sj_events").count() == 80L)
+  }
+
+  test("after an empty append a poll runs no Spark job and the stream commits nothing") {
+    val (log, sink, rep) = fixture()
+    log.saveAll("ea_events", (1 to 3).map(ev))
+    assert(rep.run("ea_events") == 3L)
+    log.saveAll("ea_events", Seq.empty)
+    assert(log.currentCursor("ea_events") == Cursor(2, 3), "an empty append takes an lsn, no id")
+    assert(TestSpark.jobsDuring(rep.pollAndSendBatch("ea_events")) == ((0L, 0)))
+    assert(TestSpark.jobsDuring(rep.run("ea_events")) == ((0L, 0)))
+    val manifest = sink.root.resolve("manifest.json")
+    val before = Files.readString(manifest)
+    rep.replicateStream("ea_events",
+      Files.createTempDirectory("graft-repl-ea-").resolve("c").toString).awaitTermination()
+    assert(Files.readString(manifest) == before, "the stream committed to the sink")
+  }
+
+  test("lag gauge reads with zero Spark jobs; pending ids count from the source head") {
+    val (log, _, rep) = fixture()
+    log.saveAll("lz_events", (1 to 3).map(ev))
+    assert(rep.run("lz_events") == 3L)
+    assert(TestSpark.jobsDuring(rep.lag("lz_events")) == ((0L, 0)))
+    log.saveAll("lz_events", (4 to 6).map(ev))
+    assert(TestSpark.jobsDuring(rep.lag("lz_events")) == ((1L, 0)))
+    // a trailing empty append moves the head lsn while ids are pending
+    log.saveAll("lz_events", Seq.empty)
+    assert(rep.lag("lz_events") == 2L)
+    assert(rep.run("lz_events") == 3L)
+    assert(TestSpark.jobsDuring(rep.lag("lz_events")) == ((0L, 0)))
   }
 
   test("idle check heals a stale LEGACY source cursor via reconcile (no wedged drain)") {

@@ -29,34 +29,51 @@ object TestSpark {
   /** Runs `body` and returns its result with the number of Spark jobs it
     * launched. Jobs are told apart by a local property set on this thread
     * (inherited by the threads it starts), so jobs of other threads are not
-    * counted, and a nested call counts its own jobs only. The listener bus
-    * is asynchronous but delivers in order: a tagged sentinel job after
-    * `body` flushes it, so once the sentinel's start is seen every earlier
-    * start has been. */
+    * counted, and a nested call counts its own jobs only. */
   def jobsDuring[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
     val tag = java.util.UUID.randomUUID().toString
-    val sentinel = tag + "/sentinel"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val outer = sc.getLocalProperty(JobTag)
+    sc.setLocalProperty(JobTag, tag)
+    val (result, jobs) = try jobStarts(body) finally sc.setLocalProperty(JobTag, outer)
+    (result, jobs.count(_._1 == tag))
+  }
+
+  /** Runs `body` and returns its result with the number of Spark jobs that
+    * ran meanwhile in job group `group(result)` — a streaming query's jobs
+    * run in the group named by its `runId`. */
+  def jobsInGroup[T](body: => T)(group: T => String): (T, Int) = {
+    val (result, jobs) = jobStarts(body)
+    (result, jobs.count(_._2 == group(result)))
+  }
+
+  /** Runs `body` and returns its result with the (job tag, job group) of
+    * every Spark job started meanwhile, in any thread. The listener bus is
+    * asynchronous but delivers in order: a tagged sentinel job after `body`
+    * flushes it, so once the sentinel's start is seen every earlier start
+    * has been. */
+  private def jobStarts[T](body: => T): (T, Seq[(String, String)]) = {
+    val sc = spark.sparkContext
+    val sentinel = java.util.UUID.randomUUID().toString + "/sentinel"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
     val flushed = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(JobTag)).foreach {
-          case `tag` => jobs.incrementAndGet()
-          case `sentinel` => flushed.countDown()
-          case _ =>
+        Option(e.properties).foreach { p =>
+          val tag = p.getProperty(JobTag)
+          if (tag == sentinel) flushed.countDown()
+          else jobs.add((tag, p.getProperty("spark.jobGroup.id")))
         }
     }
     val outer = sc.getLocalProperty(JobTag)
     sc.addSparkListener(listener)
     try {
-      sc.setLocalProperty(JobTag, tag)
       val result = body
       sc.setLocalProperty(JobTag, sentinel)
       sc.parallelize(Seq(1), 1).count()
       require(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "listener bus did not deliver the sentinel job")
-      (result, jobs.get)
+      (result, jobs.toArray(Array.empty[(String, String)]).toSeq)
     } finally {
       sc.setLocalProperty(JobTag, outer)
       sc.removeSparkListener(listener)
