@@ -7,7 +7,7 @@ import graft.Tables
 import graft.functions.Tokenizer
 import graft.queries.CorpusQueries
 import graft.queries.CrossHash.{shingleHashes, shingleHashSet}
-import graft.store.FileTree
+import graft.store.{Commit, FileTree}
 
 /** The DAILY path of the curation stack: extend yesterday's
   * [[CurationJob]] artifacts with today's document batch WITHOUT
@@ -429,7 +429,8 @@ object DailyIncrement {
     // time it would drift once the curated step commits
     Seq(nextBatchNo(spark, outDir)).toDF("batch_no").coalesce(1)
       .write.parquet(s"$pend/batchno")
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(pend, "_staged"))
+    Commit.seal(java.nio.file.Paths.get(pend, "_staged"),
+      FileTree.all(java.nio.file.Paths.get(pend)))
 
     val n = keptStaged.count()
     manifest.unpersist(); deduped.unpersist(); batchEvalH.unpersist()
@@ -539,17 +540,20 @@ object DailyIncrement {
         maxAddedBatch(spark, outDir)
       else nextBatchNo(spark, outDir)
 
-    def step(name: String)(body: => Unit): Unit = {
+    // `wrote`: the artifact dirs the step writes, forced by its marker's
+    // seal; the index steps pass none, as their own pointer commit forces
+    // what it publishes
+    def step(name: String, wrote: String*)(body: => Unit): Unit = {
       val marker = java.nio.file.Paths.get(pend, s"$name.done")
       if (!java.nio.file.Files.exists(marker)) {
         body
-        java.nio.file.Files.createFile(marker)
+        Commit.seal(marker, wrote.flatMap(d => FileTree.all(java.nio.file.Paths.get(d))))
       }
       if (failAfter.contains(name))
         throw new IllegalStateException(s"injected crash after $name append")
     }
 
-    step("curated") {
+    step("curated", s"$outDir/curated") {
       kept.select($"doc_id", $"n_tokens", $"digest")
         .withColumn("added_batch", lit(batchNo))
         .write.mode("append").parquet(s"$outDir/curated")
@@ -557,7 +561,7 @@ object DailyIncrement {
     // the monotonic batch counter (nextBatchNo's scrub-proof source):
     // advances to the id just used, never backwards — a later
     // whole-batch Takedown.scrub can drop max(added_batch) but not this
-    step("batchctr") {
+    step("batchctr", s"$outDir/batchctr") {
       val prev = PackedExport.readBase(spark, s"$outDir/batchctr").getOrElse(0L)
       PackedExport.writeBase(spark, s"$outDir/batchctr", math.max(prev, batchNo))
     }
@@ -566,12 +570,12 @@ object DailyIncrement {
     // survivors of batches 1..k — the sequential-union semantics the
     // header documents). Cross-batch duplicate hashes are fine: every
     // read side goes through .distinct().
-    step("evalh") {
+    step("evalh", s"$outDir/evalh") {
       spark.read.parquet(s"$pend/evalh")
         .withColumn("added_batch", lit(batchNo))
         .write.mode("append").parquet(s"$outDir/evalh")
     }
-    step("shards") {
+    step("shards", s"$outDir/shards") {
       val budget = CorpusQueries.PackBudget
       // same fail-fast as PackedExport.writeShards: an oversized doc
       // would jump the prefix sum across whole budgets and silently skip
@@ -591,20 +595,20 @@ object DailyIncrement {
           .write.partitionBy("shard").mode("append").parquet(s"$outDir/shards")
       }
     }
-    step("packbase") {
+    step("packbase", s"$outDir/packbase") {
       PackedExport.writeBase(spark, s"$outDir/packbase",
         base + kept.agg(coalesce(sum($"n_tokens"), lit(0L))).head.getLong(0))
     }
     step("bm25") {
       Bm25Index.append(kept.select($"doc_id", $"text"), s"$outDir/bm25")
     }
-    step("vectors") {
+    step("vectors", s"$outDir/vectors") {
       VectorIndex.append(
         spark.read.parquet(s"$pend/vectors")
           .select($"vec_id", $"embedding"),
         s"$outDir/vectors")
     }
-    step("dsir") {
+    step("dsir", s"$outDir/dsir") {
       // read-append-write on the same path — the merged B-row table is
       // collected to the driver (it is sketch-sized by construction) and
       // re-created before the overwrite, so the write can never lazily
@@ -666,7 +670,7 @@ object DailyIncrement {
           t, opts("span_target").toLong)
       }
     }
-    step("tokvocab") {
+    step("tokvocab", s"$outDir/tokenizer_vocab") {
       // the tokenizer vocab is a MAINTAINED count table: the merge table
       // is frozen at day 0 (BpeTrainer.save's rationale), but piece
       // frequencies are mergeable, so each batch's pieces under the

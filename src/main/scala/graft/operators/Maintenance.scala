@@ -322,26 +322,19 @@ object Maintenance {
     }
   }
 
-  /** One flat artifact's fold. Writes to a STAGED sibling dir and
-    * commits by the CompactSwap marker protocol — a routine scheduled
-    * compact must never expose the manifest to a lost-executor-mid-
-    * overwrite window (the plan reads the live dir and writes the
-    * staged one, so no checkpoint pin is needed; a crash before the
-    * marker loses nothing, after it the next compact rolls the rename
-    * forward) — plus an already-at-target fast path so a weekly
-    * schedule doesn't rewrite a quiet tree. */
+  /** One flat artifact's fold: written to a staged sibling dir and swapped
+    * in by [[graft.streaming.CompactSwap.compact]] (the plan reads the live
+    * dir and writes the staged one, so no checkpoint pin is needed); a tree
+    * already at `target` files is left alone. */
   private def foldFlat(spark: SparkSession, outDir: String, rel: String,
       d: String, target: Long)(
       write: (org.apache.spark.sql.DataFrame, String) => Unit): Unit = {
-    val live = java.nio.file.Paths.get(d)
     val staged = java.nio.file.Paths.get(s"${d}_compact")
-    val marker = java.nio.file.Paths.get(s"$outDir/_maint_staged_$rel")
-    graft.streaming.CompactSwap.recover(marker, Seq(live -> staged), Nil)
-    graft.store.FileTree.deleteRecursively(staged) // pre-marker leftovers
-    if (pathFiles(d) > target) {
+    graft.streaming.CompactSwap.compact(
+        java.nio.file.Paths.get(s"$outDir/_maint_staged_$rel"),
+        Seq(java.nio.file.Paths.get(d) -> staged), Nil,
+        pathFiles(d) <= target) {
       write(spark.read.parquet(d), staged.toString)
-      java.nio.file.Files.createFile(marker)
-      graft.streaming.CompactSwap.roll(marker, Seq(live -> staged), Nil)
     }
   }
 }

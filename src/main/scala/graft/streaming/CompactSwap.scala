@@ -2,49 +2,72 @@ package graft.streaming
 
 import java.nio.file.{Files, Path}
 
-import graft.store.FileTree
+import graft.store.{Commit, FileTree}
 
-/** The staged-swap protocol behind the maintained indexes' `compact()`:
-  * the batch-partitioned stream layouts have no `_current` pointer to
-  * swap (readers gate on the EOS marker instead), so an in-place fold
-  * would leave a crash window where the standing dir is half-overwritten.
-  * Instead the fold writes COMPLETE staged dirs next to the live ones,
-  * drops a `_compact_staged` marker, and only then swaps dirs and clears
-  * the applied tombstone artifacts — marker deleted last.
+/** The staged-swap compaction protocol, once for every fold of a live
+  * layout that has no pointer to swap (the maintained indexes gate
+  * readers on their EOS marker; `Maintenance`'s flat artifacts are read
+  * at a fixed path). An in-place fold would leave a window where the live
+  * dir is half-overwritten, so [[compact]] writes COMPLETE staged dirs
+  * next to the live ones, seals a marker over them, and only then swaps
+  * dirs and applies the drops — marker deleted last.
   *
   * Crash windows:
-  *  - before the marker: leftover staged dirs, live layout untouched —
-  *    the next compact deletes them and recomputes; probes unaffected.
-  *  - after the marker: [[roll]] is idempotent — a staged dir that still
-  *    exists is swapped in (its live twin deleted first); one already
-  *    moved is skipped (the marker is only written once every staged dir
-  *    is complete, so absence ⇔ already swapped); tombstone drops and the
-  *    marker delete re-run harmlessly. Probes and stream updates REQUIRE
-  *    the marker's absence ([[requireQuiescent]]) so a half-swapped
-  *    layout fails loud ("roll forward first") instead of silently
-  *    reading an empty corpus.
+  *  - before the seal's `create`: leftover staged dirs, live layout
+  *    untouched — the next compact clears them and recomputes; readers
+  *    are unaffected.
+  *  - after it: [[Commit.seal]] forced every staged file before creating
+  *    the marker, so a marker always names complete, durable staged dirs.
+  *    [[roll]] is idempotent: a staged dir that still exists is swapped in
+  *    (its live twin deleted first), one already moved is skipped (absence
+  *    ⇔ already swapped), drops re-run harmlessly, and the swapped live
+  *    dirs and their parents are forced before the marker is deleted, so
+  *    the unlink can never reach the disk ahead of the renames. Readers
+  *    and stream updates REQUIRE the marker's absence
+  *    ([[requireQuiescent]]), so a half-swapped layout fails loud ("roll
+  *    forward first") instead of reading an empty corpus.
   */
 private[graft] object CompactSwap {
-  /** Swap every still-staged dir into place, clear the applied tombstone
-    * artifacts, delete the marker. Idempotent (see header). */
-  def roll(marker: Path, swaps: Seq[(Path, Path)], drops: Seq[Path]): Unit = {
+
+  /** The whole protocol: roll a crashed swap forward; return if
+    * `upToDate` (read after that recovery); otherwise clear the staged
+    * dirs, run `stage` to write them, seal `marker` over every staged
+    * file, and [[roll]]. `swaps` are (live, staged) pairs; `drops` are
+    * deleted once the swap is in. */
+  def compact(marker: Path, swaps: Seq[(Path, Path)], drops: Seq[Path],
+      upToDate: => Boolean)(stage: => Unit): Unit = {
+    recover(marker, swaps, drops)
+    if (upToDate) return
+    swaps.foreach { case (_, staged) => FileTree.deleteRecursively(staged) }
+    stage
+    Commit.seal(marker, swaps.flatMap { case (_, staged) => FileTree.all(staged) })
+    roll(marker, swaps, drops)
+  }
+
+  /** The maintained layouts' fast path: every live dir is already one
+    * `batch=0` base and no drop is left to apply. It also stops the retry
+    * right after [[recover]] from re-folding the base it just rolled in. */
+  def folded(swaps: Seq[(Path, Path)], drops: Seq[Path]): Boolean =
+    swaps.forall { case (live, _) => batchIds(live) == Seq(0L) } &&
+      !drops.exists(Files.exists(_))
+
+  /** Swap every still-staged dir into place, apply the drops, force the
+    * live dirs, delete the marker. Idempotent (see header). */
+  private def roll(marker: Path, swaps: Seq[(Path, Path)], drops: Seq[Path]): Unit = {
     for ((live, staged) <- swaps; if Files.exists(staged)) {
       FileTree.deleteRecursively(live)
       Files.move(staged, live)
     }
     drops.foreach(FileTree.deleteRecursively)
+    Commit.force(swaps.map(_._1).filter(Files.exists(_)))
     Files.deleteIfExists(marker)
   }
 
   /** Roll a crashed swap forward (no-op without the marker). */
-  def recover(marker: Path, swaps: Seq[(Path, Path)], drops: Seq[Path]): Unit =
+  private def recover(marker: Path, swaps: Seq[(Path, Path)], drops: Seq[Path]): Unit =
     if (Files.exists(marker)) roll(marker, swaps, drops)
 
-  /** Top-level `batch=<n>` partition ids of a maintained layout — the
-    * fragmentation axis compact() folds. The idempotent fast path tests
-    * this against Seq(0): a retry right after [[recover]] rolled a
-    * crashed swap forward would otherwise re-stage and re-roll the
-    * already-folded base, doubling the rewrite cost for nothing. */
+  /** Top-level `batch=<n>` partition ids of a maintained layout. */
   def batchIds(dir: Path): Seq[Long] =
     if (!Files.exists(dir)) Nil
     else {

@@ -118,37 +118,25 @@ final class MaintainedIntIvfIndex(path: Path, spark: SparkSession) {
   }
 
   // ---------------------------------------------------------------------
-  // Layout maintenance — the [[MaintainedShingleIndex.compact]] protocol
-  // on the (batch, cluster) layout. The frozen quantizer artifacts live
-  // OUTSIDE vecsDir and are untouched by the fold.
+  // Layout maintenance
 
   private def compactMarker = path.resolve("_compact_staged")
-  private def compactSwaps = Seq(vecsDir -> path.resolve("vectors_compact"))
 
   /** Fold every committed (batch, cluster) partition — tombstone-masked —
-    * into a single `batch=0` base; gate/EOS untouched, probes identical,
-    * applied tombstones clear, staged-marker crash protocol — see
-    * [[MaintainedVectorIndex.compact]]. */
-  def compact(): Unit = compact(failAfterStage = false)
-
-  private[graft] def compact(failAfterStage: Boolean): Unit = {
-    CompactSwap.recover(compactMarker, compactSwaps, Seq(tombDir))
+    * into a single `batch=0` base by [[CompactSwap.compact]]; gate/EOS and
+    * the frozen quantizers (outside `vectors/`) untouched, probes
+    * identical, applied tombstones clear. */
+  def compact(): Unit = {
     val last = proj.lastCommitted
-    if (last < 0 || !Files.exists(vecsDir)) return
-    // idempotent fast path (the post-recover retry must not re-fold)
-    if (CompactSwap.batchIds(vecsDir) == Seq(0L) && !Files.exists(tombDir))
-      return
-    val Seq((_, staged)) = compactSwaps
-    graft.store.FileTree.deleteRecursively(staged)
-    maskedCorpus(spark.read.parquet(vecsDir.toString)
-        .filter(col("batch") <= last)
-        .select(col("vec_id"), col("qv"), col("codes"), col("cluster")))
-      .repartition(col("cluster")).withColumn("batch", lit(0L))
-      .write.partitionBy("batch", "cluster").parquet(staged.toString)
-    Files.createFile(compactMarker)
-    if (failAfterStage)
-      throw new IllegalStateException("injected crash before the compact swap")
-    CompactSwap.roll(compactMarker, compactSwaps, Seq(tombDir))
+    val swaps = Seq(vecsDir -> path.resolve("vectors_compact"))
+    CompactSwap.compact(compactMarker, swaps, Seq(tombDir),
+        last < 0 || !Files.exists(vecsDir) || CompactSwap.folded(swaps, Seq(tombDir))) {
+      maskedCorpus(spark.read.parquet(vecsDir.toString)
+          .filter(col("batch") <= last)
+          .select(col("vec_id"), col("qv"), col("codes"), col("cluster")))
+        .repartition(col("cluster")).withColumn("batch", lit(0L))
+        .write.partitionBy("batch", "cluster").parquet(swaps.head._2.toString)
+    }
   }
 
   /** IVFADC top-k per query against the committed index state — the

@@ -134,35 +134,21 @@ final class MaintainedOverlapIndex(path: Path, spark: SparkSession) {
   }
 
   // ---------------------------------------------------------------------
-  // Layout maintenance — the [[MaintainedShingleIndex.compact]] protocol
-  // on the positioned occurrence layout (one staged dir instead of two).
+  // Layout maintenance
 
   private def compactMarker = path.resolve("_compact_staged")
-  private def compactSwaps = Seq(occDir -> path.resolve("occ_compact"))
-  private def compactDrops(last: Long) =
-    Seq(path.resolve(s"eos/batch-$last/tombstones"))
 
   /** Fold every committed batch partition (tombstone-masked) into a
-    * single `batch=0` base; EOS state untouched, probes identical
-    * before/after, staged-marker crash protocol — see
-    * [[MaintainedShingleIndex.compact]] for the full contract
-    * (MaintainedOverlapIndexSpec pins this twin). */
-  def compact(): Unit = compact(failAfterStage = false)
-
-  private[graft] def compact(failAfterStage: Boolean): Unit = {
+    * single `batch=0` base by [[CompactSwap.compact]]; EOS state
+    * untouched, probes identical before and after. */
+  def compact(): Unit = {
     val last = proj.lastCommitted
-    CompactSwap.recover(compactMarker, compactSwaps, compactDrops(last))
-    if (last < 0) return
-    // idempotent fast path (the post-recover retry must not re-fold)
-    if (CompactSwap.batchIds(occDir) == Seq(0L) &&
-        !Files.exists(path.resolve(s"eos/batch-$last/tombstones"))) return
-    val Seq((_, so)) = compactSwaps
-    graft.store.FileTree.deleteRecursively(so)
-    committedOcc.repartition(32, col("h")).withColumn("batch", lit(0L))
-      .write.partitionBy("batch").parquet(so.toString)
-    Files.createFile(compactMarker)
-    if (failAfterStage)
-      throw new IllegalStateException("injected crash before the compact swap")
-    CompactSwap.roll(compactMarker, compactSwaps, compactDrops(last))
+    val swaps = Seq(occDir -> path.resolve("occ_compact"))
+    val drops = Seq(path.resolve(s"eos/batch-$last/tombstones"))
+    CompactSwap.compact(compactMarker, swaps, drops,
+        last < 0 || CompactSwap.folded(swaps, drops)) {
+      committedOcc.repartition(32, col("h")).withColumn("batch", lit(0L))
+        .write.partitionBy("batch").parquet(swaps.head._2.toString)
+    }
   }
 }

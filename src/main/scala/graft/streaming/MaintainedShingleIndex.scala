@@ -185,53 +185,28 @@ final class MaintainedShingleIndex(path: Path, spark: SparkSession) {
   // Layout maintenance
 
   private def compactMarker = path.resolve("_compact_staged")
-  private def compactSwaps = Seq(
-    pairsDir -> path.resolve("pairs_compact"),
-    countsDir -> path.resolve("counts_compact"))
-  private def compactDrops(last: Long) =
-    Seq(path.resolve(s"eos/batch-$last/tombstones"))
 
   /** Fold every committed batch partition (tombstone-masked) into a
-    * single `batch=0` base — the [[graft.operators.ShingleIndex.compact]]
-    * doctrine on the streamed layout: a continuous feed adds one
-    * partition per micro-batch forever, and with no takedown ever filed
-    * nothing else bounds the partition count a probe lists. `batch=0` is
-    * ≤ every committed marker, so the folded base stays visible to the
-    * gated readers; the EOS state is untouched, so the next micro-batch
-    * id continues from the checkpoint and replays still skip whole (G4).
-    * Applied tombstones drop with the fold (a re-requested del of a
-    * folded-away id re-tombstones an absent doc — a no-op, the
-    * already-deleted contract). Probes identical before/after
-    * (MaintainedShingleIndexSpec pins it through a crashed swap).
-    *
-    * Quiescent-stream contract: run between triggers (stop the query or
-    * schedule in a maintenance window). The swap is the staged-marker
-    * protocol ([[CompactSwap]]): a crash before the marker loses nothing;
-    * after it, probes/updates fail loud until the next compact() rolls
-    * the swap forward. */
-  def compact(): Unit = compact(failAfterStage = false)
-
-  /** `failAfterStage` is the spec's crash seam: throw after the staged
-    * dirs + marker land but before the swap — the widest window. */
-  private[graft] def compact(failAfterStage: Boolean): Unit = {
+    * single `batch=0` base, so a continuous feed's partition count stays
+    * bounded. `batch=0` is ≤ every committed marker, so the base stays
+    * visible to the gated readers; the EOS state is untouched, so the next
+    * micro-batch id continues from the checkpoint and replays still skip
+    * whole (G4). Applied tombstones drop with the fold (a re-requested del
+    * of a folded-away id is a no-op). Probes are identical before and
+    * after. Run between triggers; the swap is [[CompactSwap.compact]], so
+    * after a crash probes and updates fail loud until the next compact(). */
+  def compact(): Unit = {
     val last = proj.lastCommitted
-    CompactSwap.recover(compactMarker, compactSwaps, compactDrops(last))
-    if (last < 0) return
-    // idempotent fast path — in particular the retry right after recover
-    // rolled a crashed swap forward: already single-base with no
-    // tombstone snapshot left to apply means there is nothing to fold
-    if (CompactSwap.batchIds(pairsDir) == Seq(0L) &&
-        CompactSwap.batchIds(countsDir) == Seq(0L) &&
-        !Files.exists(path.resolve(s"eos/batch-$last/tombstones"))) return
-    val Seq((_, sp), (_, sc)) = compactSwaps
-    graft.store.FileTree.deleteRecursively(sp); graft.store.FileTree.deleteRecursively(sc)
-    committedPairs.repartition(32, col("h")).withColumn("batch", lit(0L))
-      .write.partitionBy("batch").parquet(sp.toString)
-    committedCounts.withColumn("batch", lit(0L))
-      .write.partitionBy("batch").parquet(sc.toString)
-    Files.createFile(compactMarker)
-    if (failAfterStage)
-      throw new IllegalStateException("injected crash before the compact swap")
-    CompactSwap.roll(compactMarker, compactSwaps, compactDrops(last))
+    val swaps = Seq(pairsDir -> path.resolve("pairs_compact"),
+      countsDir -> path.resolve("counts_compact"))
+    val drops = Seq(path.resolve(s"eos/batch-$last/tombstones"))
+    CompactSwap.compact(compactMarker, swaps, drops,
+        last < 0 || CompactSwap.folded(swaps, drops)) {
+      val Seq((_, sp), (_, sc)) = swaps
+      committedPairs.repartition(32, col("h")).withColumn("batch", lit(0L))
+        .write.partitionBy("batch").parquet(sp.toString)
+      committedCounts.withColumn("batch", lit(0L))
+        .write.partitionBy("batch").parquet(sc.toString)
+    }
   }
 }

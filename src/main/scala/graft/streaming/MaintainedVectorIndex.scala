@@ -81,40 +81,29 @@ final class MaintainedVectorIndex(path: Path, spark: SparkSession,
   }
 
   // ---------------------------------------------------------------------
-  // Layout maintenance — the [[MaintainedShingleIndex.compact]] protocol.
+  // Layout maintenance
 
   private def compactMarker = path.resolve("_compact_staged")
-  private def compactSwaps = Seq(vecsDir -> path.resolve("vectors_compact"))
 
   /** Fold every committed (batch, bucket) partition — tombstone-masked —
-    * into a single `batch=0` base: a continuous feed adds one batch
-    * partition per micro-batch forever, and nothing else bounds the
-    * partition count a bucket-pruned probe lists. `batch=0` stays under
-    * the `batch <= lastCommitted` gate; EOS state untouched; applied
-    * tombstones clear with the fold (re-requested deletes of folded-away
-    * ids are no-ops). Staged-marker crash protocol ([[CompactSwap]]):
-    * probes/updates fail loud mid-swap until the next compact rolls
-    * forward. Quiescent-stream contract, like [[vacuum]]. */
-  def compact(): Unit = compact(failAfterStage = false)
-
-  private[graft] def compact(failAfterStage: Boolean): Unit = {
-    CompactSwap.recover(compactMarker, compactSwaps, Seq(tombDir))
+    * into a single `batch=0` base by [[CompactSwap.compact]]: a continuous
+    * feed adds one batch partition per micro-batch forever, and nothing
+    * else bounds the partition count a bucket-pruned probe lists.
+    * `batch=0` stays under the `batch <= lastCommitted` gate; EOS state
+    * untouched; applied tombstones clear with the fold (re-requested
+    * deletes of folded-away ids are no-ops). Quiescent-stream contract,
+    * like [[vacuum]]. */
+  def compact(): Unit = {
     val last = proj.lastCommitted
-    if (last < 0 || !Files.exists(vecsDir)) return
-    // idempotent fast path (the post-recover retry must not re-fold)
-    if (CompactSwap.batchIds(vecsDir) == Seq(0L) && !Files.exists(tombDir))
-      return
-    val Seq((_, staged)) = compactSwaps
-    graft.store.FileTree.deleteRecursively(staged)
-    maskedCorpus(spark.read.parquet(vecsDir.toString)
-        .filter(col("batch") <= last)
-        .select(col("vec_id"), col("v"), col("bucket")))
-      .repartition(col("bucket")).withColumn("batch", lit(0L))
-      .write.partitionBy("batch", "bucket").parquet(staged.toString)
-    Files.createFile(compactMarker)
-    if (failAfterStage)
-      throw new IllegalStateException("injected crash before the compact swap")
-    CompactSwap.roll(compactMarker, compactSwaps, Seq(tombDir))
+    val swaps = Seq(vecsDir -> path.resolve("vectors_compact"))
+    CompactSwap.compact(compactMarker, swaps, Seq(tombDir),
+        last < 0 || !Files.exists(vecsDir) || CompactSwap.folded(swaps, Seq(tombDir))) {
+      maskedCorpus(spark.read.parquet(vecsDir.toString)
+          .filter(col("batch") <= last)
+          .select(col("vec_id"), col("v"), col("bucket")))
+        .repartition(col("bucket")).withColumn("batch", lit(0L))
+        .write.partitionBy("batch", "bucket").parquet(swaps.head._2.toString)
+    }
   }
 
   /** foreachBatch body — attach via `writeStream.foreachBatch(idx.update _)`.

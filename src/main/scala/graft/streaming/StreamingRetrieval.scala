@@ -233,45 +233,30 @@ final class MaintainedBm25Index(path: Path, spark: SparkSession, buckets: Int = 
   }
 
   // ---------------------------------------------------------------------
-  // Layout maintenance — the [[MaintainedShingleIndex.compact]] protocol
-  // on the (batch, b) postings layout. The df/stats sides ride the EOS
-  // snapshot and were decremented EXACTLY at each delete's commit, so
-  // physically dropping the masked rows + the applied tombstone set
-  // leaves every score identical.
+  // Layout maintenance
 
   private def compactMarker = path.resolve("_compact_staged")
-  private def compactSwaps = Seq(postingsDir -> path.resolve("postings_compact"))
-  private def compactDrops(last: Long) =
-    Seq(path.resolve(s"eos/batch-$last/tombstones"))
 
   /** Fold every committed (batch, b) postings partition — tombstone-
-    * masked — into a single `batch=0` base re-clustered by bucket;
-    * gate/EOS and the terms/stats sides untouched, probes score
-    * identically, staged-marker crash protocol — see
-    * [[MaintainedShingleIndex.compact]] (StreamingRetrievalSpec pins
-    * this twin). */
-  def compact(): Unit = compact(failAfterStage = false)
-
-  private[graft] def compact(failAfterStage: Boolean): Unit = {
+    * masked — into a single `batch=0` base re-clustered by bucket, by
+    * [[CompactSwap.compact]]. The df/stats sides ride the EOS snapshot and
+    * were decremented exactly at each delete's commit, so dropping the
+    * masked rows and the applied tombstone set leaves every score
+    * identical. */
+  def compact(): Unit = {
     val last = proj.lastCommitted
-    CompactSwap.recover(compactMarker, compactSwaps, compactDrops(last))
-    if (last < 0 || !Files.exists(postingsDir)) return
-    // idempotent fast path (the post-recover retry must not re-fold)
-    if (CompactSwap.batchIds(postingsDir) == Seq(0L) &&
-        !Files.exists(path.resolve(s"eos/batch-$last/tombstones"))) return
-    val Seq((_, staged)) = compactSwaps
-    graft.store.FileTree.deleteRecursively(staged)
-    val committed = spark.read.parquet(postingsDir.toString)
-      .filter(col("batch") <= last)
-    val masked = tombstones(last) match {
-      case None => committed
-      case Some(t) => committed.join(t.select(col("doc_id")), Seq("doc_id"), "left_anti")
+    val swaps = Seq(postingsDir -> path.resolve("postings_compact"))
+    val drops = Seq(path.resolve(s"eos/batch-$last/tombstones"))
+    CompactSwap.compact(compactMarker, swaps, drops,
+        last < 0 || !Files.exists(postingsDir) || CompactSwap.folded(swaps, drops)) {
+      val committed = spark.read.parquet(postingsDir.toString)
+        .filter(col("batch") <= last)
+      val masked = tombstones(last) match {
+        case None => committed
+        case Some(t) => committed.join(t.select(col("doc_id")), Seq("doc_id"), "left_anti")
+      }
+      masked.drop("batch").repartition(col("b")).withColumn("batch", lit(0L))
+        .write.partitionBy("batch", "b").parquet(swaps.head._2.toString)
     }
-    masked.drop("batch").repartition(col("b")).withColumn("batch", lit(0L))
-      .write.partitionBy("batch", "b").parquet(staged.toString)
-    Files.createFile(compactMarker)
-    if (failAfterStage)
-      throw new IllegalStateException("injected crash before the compact swap")
-    CompactSwap.roll(compactMarker, compactSwaps, compactDrops(last))
   }
 }

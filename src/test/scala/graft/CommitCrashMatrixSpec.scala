@@ -14,7 +14,7 @@ import graft.operators.{Bm25Index, CatalogCommit, ShingleIndex}
 import graft.replicate.Replicator
 import graft.sources.{KafkaShapedConsumer, KafkaShapedLog}
 import graft.store.{Commit, EventLog, FileTree, TopicOffsets}
-import graft.streaming.EosProjection
+import graft.streaming.{CompactSwap, EosProjection, MaintainedVectorIndex}
 
 /** Crash matrix over every commit protocol built on [[Commit]].
   *
@@ -28,8 +28,9 @@ import graft.streaming.EosProjection
   *    otherwise only if the crash left the pre-state) reaches the clean
   *    run's post-state, with no record lost or duplicated;
   *  - no `*.tmp` file is left behind;
-  * and the clean trace shows every path the new manifest or pointer names
-  * was forced before that replace's move.
+  * and the clean trace shows every path the new manifest, pointer or
+  * marker names was forced before that replace's move or that seal's
+  * create.
   */
 class CommitCrashMatrixSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -51,7 +52,8 @@ class CommitCrashMatrixSpec extends AnyFunSuite {
     def effects(): Seq[Any] = Nil
     /** Called after each attempt of `op`, crashed or not. */
     def settle(): Unit = ()
-    /** (target, the paths its committed content names). */
+    /** (target, the paths its committed content names): a replaced file,
+      * or a sealed marker and the data it commits. */
     def publishes(): Seq[(Path, Set[Path])]
   }
 
@@ -93,11 +95,13 @@ class CommitCrashMatrixSpec extends AnyFunSuite {
     assert(tmpFiles(clean.root).isEmpty, s"$name: clean run left tmp files")
 
     // every path a commit newly names was forced before its replace's move
+    // or its seal's create
     for ((target, named) <- clean.publishes()) {
       val fresh = named -- prePublished.getOrElse(target, Set.empty)
       assert(fresh.nonEmpty, s"$name: ${target.getFileName} names nothing new")
-      val move = trace.lastIndexWhere(s => s.op == "move" && abs(s.paths.head) == abs(target))
-      assert(move >= 0, s"$name: ${target.getFileName} was not replaced")
+      val move = trace.lastIndexWhere(s =>
+        (s.op == "move" || s.op == "create") && abs(s.paths.head) == abs(target))
+      assert(move >= 0, s"$name: ${target.getFileName} was not replaced or sealed")
       val forced = trace.take(move).filter(_.op == "force").flatMap(_.paths).map(abs).toSet
       val unforced = fresh.map(abs) -- forced
       assert(unforced.isEmpty, s"$name: named before forced: $unforced")
@@ -130,6 +134,16 @@ class CommitCrashMatrixSpec extends AnyFunSuite {
       Map("mk" -> s"mv-$i".getBytes(UTF_8)))
 
   private def tempDir(prefix: String): Path = Files.createTempDirectory(prefix)
+
+  /** A copy of the tree at `from` in a fresh temp dir. */
+  private def copyTree(from: Path): Path = {
+    val to = tempDir("graft-cm-copy-")
+    FileTree.all(from).foreach { p =>
+      val q = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
+    }
+    to
+  }
 
   /** Manifest-named files of an EventLog topic (the cursor line names none). */
   private def segmentNames(segments: Path): Set[Path] =
@@ -308,6 +322,53 @@ class CommitCrashMatrixSpec extends AnyFunSuite {
           val b = Files.readString(ptr).trim
           Seq(ptr -> tables.flatMap(t => FileTree.all(loc(t).resolve(s"batch=$b"))).toSet)
         }
+      }
+    }
+  }
+
+  test("MaintainedVectorIndex.compact: a crash before the seal reads pre, after it rolls forward") {
+    GraftExtensions.register(spark)
+    val ss = spark
+    import ss.implicits._
+    def vecs(ids: Range): DataFrame = ids.map { i =>
+      val r = new scala.util.Random(i)
+      (i.toLong, Array.fill(64)(r.nextGaussian()))
+    }.toDF("vec_id", "embedding")
+    val queries = vecs(0 until 3).withColumnRenamed("vec_id", "query_id")
+    matrix("MaintainedVectorIndex.compact") { () =>
+      new Fixture {
+        val root = tempDir("graft-cm-vcompact-")
+        private val marker = root.resolve("_compact_staged")
+        private val live = root.resolve("vectors")
+        private val staged = root.resolve("vectors_compact")
+        private val idx = new MaintainedVectorIndex(root, spark)
+        idx.update(vecs(0 until 12), 0L)
+        idx.update(vecs(12 until 24), 1L)
+        idx.delete(Seq(3L, 15L).toDF("vec_id"))
+        def op(): Unit = idx.compact()
+        def idempotent = true
+        /** The layout (batch ids, tombstones present) and the probe. A
+          * present marker commits the fold: probes fail loud until
+          * compact() rolls it forward, so the state it reads as is that of
+          * a rolled-forward copy. */
+        def units() = {
+          val dir =
+            if (!Files.exists(marker)) root
+            else {
+              intercept[IllegalArgumentException](idx.probe(queries, k = 3))
+              val c = copyTree(root)
+              new MaintainedVectorIndex(c, spark).compact()
+              c
+            }
+          val hits = new MaintainedVectorIndex(dir, spark).probe(queries, k = 3, nprobe = 2)
+            .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+          Map("index" -> (CompactSwap.batchIds(dir.resolve("vectors")),
+            Files.exists(dir.resolve("tombstones")), hits))
+        }
+        /** The marker names every file of the staged dir, which the roll
+          * moves to the live dir. */
+        def publishes() =
+          Seq(marker -> FileTree.all(live).map(p => staged.resolve(live.relativize(p))).toSet)
       }
     }
   }

@@ -150,8 +150,11 @@ class MaintainedOverlapIndexSpec extends AnyFunSuite {
     assert(Files.exists(rootA.resolve("eos/batch-1/tombstones")),
       "the stream-del should have staged a tombstone set")
 
-    intercept[IllegalStateException](a.compact(failAfterStage = true))
+    intercept[IllegalStateException](
+      TestSpark.crashAt(TestSpark.rollOf(rootA.resolve("occ")))(a.compact()))
     intercept[IllegalArgumentException](a.runsProbe(evalDocs, minRun))
+    intercept[IllegalArgumentException](
+      a.update(Seq((999002L, "alpha beta gamma", "add")).toDF("doc_id", "text", "op"), 2L))
     a.compact()
     assert(batchParts(rootA) == Seq("batch=0"),
       "committed batches did not fold to the single base")

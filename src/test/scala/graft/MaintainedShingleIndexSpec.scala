@@ -173,8 +173,10 @@ class MaintainedShingleIndexSpec extends AnyFunSuite {
     assert(Files.exists(rootA.resolve("eos/batch-1/tombstones")),
       "the stream-del should have staged a tombstone set")
 
-    // crash after staging: probes/updates fail loud, the retry rolls forward
-    intercept[IllegalStateException](a.compact(failAfterStage = true))
+    // crash in the roll, after the seal: probes/updates fail loud, the
+    // retry rolls forward
+    intercept[IllegalStateException](
+      TestSpark.crashAt(TestSpark.rollOf(rootA.resolve("pairs")))(a.compact()))
     intercept[IllegalArgumentException](a.probe(probeBatch, 0.6))
     intercept[IllegalArgumentException](
       feed(a, 2L, rowsOf(350, 360)))

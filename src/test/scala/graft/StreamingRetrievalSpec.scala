@@ -318,7 +318,8 @@ class StreamingRetrievalSpec extends AnyFunSuite {
     val fx = RetrievalQueries.fixtureQueries.toDF("query_id", "term")
     def scores(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val bmA = new MaintainedBm25Index(Files.createTempDirectory("bm25c-a-"), spark)
+    val bmPathA = Files.createTempDirectory("bm25c-a-")
+    val bmA = new MaintainedBm25Index(bmPathA, spark)
     val bmB = new MaintainedBm25Index(Files.createTempDirectory("bm25c-b-"), spark)
     // feed both twins: adds, then adds+dels
     for (bm <- Seq(bmA, bmB)) {
@@ -329,8 +330,10 @@ class StreamingRetrievalSpec extends AnyFunSuite {
     }
     val bmPre = scores(bmA.probe(fx))
     assert(bmPre.nonEmpty, "vacuous bm25 fixture")
-    intercept[IllegalStateException](bmA.compact(failAfterStage = true))
+    intercept[IllegalStateException](
+      TestSpark.crashAt(TestSpark.rollOf(bmPathA.resolve("postings")))(bmA.compact()))
     intercept[IllegalArgumentException](bmA.probe(fx))
+    intercept[IllegalArgumentException](bmA.update(extra.toDF("doc_id", "text"), 2L))
     bmA.compact()
     assert(scores(bmA.probe(fx)) == bmPre, "bm25 probe changed across compact")
     for (bm <- Seq(bmA, bmB))
@@ -360,8 +363,10 @@ class StreamingRetrievalSpec extends AnyFunSuite {
     val vPre = hits(vA.probe(queries, k = 3, nprobe = 2))
     assert(vPre.nonEmpty, "vacuous vector fixture")
     assert(batchParts(vPathA.resolve("vectors")) == Seq("batch=0", "batch=1"))
-    intercept[IllegalStateException](vA.compact(failAfterStage = true))
+    intercept[IllegalStateException](
+      TestSpark.crashAt(TestSpark.rollOf(vPathA.resolve("vectors")))(vA.compact()))
     intercept[IllegalArgumentException](vA.probe(queries, k = 3))
+    intercept[IllegalArgumentException](vA.update(v2.toSeq.toDF("vec_id", "embedding"), 2L))
     vA.compact()
     assert(batchParts(vPathA.resolve("vectors")) == Seq("batch=0"),
       "vector batches did not fold to base")
@@ -399,8 +404,10 @@ class StreamingRetrievalSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val iPre = ahits(iA.probeAdc(queries, 2, 5, 40))
     assert(iPre.nonEmpty, "vacuous ivf fixture")
-    intercept[IllegalStateException](iA.compact(failAfterStage = true))
+    intercept[IllegalStateException](
+      TestSpark.crashAt(TestSpark.rollOf(iPathA.resolve("vectors")))(iA.compact()))
     intercept[IllegalArgumentException](iA.probeAdc(queries, 2, 5, 40))
+    intercept[IllegalArgumentException](iA.update(v2.toSeq.toDF("vec_id", "embedding"), 2L))
     iA.compact()
     assert(batchParts(iPathA.resolve("vectors")) == Seq("batch=0"),
       "ivf batches did not fold to base")

@@ -17,14 +17,25 @@ object TestSpark {
 
   private val JobTag = "graft.test.jobTag"
 
-  /** Runs `body` and throws IllegalStateException at the first durable
-    * commit step it reaches ([[graft.store.Commit.hook]]): for a
-    * single-commit protocol, the widest crash window, with every write
-    * done and nothing published. */
-  def crashAtFirstCommit(body: => Unit): Unit = {
-    graft.store.Commit.hook.set(s => throw new IllegalStateException(s"injected crash before ${s.op}"))
+  /** Runs `body` and throws IllegalStateException before the first durable
+    * commit step ([[graft.store.Commit.hook]]) that `pred` accepts. */
+  def crashAt(pred: graft.store.Commit.Step => Boolean)(body: => Unit): Unit = {
+    graft.store.Commit.hook.set { s =>
+      if (pred(s)) throw new IllegalStateException(s"injected crash before ${s.op}")
+    }
     try body finally graft.store.Commit.hook.remove()
   }
+
+  /** A [[crashAt]] predicate for the first step of a staged-swap roll
+    * ([[graft.streaming.CompactSwap]]) whose live dirs include `live`: its
+    * force of the swapped dirs, after every swap and drop and before the
+    * marker is deleted. */
+  def rollOf(live: java.nio.file.Path): graft.store.Commit.Step => Boolean =
+    s => s.op == "force" && s.paths.contains(live)
+
+  /** [[crashAt]] the first commit step: for a single-commit protocol, the
+    * widest crash window, with every write done and nothing published. */
+  def crashAtFirstCommit(body: => Unit): Unit = crashAt(_ => true)(body)
 
   /** Runs `body` and returns its result with the number of Spark jobs it
     * launched. Jobs are told apart by a local property set on this thread
