@@ -540,14 +540,17 @@ object DailyIncrement {
         maxAddedBatch(spark, outDir)
       else nextBatchNo(spark, outDir)
 
-    // `wrote`: the artifact dirs the step writes, forced by its marker's
-    // seal; the index steps pass none, as their own pointer commit forces
-    // what it publishes
+    // `wrote`: the artifact dirs the step writes; its marker's seal forces
+    // each dir and the paths the step added under it (an overwrite writes
+    // new file names too), not the history it appends to. The index steps
+    // pass none, as their own pointer commit forces what it publishes.
     def step(name: String, wrote: String*)(body: => Unit): Unit = {
       val marker = java.nio.file.Paths.get(pend, s"$name.done")
       if (!java.nio.file.Files.exists(marker)) {
+        val dirs = wrote.map(java.nio.file.Paths.get(_))
+        val before = dirs.flatMap(FileTree.all).toSet
         body
-        Commit.seal(marker, wrote.flatMap(d => FileTree.all(java.nio.file.Paths.get(d))))
+        Commit.seal(marker, dirs.flatMap(FileTree.all).filter(p => dirs.contains(p) || !before(p)))
       }
       if (failAfter.contains(name))
         throw new IllegalStateException(s"injected crash after $name append")

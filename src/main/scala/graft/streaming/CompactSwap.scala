@@ -14,8 +14,8 @@ import graft.store.{Commit, FileTree}
   *
   * Crash windows:
   *  - before the seal's `create`: leftover staged dirs, live layout
-  *    untouched — the next compact clears them and recomputes; readers
-  *    are unaffected.
+  *    untouched — the next compact clears them, even when it then finds
+  *    the layout up to date; readers are unaffected.
   *  - after it: [[Commit.seal]] forced every staged file before creating
   *    the marker, so a marker always names complete, durable staged dirs.
   *    [[roll]] is idempotent: a staged dir that still exists is swapped in
@@ -29,16 +29,17 @@ import graft.store.{Commit, FileTree}
   */
 private[graft] object CompactSwap {
 
-  /** The whole protocol: roll a crashed swap forward; return if
-    * `upToDate` (read after that recovery); otherwise clear the staged
-    * dirs, run `stage` to write them, seal `marker` over every staged
-    * file, and [[roll]]. `swaps` are (live, staged) pairs; `drops` are
-    * deleted once the swap is in. */
+  /** The whole protocol: roll a crashed swap forward; clear the staged
+    * dirs (without a marker they are a crashed stage's leftovers); return
+    * if `upToDate` (read after that recovery); otherwise run `stage` to
+    * write the staged dirs, seal `marker` over every staged file, and
+    * [[roll]]. `swaps` are (live, staged) pairs; `drops` are deleted once
+    * the swap is in. */
   def compact(marker: Path, swaps: Seq[(Path, Path)], drops: Seq[Path],
       upToDate: => Boolean)(stage: => Unit): Unit = {
     recover(marker, swaps, drops)
-    if (upToDate) return
     swaps.foreach { case (_, staged) => FileTree.deleteRecursively(staged) }
+    if (upToDate) return
     stage
     Commit.seal(marker, swaps.flatMap { case (_, staged) => FileTree.all(staged) })
     roll(marker, swaps, drops)

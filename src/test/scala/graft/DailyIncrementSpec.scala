@@ -1158,10 +1158,26 @@ class DailyIncrementSpec extends AnyFunSuite {
     val staged = DailyIncrement.stage(spark, batch, embs, crashDir,
       graft.functions.Tokenizer.Whitespace)
     assert(staged == clean.nBatchKept, "staged kept set != clean run's")
-    val boom = intercept[IllegalStateException] {
+    val curatedDir = java.nio.file.Paths.get(s"$crashDir/curated")
+    val curatedBefore = graft.store.FileTree.all(curatedDir).toSet
+    val trace = Vector.newBuilder[graft.store.Commit.Step]
+    graft.store.Commit.hook.set(trace += _)
+    val boom = try intercept[IllegalStateException] {
       DailyIncrement.applyPending(spark, crashDir, failAfter = Some("curated"))
-    }
+    } finally graft.store.Commit.hook.remove()
     assert(boom.getMessage.contains("injected"))
+    // the curated.done seal forces the files the append added and the dir,
+    // not the manifest history it appended to
+    val steps = trace.result()
+    val sealAt = steps.indexWhere(s =>
+      s.op == "create" && s.paths.head.getFileName.toString == "curated.done")
+    assert(sealAt > 0 && steps(sealAt - 1).op == "force", s"curated.done not sealed: $steps")
+    val forced = steps(sealAt - 1).paths.toSet
+    val added = graft.store.FileTree.all(curatedDir).toSet -- curatedBefore
+    assert(added.nonEmpty && added.subsetOf(forced),
+      s"curated files named before forced: ${added -- forced}")
+    assert((forced & curatedBefore) == Set(curatedDir),
+      s"the seal re-forced committed files: ${(forced & curatedBefore) - curatedDir}")
     // the drift the crash creates: manifest grew, bm25 stats did not
     val manifestN = spark.read.parquet(s"$crashDir/curated").count()
     val cleanManifestN = spark.read.parquet(s"$cleanDir/curated").count()

@@ -151,7 +151,10 @@ class MaintainedOverlapIndexSpec extends AnyFunSuite {
       "the stream-del should have staged a tombstone set")
 
     intercept[IllegalStateException](
-      TestSpark.crashAt(TestSpark.rollOf(rootA.resolve("occ")))(a.compact()))
+      TestSpark.crashAt(TestSpark.compactSealed)(a.compact()))
+    assert(Files.exists(rootA.resolve("occ_compact")) &&
+      batchParts(rootA) == Seq("batch=0", "batch=1"),
+      "the crash should leave the staged dir unswapped")
     intercept[IllegalArgumentException](a.runsProbe(evalDocs, minRun))
     intercept[IllegalArgumentException](
       a.update(Seq((999002L, "alpha beta gamma", "add")).toDF("doc_id", "text", "op"), 2L))

@@ -173,10 +173,14 @@ class MaintainedShingleIndexSpec extends AnyFunSuite {
     assert(Files.exists(rootA.resolve("eos/batch-1/tombstones")),
       "the stream-del should have staged a tombstone set")
 
-    // crash in the roll, after the seal: probes/updates fail loud, the
-    // retry rolls forward
+    // crash after the seal, before any swap: probes/updates fail loud, the
+    // retry rolls the staged dirs forward
     intercept[IllegalStateException](
-      TestSpark.crashAt(TestSpark.rollOf(rootA.resolve("pairs")))(a.compact()))
+      TestSpark.crashAt(TestSpark.compactSealed)(a.compact()))
+    assert(Files.exists(rootA.resolve("pairs_compact")) &&
+      Files.exists(rootA.resolve("counts_compact")) &&
+      batchParts(rootA, "pairs") == Seq("batch=0", "batch=1"),
+      "the crash should leave the staged dirs unswapped")
     intercept[IllegalArgumentException](a.probe(probeBatch, 0.6))
     intercept[IllegalArgumentException](
       feed(a, 2L, rowsOf(350, 360)))
@@ -196,6 +200,12 @@ class MaintainedShingleIndexSpec extends AnyFunSuite {
     a.compact()
     assert(Files.getLastModifiedTime(rootA.resolve("pairs")) == foldStamp,
       "re-compact of an already-folded base rewrote it")
+    // a staged dir with no marker is a crashed stage's leftover: cleared
+    // even when the layout is up to date
+    Files.createDirectories(rootA.resolve("pairs_compact"))
+    a.compact()
+    assert(!Files.exists(rootA.resolve("pairs_compact")),
+      "an up-to-date compact kept a pre-seal leftover staged dir")
 
     // the feed continues over the folded base exactly like the twin that
     // never compacted — including a re-requested del of the folded-away id

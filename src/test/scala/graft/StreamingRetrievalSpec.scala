@@ -331,7 +331,9 @@ class StreamingRetrievalSpec extends AnyFunSuite {
     val bmPre = scores(bmA.probe(fx))
     assert(bmPre.nonEmpty, "vacuous bm25 fixture")
     intercept[IllegalStateException](
-      TestSpark.crashAt(TestSpark.rollOf(bmPathA.resolve("postings")))(bmA.compact()))
+      TestSpark.crashAt(TestSpark.compactSealed)(bmA.compact()))
+    assert(Files.exists(bmPathA.resolve("postings_compact")),
+      "the crash should leave the staged dir unswapped")
     intercept[IllegalArgumentException](bmA.probe(fx))
     intercept[IllegalArgumentException](bmA.update(extra.toDF("doc_id", "text"), 2L))
     bmA.compact()
@@ -364,7 +366,10 @@ class StreamingRetrievalSpec extends AnyFunSuite {
     assert(vPre.nonEmpty, "vacuous vector fixture")
     assert(batchParts(vPathA.resolve("vectors")) == Seq("batch=0", "batch=1"))
     intercept[IllegalStateException](
-      TestSpark.crashAt(TestSpark.rollOf(vPathA.resolve("vectors")))(vA.compact()))
+      TestSpark.crashAt(TestSpark.compactSealed)(vA.compact()))
+    assert(Files.exists(vPathA.resolve("vectors_compact")) &&
+      batchParts(vPathA.resolve("vectors")) == Seq("batch=0", "batch=1"),
+      "the crash should leave the staged dir unswapped")
     intercept[IllegalArgumentException](vA.probe(queries, k = 3))
     intercept[IllegalArgumentException](vA.update(v2.toSeq.toDF("vec_id", "embedding"), 2L))
     vA.compact()
@@ -405,7 +410,10 @@ class StreamingRetrievalSpec extends AnyFunSuite {
     val iPre = ahits(iA.probeAdc(queries, 2, 5, 40))
     assert(iPre.nonEmpty, "vacuous ivf fixture")
     intercept[IllegalStateException](
-      TestSpark.crashAt(TestSpark.rollOf(iPathA.resolve("vectors")))(iA.compact()))
+      TestSpark.crashAt(TestSpark.compactSealed)(iA.compact()))
+    assert(Files.exists(iPathA.resolve("vectors_compact")) &&
+      batchParts(iPathA.resolve("vectors")) == Seq("batch=0", "batch=1"),
+      "the crash should leave the staged dir unswapped")
     intercept[IllegalArgumentException](iA.probeAdc(queries, 2, 5, 40))
     intercept[IllegalArgumentException](iA.update(v2.toSeq.toDF("vec_id", "embedding"), 2L))
     iA.compact()

@@ -26,12 +26,12 @@ object TestSpark {
     try body finally graft.store.Commit.hook.remove()
   }
 
-  /** A [[crashAt]] predicate for the first step of a staged-swap roll
-    * ([[graft.streaming.CompactSwap]]) whose live dirs include `live`: its
-    * force of the swapped dirs, after every swap and drop and before the
-    * marker is deleted. */
-  def rollOf(live: java.nio.file.Path): graft.store.Commit.Step => Boolean =
-    s => s.op == "force" && s.paths.contains(live)
+  /** A [[crashAt]] predicate for the last step of a staged-swap
+    * compaction's seal ([[graft.streaming.CompactSwap]]): the marker
+    * exists over complete staged dirs and nothing is swapped yet, so the
+    * next compact() must roll the swap forward from the staged dirs. */
+  val compactSealed: graft.store.Commit.Step => Boolean =
+    s => s.op == "dirsync" && s.paths.head.getFileName.toString == "_compact_staged"
 
   /** [[crashAt]] the first commit step: for a single-commit protocol, the
     * widest crash window, with every write done and nothing published. */
