@@ -135,6 +135,21 @@ object Bm25Index {
       Seq(smalls, if (lastBatch < 0) postingsRel else s"$postingsRel/batch=${lastBatch + 1}"))
   }
 
+  /** [[append]] as batch `target`: a no-op once the pointer's committed
+    * batch already reaches it, so a marker-driven retry of a committed
+    * append never folds the batch in twice (the ShingleIndex.appendAs
+    * contract). `target` is staged by the caller as [[lastBatch]] + 1. */
+  def appendAs(batch: DataFrame, path: String, target: Long, buckets: Int = 32): Unit = {
+    val last = lastBatch(path)
+    if (last >= target) return
+    require(last < 0 || last == target - 1,
+      s"appendAs($target) on '$path' at committed batch $last — the staged target is stale")
+    append(batch, path, buckets)
+  }
+
+  /** The last committed postings batch (−1 on a legacy unbatched layout). */
+  private[graft] def lastBatch(path: String): Long = currentState(path)._4
+
   /** BM25 scores of `qterms` (query_id, term) against the index:
     * (query_id, doc_id, score_scaled), reading only the pruned buckets.
     * Equals the from-scratch text_bm25 scoring on the same corpus at the

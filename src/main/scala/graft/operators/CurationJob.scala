@@ -10,13 +10,16 @@ import graft.queries.CorpusQueries
 /** The end-to-end curation RUN — what a user executes over a raw crawl to
   * produce everything a training + retrieval stack consumes, in one job:
   *
-  *   curate (quality → exact dedup → decontam; the pipeline_curate DAG,
-  *   same code path via CorpusQueries.curatedTrain)
+  *   curate ([[CurationDag]]: quality → exact dedup → decontam, then the
+  *   optional near-dup and token-rewrite stages — the DAG the
+  *   pipeline_curate* keys pack and the pipeline_audit* keys trace)
   *     ├─ training shards   PackedExport   → outDir/shards/ (hive shard=K)
   *     ├─ lexical index     Bm25Index      → outDir/bm25/
   *     ├─ vector index      VectorIndex    → outDir/vectors/ (kept subset)
   *     ├─ curated manifest  parquet        → outDir/curated/ (doc_id,
-  *     │  n_tokens — the join surface for lineage/audits)
+  *     │  n_tokens, raw-text digest — the join surface for lineage/audits)
+  *     ├─ eval benchmark    parquet        → outDir/evalh/ (the shingles
+  *     │  the decontam stage checked against)
   *     ├─ selection model   DsirModel      → outDir/dsir/ (fit on the
   *     │  KEPT set with the en split as target — the model the next
   *     │  day's batches score against, batch-side via StreamingDsir)
@@ -29,16 +32,15 @@ import graft.queries.CorpusQueries
   *        tokenizer_vocab/ (piece frequencies under the frozen table —
   *        the vocab.json half of the artifact)
   *
-  * One corpus scan feeds every branch: the curated set is cached at the
-  * stage boundary (inside curatedTrain), so the scan → quality → dedup →
-  * decontam prefix runs once and each export only adds its own work
-  * (pack's GlobalCumsum, bm25's tokenize aggs, the vector semi-join, the
-  * model fits over the cached set). All outputs are mutually CONSISTENT
-  * by construction — same kept set — which CurationJobSpec pins against
-  * the oracle-checked pipeline_curate query (shards ≡ its packing
-  * columns, bm25 stats count ≡ kept docs, vector ids ⊆ kept ids, DSIR
-  * model counts ≡ a direct fit of the kept set, classifier weights
-  * reload bit-identically).
+  * One DAG feeds every branch: the final kept set is cut from the DAG
+  * (materialized once, its plan a leaf), the DAG's stage caches serve the
+  * index builds over its earlier stages, and [[CurationDag.release]]
+  * drops them at the end. All outputs are mutually CONSISTENT by
+  * construction — same kept set — which CurationJobSpec pins against the
+  * oracle-checked pipeline_curate* keys (shards ≡ their packing columns,
+  * bm25 stats count ≡ kept docs, vector ids ⊆ kept ids, DSIR model counts
+  * ≡ a direct fit of the kept set, classifier weights reload
+  * bit-identically).
   */
 object CurationJob {
   final case class Result(
@@ -62,46 +64,29 @@ object CurationJob {
   def loadTokenizer(spark: SparkSession, outDir: String): Tokenizer =
     Tokenizer.LearnedNative(BpeTrainer.load(spark, s"$outDir/tokenizer"))
 
-  /** `nearDupIndex` switches the optional NEAR-DUP stage on: after the
-    * decontam stage, documents that are near-duplicates (exact word-3-gram
-    * jaccard ≥ `nearDupThreshold`) of a surviving lower-id doc also drop
-    * (lowest-id-wins clustering — the pipeline_curate_neardup algebra),
-    * AND the named [[ShingleIndex]] materializes over the PRE-near-dup
-    * survivors so DailyIncrement's batch gate can probe the same graph a
-    * from-scratch rebuild would build (a batch doc near-duplicating a
-    * day-0 doc that itself LOST the day-0 near-dup verdict must still
-    * drop — indexing only keepers would miss that edge).
+  /** The three index options also switch the DAG's optional stages on
+    * (see [[CurationDag]]); each names the standing index DailyIncrement
+    * probes so a batch gets the same verdict at |batch| cost:
+    *
+    *  - `nearDupIndex` (near-dup stage): a [[ShingleIndex]] over the
+    *    PRE-near-dup survivors — a batch doc near-duplicating a day-0 doc
+    *    that itself LOST the day-0 verdict must still drop, so indexing
+    *    only keepers would miss that edge;
+    *  - `benchIndex` (scrub stage): an [[OverlapIndex]] over the surviving
+    *    eval docs, the positioned benchmark each batch scrubs against;
+    *  - `spanIndex` (span keep-first stage): a [[ShingleIndex]] over the
+    *    final kept set's RAW text, the passage-claim surface (keeper = min
+    *    id = first arrival, so arrival-order keep-first ≡ union rebuild).
+    *
+    * With a rewrite stage on, every downstream artifact (shards, bm25,
+    * dsir, tokenizer, vocab) consumes the rewritten text and post-rewrite
+    * token counts, while the curated manifest keeps the RAW-text digest
+    * (the dedup surface stays content-addressed by what ARRIVED, so a
+    * re-delivered raw doc still anti-joins out).
     *
     * `overlapIndex` names an [[OverlapIndex]] to materialize over the
     * FINAL kept set — the standing positioned-shingle artifact
-    * DailyIncrement extends per batch, so "a new benchmark was adopted —
-    * which standing docs share ≥N-token runs with it?" stays probe-cost
-    * on the daily tree.
-    *
-    * `benchIndex` switches the token-level SCRUB stage on (the
-    * pipeline_curate_scrub algebra): after every drop gate, runs of
-    * ≥[[CorpusQueries.MinRunTokens]] tokens shared with the gate/dedup-
-    * surviving eval split are EXCISED from the surviving docs — every
-    * downstream artifact (shards, bm25, dsir, tokenizer, vocab) consumes
-    * the scrubbed text and post-scrub token counts (the training surface
-    * is what a trainer actually reads), while the curated manifest keeps
-    * the RAW-text digest (the dedup surface stays content-addressed by
-    * what ARRIVED, so a re-delivered raw doc still anti-joins out).
-    * The named [[OverlapIndex]] materializes over the eval docs — the
-    * standing positioned BENCHMARK artifact DailyIncrement's scrub stage
-    * probes at |batch| cost and extends with each batch's own eval
-    * survivors (the evalh sequential-union doctrine, mirrored).
-    *
-    * `spanIndex` switches the SPAN KEEP-FIRST stage on (the
-    * pipeline_curate_spans algebra): any trigram duplicated among the
-    * final kept docs keeps its lowest-id copy and every other occurrence
-    * is excised. Composes with `benchIndex`: both text-rewriting stages
-    * judge RAW text (like near-dup and the content-addressed digest), so
-    * their excision sets UNION into one token rebuild. The named
-    * [[ShingleIndex]] materializes over the final kept set's RAW text —
-    * the standing passage-claim surface DailyIncrement's span stage
-    * probes at |batch| cost (arrival-order keep-first ≡ union rebuild,
-    * because keeper = min id = first arrival). */
+    * DailyIncrement extends per batch. */
   def run(spark: SparkSession, sfDir: String, outDir: String,
       tok: Tokenizer = Tokenizer.Whitespace,
       docFilter: org.apache.spark.sql.Column = lit(true),
@@ -112,68 +97,15 @@ object CurationJob {
       benchIndex: Option[String] = None,
       spanIndex: Option[String] = None): Result = {
     graft.GraftExtensions.register(spark)
-    // Stage-boundary binding. With NO optional stage, `.cache()` suffices
-    // (single linear DAG). With any optional stage on, the boundaries must
-    // be LINEAGE CUTS, not caches: `kept` re-references `ndKept` several
-    // times (scrub input, digest join-back, and twice via the positioned/
-    // occurrence legs), each reference re-expanding curatedTrain's own
-    // multi-reference DAG — and Catalyst analyzed plans are trees, not
-    // DAGs, so node count multiplies per stage. Execution was never the
-    // problem (the cache bounds that); the DRIVER dies merely FORMATTING
-    // the analyzed plan (explainString OOM — the round-13 abort).
-    // `localCheckpoint(true)` truncates the plan to a LogicalRDD leaf —
-    // the ConnectedComponents.clustersPropagate doctrine, one level up.
-    // Storage is MEMORY_AND_DISK like the cache it replaces; on a shared
-    // long-lived session the checkpoint RDDs release when the frames go
-    // unreachable (ContextCleaner), same footprint class as the
-    // unpersist() below. (On a lossy cluster prefer the stage-to-parquet
-    // form — DailyIncrement's `_increment_pending` — which this job
-    // effectively gets too: every daily consumer reads the parquet
-    // artifacts, never this in-memory lineage.)
-    val cutLineage =
-      nearDupIndex.isDefined || benchIndex.isDefined || spanIndex.isDefined
-    def stageBound(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      if (cutLineage) df.localCheckpoint(true) else df.cache()
-    val preNearDup = stageBound(CorpusQueries.curatedTrain(spark, sfDir, tok, docFilter))
-    val ndKept = nearDupIndex match {
-      case None => preNearDup
-      case Some(_) =>
-        stageBound(CorpusQueries.nearDupSurvivors(preNearDup, nearDupThreshold))
-    }
-    // optional token-level text-rewriting stages — LAST (near-dup judges
-    // RAW text, and a scrub changing jaccard verdicts would diverge from
-    // the oracle-checked stage order). Both the benchmark scrub and the
-    // span keep-first stage compute dup starts on RAW text, so their
-    // excision sets union into ONE rebuild. `digest` stays the raw-text
-    // md5 (the content-addressed dedup surface is what ARRIVED).
-    val kept = if (benchIndex.isEmpty && spanIndex.isEmpty)
-      ndKept.withColumn("digest", md5(col("text")))
-    else {
-      val nd = ndKept.select(col("doc_id"), col("text"))
-      val benchStarts = benchIndex.map { _ =>
-        val evalDocs = CorpusQueries.curatedEvalDocs(spark, sfDir, tok, docFilter)
-        OverlapIndex.scrubStartRows(OverlapIndex.positioned(nd),
-          OverlapIndex.positioned(evalDocs), CorpusQueries.MinRunTokens)
-      }
-      val spanStarts = spanIndex.map { _ =>
-        graft.queries.DedupQueries.spanKeepFirstStartRows(
-          nd.select(col("doc_id"),
-            posexplode(graft.queries.CrossHash.shingleHashes(col("text")))
-              .as(Seq("q", "h"))))
-      }
-      val dupStarts = (benchStarts.toSeq ++ spanStarts.toSeq)
-        .reduce(_ unionByName _).distinct()
-        .groupBy(col("doc_id"))
-        .agg(sort_array(collect_list(col("q"))).as("dup_starts"))
-      stageBound(graft.queries.DedupQueries.scrubRebuild(spark, nd, dupStarts)
-        .join(ndKept.select(col("doc_id"), md5(col("text")).as("digest")), "doc_id")
+    val dag = new CurationDag(spark, sfDir, tok, docFilter)(nearDupIndex.isDefined,
+      benchIndex.isDefined, spanIndex.isDefined, nearDupThreshold)
+    // the final training docs, rewritten text and post-rewrite counts;
+    // `digest` stays the RAW-text md5 (the content-addressed dedup surface)
+    val kept = dag.cut(
+      if (benchIndex.isEmpty && spanIndex.isEmpty) dag.survivors.withColumn("digest", md5(col("text")))
+      else dag.rewritten.join(dag.survivors.select(col("doc_id"), md5(col("text")).as("digest")), "doc_id")
         .select(col("doc_id"), col("scrub_text").as("text"),
           (col("n_tokens") - col("n_removed")).as("n_tokens"), col("digest")))
-    }
-    // The pin that the cuts above stay in place: `kept` today is a
-    // LogicalRDD leaf (or the linear cached DAG); remove a checkpoint and
-    // this fails loud, named, BEFORE any consumer formats the plan.
-    graft.plans.PlanGuard.assertBounded(kept, "CurationJob.kept")
     val curatedDir = s"$outDir/curated"
     // digest third: DailyIncrement's corpus-precedes-batch exact dedup
     // anti-joins tomorrow's batch against it (content-addressed manifest)
@@ -218,11 +150,10 @@ object CurationJob {
     // ship identical weights.
     // persist the eval-shingle benchmark the decontam stage ACTUALLY
     // checked against — derived from the gate/dedup survivors, not the
-    // raw table (curatedEvalH hits the same curatedKept cache entry).
-    // DailyIncrement loads this instead of re-deriving from raw docs,
-    // so day0 and the daily path apply the identical benchmark.
+    // raw table. DailyIncrement loads this instead of re-deriving from
+    // raw docs, so day0 and the daily path apply the identical benchmark.
     val evalhDir = s"$outDir/evalh"
-    CorpusQueries.curatedEvalH(spark, sfDir, tok, docFilter)
+    dag.evalH
       .withColumn("added_batch", lit(0L))
       .write.mode("overwrite").parquet(evalhDir)
     val qualityDir = s"$outDir/quality"
@@ -249,7 +180,7 @@ object CurationJob {
     // scaladoc for why keepers-only would under-drop future batches) and
     // the positioned overlap artifact over the final kept set
     nearDupIndex.foreach { t =>
-      ShingleIndex.materialize(preNearDup.select(col("doc_id"), col("text")), t)
+      ShingleIndex.materialize(dag.train.select(col("doc_id"), col("text")), t)
       // record under the tree so Takedown reaches this index WITHOUT the
       // caller remembering its name — a forgotten parameter would leave
       // the dedup surface acting on fingerprints of forgotten content
@@ -265,8 +196,7 @@ object CurationJob {
     // takedown of an eval doc releases its runs without the caller
     // remembering the index name.
     benchIndex.foreach { t =>
-      OverlapIndex.materialize(
-        CorpusQueries.curatedEvalDocs(spark, sfDir, tok, docFilter), t)
+      OverlapIndex.materialize(dag.evalDocs, t)
       Takedown.recordIndex(outDir, "overlap", t)
     }
     // the standing passage-claim surface for the span stage: the FINAL
@@ -276,13 +206,11 @@ object CurationJob {
     // wrongly keep it). Recorded kind "shingle": a takedown releases the
     // forgotten doc's passage claims, so re-submitted content survives.
     spanIndex.foreach { t =>
-      ShingleIndex.materialize(ndKept.select(col("doc_id"), col("text")), t)
+      ShingleIndex.materialize(dag.survivors.select(col("doc_id"), col("text")), t)
       Takedown.recordIndex(outDir, "shingle", t)
     }
     val n = kept.count()
-    kept.unpersist(); ndKept.unpersist(); preNearDup.unpersist()
-    // release the stage-boundary cache curatedTrain/curatedEvalH share
-    CorpusQueries.curatedKept(spark, sfDir, tok, docFilter).unpersist()
+    dag.release()
     Result(n, nShards, curatedDir, shardsDir, bm25Dir, vectorDir,
       dsirDir, qualityDir, quality, evalhDir, tokenizerDir)
   }

@@ -16,7 +16,7 @@ import graft.store.{Commit, FileTree}
   *
   * One batch-sized pass drives every artifact:
   *
-  *   batch → quality gate (curatedTrain's shared spelling)
+  *   batch → quality gate (CorpusQueries.qualityGate, the day-0 rule)
   *         → exact dedup, corpus precedes batch: digests the curated
   *           manifest already holds anti-join OUT (the manifest is
   *           content-addressed for exactly this), then lowest doc_id
@@ -118,12 +118,12 @@ object DailyIncrement {
     *     append-equals-rebuild pin.
     *  3. COMMIT — the staging dir is deleted; the tree is quiescent.
     *
-    * The residual atomicity unit is one commit per marker step: every
-    * step but one is a single Spark job, and the bm25 step is
-    * single-commit internally too ([[Bm25Index.append]]'s
-    * batch-partitioned postings + pointer-swap — a crash inside it
-    * rolls back to the pre-append index and the marker-driven retry is
-    * the normal path).
+    * A step whose marker is missing runs again, so every step body is
+    * idempotent: a file append first deletes what a crashed attempt added
+    * (the dir's listing is committed before the first attempt), a
+    * read-modify-write step overwrites from a merge staged once, and the
+    * index steps append as a staged target batch (`appendAs` no-ops once
+    * the index pointer reaches it).
     *
     * Replaying an already-committed batch stays a no-op through the
     * content-addressed manifest: every digest anti-joins out, the
@@ -396,6 +396,7 @@ object DailyIncrement {
     // (the batchno lesson applied to the index appends — appendAs no-ops
     // when the pointer already reached the staged target)
     val optLines = Seq(
+      Some(s"bm25_target=${Bm25Index.lastBatch(s"$outDir/bm25") + 1}"),
       nearDupIndex.map(t => s"neardup_table=$t"),
       nearDupIndex.map { t =>
         CatalogCommit.requireCommitted(spark, t)
@@ -414,9 +415,8 @@ object DailyIncrement {
       spanIndex.map { t =>
         s"span_target=${CatalogCommit.readLastBatch(spark, t).get + 1}"
       }).flatten
-    if (optLines.nonEmpty)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(pend, "opts"), optLines.mkString("\n"))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(pend, "opts"), optLines.mkString("\n"))
     batchEvalH.write.parquet(s"$pend/evalh")
     val keptStaged = spark.read.parquet(s"$pend/kept")
     embeddings
@@ -540,23 +540,46 @@ object DailyIncrement {
         maxAddedBatch(spark, outDir)
       else nextBatchNo(spark, outDir)
 
-    // `wrote`: the artifact dirs the step writes; its marker's seal forces
-    // each dir and the paths the step added under it (an overwrite writes
-    // new file names too), not the history it appends to. The index steps
-    // pass none, as their own pointer commit forces what it publishes.
-    def step(name: String, wrote: String*)(body: => Unit): Unit = {
+    // `wrote`: the artifact dirs the step writes. Their listing is
+    // committed under the staging dir before the first attempt, each path
+    // named relative to its dir, so a retry through another spelling of
+    // `outDir` reads the same names. The marker's seal forces each dir and
+    // the paths the listing does not name (an overwrite writes new file
+    // names too), not the history it appends to. An `append` step first
+    // deletes those paths on a retry (never a `wrote` dir itself): a crash
+    // after the append and before the seal would otherwise apply the
+    // batch twice. The index steps pass no dir, as their own pointer
+    // commit forces what it publishes.
+    def step(name: String, wrote: Seq[String] = Nil, append: Boolean = false)(body: => Unit): Unit = {
       val marker = java.nio.file.Paths.get(pend, s"$name.done")
       if (!java.nio.file.Files.exists(marker)) {
         val dirs = wrote.map(java.nio.file.Paths.get(_))
-        val before = dirs.flatMap(FileTree.all).toSet
+        def live = dirs.flatMap(d => FileTree.all(d).map(p => s"${d.getFileName}/${d.relativize(p)}" -> p))
+        val listing = java.nio.file.Paths.get(pend, s"$name.listing")
+        if (dirs.nonEmpty && !java.nio.file.Files.exists(listing))
+          Commit.replace(listing, live.map(_._1).mkString("\n"))
+        val before = if (dirs.isEmpty) Set.empty[String]
+          else java.nio.file.Files.readString(listing).linesIterator.toSet
+        if (append) live.collect { case (k, p) if !before(k) && !dirs.contains(p) => p }
+          .foreach(FileTree.deleteRecursively)
         body
-        Commit.seal(marker, dirs.flatMap(FileTree.all).filter(p => dirs.contains(p) || !before(p)))
+        Commit.seal(marker, live.collect { case (k, p) if dirs.contains(p) || !before(k) => p })
       }
       if (failAfter.contains(name))
         throw new IllegalStateException(s"injected crash after $name append")
     }
+    // A read-modify-write step's merged table, computed once: staged under
+    // the staging dir (its _SUCCESS file marks it complete), so a retry
+    // overwrites the live dir from the same merge instead of merging the
+    // batch in again.
+    def merged(name: String)(merge: => org.apache.spark.sql.DataFrame) = {
+      val at = s"$pend/$name"
+      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(at, "_SUCCESS")))
+        merge.write.mode("overwrite").parquet(at)
+      spark.read.parquet(at)
+    }
 
-    step("curated", s"$outDir/curated") {
+    step("curated", Seq(s"$outDir/curated"), append = true) {
       kept.select($"doc_id", $"n_tokens", $"digest")
         .withColumn("added_batch", lit(batchNo))
         .write.mode("append").parquet(s"$outDir/curated")
@@ -564,7 +587,7 @@ object DailyIncrement {
     // the monotonic batch counter (nextBatchNo's scrub-proof source):
     // advances to the id just used, never backwards — a later
     // whole-batch Takedown.scrub can drop max(added_batch) but not this
-    step("batchctr", s"$outDir/batchctr") {
+    step("batchctr", Seq(s"$outDir/batchctr")) {
       val prev = PackedExport.readBase(spark, s"$outDir/batchctr").getOrElse(0L)
       PackedExport.writeBase(spark, s"$outDir/batchctr", math.max(prev, batchNo))
     }
@@ -573,12 +596,12 @@ object DailyIncrement {
     // survivors of batches 1..k — the sequential-union semantics the
     // header documents). Cross-batch duplicate hashes are fine: every
     // read side goes through .distinct().
-    step("evalh", s"$outDir/evalh") {
+    step("evalh", Seq(s"$outDir/evalh"), append = true) {
       spark.read.parquet(s"$pend/evalh")
         .withColumn("added_batch", lit(batchNo))
         .write.mode("append").parquet(s"$outDir/evalh")
     }
-    step("shards", s"$outDir/shards") {
+    step("shards", Seq(s"$outDir/shards"), append = true) {
       val budget = CorpusQueries.PackBudget
       // same fail-fast as PackedExport.writeShards: an oversized doc
       // would jump the prefix sum across whole budgets and silently skip
@@ -590,39 +613,13 @@ object DailyIncrement {
           s"${oversized.headOption.map(_.get(1)).orNull} tokens > budget $budget — " +
           "chunk oversized docs (doc_chunk) before packing")
       if (!kept.isEmpty) {
-        GlobalCumsum.runningBefore(
-            kept.select($"doc_id", $"n_tokens"), "doc_id", "n_tokens", "cb")
-          .select($"doc_id", $"n_tokens",
-            expr(s"CAST((cb + $base) DIV $budget AS BIGINT)").as("shard"),
-            (($"cb" + base) % budget).as("shard_offset"))
+        PackedExport.pack(kept.select($"doc_id", $"n_tokens"), base = base, budget = budget)
           .write.partitionBy("shard").mode("append").parquet(s"$outDir/shards")
       }
     }
-    step("packbase", s"$outDir/packbase") {
+    step("packbase", Seq(s"$outDir/packbase")) {
       PackedExport.writeBase(spark, s"$outDir/packbase",
         base + kept.agg(coalesce(sum($"n_tokens"), lit(0L))).head.getLong(0))
-    }
-    step("bm25") {
-      Bm25Index.append(kept.select($"doc_id", $"text"), s"$outDir/bm25")
-    }
-    step("vectors", s"$outDir/vectors") {
-      VectorIndex.append(
-        spark.read.parquet(s"$pend/vectors")
-          .select($"vec_id", $"embedding"),
-        s"$outDir/vectors")
-    }
-    step("dsir", s"$outDir/dsir") {
-      // read-append-write on the same path — the merged B-row table is
-      // collected to the driver (it is sketch-sized by construction) and
-      // re-created before the overwrite, so the write can never lazily
-      // consume the files it is replacing
-      val appended = DsirModel.append(
-        DsirModel.load(spark, s"$outDir/dsir"),
-        kept.select($"doc_id", $"text", $"lang"),
-        $"lang" === "en")
-      val pinned = spark.createDataFrame(
-        java.util.Arrays.asList(appended.collect(): _*), appended.schema)
-      DsirModel.write(pinned, s"$outDir/dsir")
     }
     // staged index-append options (absent on trees run without them and
     // on legacy staging dirs). appendAs is idempotent against the staged
@@ -635,6 +632,25 @@ object DailyIncrement {
         .filter(_.contains("=")).map { l =>
           val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1)
         }.toMap
+    }
+    step("bm25") {
+      val docs = kept.select($"doc_id", $"text")
+      opts.get("bm25_target") match {
+        case Some(t) => Bm25Index.appendAs(docs, s"$outDir/bm25", t.toLong)
+        case None => Bm25Index.append(docs, s"$outDir/bm25")
+      }
+    }
+    step("vectors", Seq(s"$outDir/vectors"), append = true) {
+      VectorIndex.append(
+        spark.read.parquet(s"$pend/vectors")
+          .select($"vec_id", $"embedding"),
+        s"$outDir/vectors")
+    }
+    step("dsir", Seq(s"$outDir/dsir")) {
+      DsirModel.write(merged("dsir_merged") {
+        DsirModel.append(DsirModel.load(spark, s"$outDir/dsir"),
+          kept.select($"doc_id", $"text", $"lang"), $"lang" === "en")
+      }, s"$outDir/dsir")
     }
     opts.get("neardup_table").foreach { t =>
       step("shingleidx") {
@@ -673,25 +689,21 @@ object DailyIncrement {
           t, opts("span_target").toLong)
       }
     }
-    step("tokvocab", s"$outDir/tokenizer_vocab") {
+    step("tokvocab", Seq(s"$outDir/tokenizer_vocab")) {
       // the tokenizer vocab is a MAINTAINED count table: the merge table
       // is frozen at day 0 (BpeTrainer.save's rationale), but piece
       // frequencies are mergeable, so each batch's pieces under the
       // frozen table fold in — the vocab always equals
       // BpeTrainer.vocabulary(all kept docs, day-0 merges), and
-      // Takedown.run subtracts from the same table exactly. Same
-      // collect-recreate-overwrite pin as the dsir step
-      // (vocabulary-sized).
+      // Takedown.run subtracts from the same table exactly.
       val vocabDir = s"$outDir/tokenizer_vocab"
       if (java.nio.file.Files.exists(java.nio.file.Paths.get(vocabDir))) {
-        val merges = BpeTrainer.load(spark, s"$outDir/tokenizer")
-        val merged = spark.read.parquet(vocabDir).select($"piece", $"cnt")
-          .unionByName(
-            BpeTrainer.vocabulary(kept.select($"doc_id", $"text"), merges))
-          .groupBy($"piece").agg(sum($"cnt").as("cnt"))
-        val vocabPinned = spark.createDataFrame(
-          java.util.Arrays.asList(merged.collect(): _*), merged.schema)
-        vocabPinned.write.mode("overwrite").parquet(vocabDir)
+        merged("tokvocab_merged") {
+          spark.read.parquet(vocabDir).select($"piece", $"cnt")
+            .unionByName(BpeTrainer.vocabulary(kept.select($"doc_id", $"text"),
+              BpeTrainer.load(spark, s"$outDir/tokenizer")))
+            .groupBy($"piece").agg(sum($"cnt").as("cnt"))
+        }.write.mode("overwrite").parquet(vocabDir)
       }
     }
 

@@ -23,6 +23,19 @@ import org.apache.spark.sql.functions._
   */
 object PackedExport {
 
+  /** Concat-and-chunk sequence packing, the one spelling every pack step
+    * uses: `docs` (with `orderKey` and `n_tokens`) stream in `orderKey`
+    * order into `budget`-token training sequences, the stream starting
+    * `base` tokens in. Returns `docs`' columns plus (shard, shard_offset),
+    * the doc's sequence and its token offset inside it. */
+  def pack(docs: DataFrame, orderKey: String = "doc_id", base: Long = 0L,
+      budget: Long = graft.queries.CorpusQueries.PackBudget): DataFrame = {
+    GlobalCumsum.runningBefore(docs, orderKey, "n_tokens", "cb")
+      .select(docs.columns.map(col) :+
+        expr(s"CAST((cb + $base) DIV $budget AS BIGINT)").as("shard") :+
+        ((col("cb") + base) % budget).as("shard_offset"): _*)
+  }
+
   /** Pack `docs` (doc_id, n_tokens) under `budget` tokens per training
     * sequence and write `outDir/shard=K/` partitions. Returns the shard
     * count.
@@ -47,11 +60,8 @@ object PackedExport {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
       return 0L
     }
-    val packed = GlobalCumsum.runningBefore(docs, "doc_id", "n_tokens", "cb")
-      .select(col("doc_id"), col("n_tokens"),
-        expr(s"CAST(cb DIV $budget AS BIGINT)").as("shard"),
-        (col("cb") % budget).as("shard_offset"))
-    packed.write.partitionBy("shard").mode("overwrite").parquet(outDir)
+    pack(docs.select(col("doc_id"), col("n_tokens")), budget = budget)
+      .write.partitionBy("shard").mode("overwrite").parquet(outDir)
     val spark = docs.sparkSession
     // partition-column inference types `shard=K` dirs as int — normalize
     spark.read.parquet(outDir)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueryModule, Tables}
 import graft.functions.Tokenizer
-import graft.operators.GlobalCumsum
+import graft.operators.{CurationDag, GlobalCumsum, PackedExport}
 import CrossHash._
 
 /** Corpus-level training-data-pipeline stages over the `documents` table —
@@ -121,7 +121,7 @@ object CorpusQueries extends QueryModule {
     * (doc_id, h) shingle index: (doc_id, n_shingles, n_contaminated).
     * The eval shingle set is benchmark-sized — AQE broadcasts it, no
     * mandated hint (PlanAuditSpec). */
-  private def contamination(sh: DataFrame): DataFrame = {
+  private[graft] def contamination(sh: DataFrame): DataFrame = {
     val evalH = sh.filter(col("doc_id") % EvalMod === 0).select(col("h")).distinct()
       .withColumn("hit", lit(1L))
     sh.filter(col("doc_id") % EvalMod =!= 0)
@@ -338,10 +338,8 @@ object CorpusQueries extends QueryModule {
       val cells = semCells(s, dir).withColumnRenamed("vec_id", "doc_id")
       val keyed = docs.join(cells, "doc_id")
         .withColumn("ord", $"cluster" * lit(1L << 40) + $"doc_id")
-      GlobalCumsum.runningBefore(keyed, "ord", "n_tokens", "cb")
-        .select($"doc_id", $"cluster", $"n_tokens",
-          expr(s"CAST(cb DIV $PackBudget AS BIGINT)").as("shard"),
-          ($"cb" % PackBudget).as("shard_offset"))
+      PackedExport.pack(keyed, "ord")
+        .select($"doc_id", $"cluster", $"n_tokens", $"shard", $"shard_offset")
     },
 
     // Deterministic length-weighted sampling: hash draw vs an integer
@@ -449,223 +447,42 @@ object CorpusQueries extends QueryModule {
     // (sample_weighted's doctrine) against the doc's semantic-cell rate.
     "pipeline_select" -> { (s, dir) => pipelineSelect(s, dir) },
 
-    // The full curation DAG as ONE job — what a user actually runs over a
-    // raw crawl: quality gate → exact dedup (keep lowest doc_id per
-    // content digest) → benchmark decontamination (drop docs with ≥50%
-    // eval shingle overlap, and the eval split itself) → sequence packing
-    // of the survivors. Each stage only narrows the previous one, so the
-    // whole pipeline costs: one corpus scan + the dedup digest shuffle +
-    // the (eval-broadcast) decontam join + GlobalCumsum's bucketed
-    // window — no stage re-reads the input.
-    "pipeline_curate" -> { (s, dir) => pipelineCurate(s, dir) },
+    // The curation DAG (graft.operators.CurationDag) as ONE job per stage
+    // set — what a user actually runs over a raw crawl: quality gate →
+    // exact dedup (lowest doc_id per content digest) → benchmark decontam
+    // (drop the eval split and docs with ≥50% eval shingle overlap) →
+    // sequence packing of the survivors. The optional stages:
+    //  - neardup: docs whose word-3-gram jaccard with a surviving lower-id
+    //    doc reaches 0.6 drop (lowest-id-wins over the verified pair graph);
+    //  - scrub: runs of ≥MinRunTokens tokens shared with the surviving eval
+    //    split are excised, and packing uses post-scrub token counts;
+    //  - spans: every duplicated trigram keeps its lowest-id copy and the
+    //    others are excised (dedup_span_keepfirst as a stage);
+    //  - full: every stage on, CurationJob's composition order — near-dup
+    //    on RAW text, then both rewrites' dup starts union into one
+    //    token rebuild — oracle-checked END TO END.
+    // CurationJob (day 0) and DailyIncrement (per batch, probe-fed at
+    // |batch| cost) run the same stages.
+    "pipeline_curate" -> CurationDag.curate(),
+    "pipeline_curate_neardup" -> CurationDag.curate(nearDup = true),
+    "pipeline_curate_scrub" -> CurationDag.curate(scrub = true),
+    "pipeline_curate_spans" -> CurationDag.curate(spans = true),
+    "pipeline_curate_full" -> CurationDag.curate(nearDup = true, scrub = true, spans = true),
 
-    // pipeline_curate with the optional NEAR-DUP stage on — the
-    // production curation DAG at full strength: after the exact-digest
-    // dedup and decontam stages, docs that are near-duplicates (exact
-    // word-3-gram jaccard ≥ 0.6) of a surviving lower-id doc also drop
-    // (lowest-id-wins over the verified pair graph — the dedup_clusters
-    // verdict algebra as a stage), and the thinner survivor set packs.
-    // Cost on top of pipeline_curate is the candidate-bounded shingle
-    // self-join over SURVIVORS (boilerplate already gate-dropped) + the
-    // doubling-contraction components loop; the pair relation is the
-    // oracle-checked dedup_ngram_jaccard algebra restricted to the
-    // survivor set. CurationJob (day 0) and DailyIncrement (batch gate,
-    // probe-fed at |batch| cost) run the same verdict.
-    "pipeline_curate_neardup" -> { (s, dir) => pipelineCurateNearDup(s, dir) },
-
-    // pipeline_curate with the token-level SCRUB stage on — the decontam
-    // drop rule catches mostly-benchmark docs; this catches the long
-    // verbatim benchmark quote inside an otherwise-clean doc (the
-    // decontam_scrub island algebra over the CURATED frames) and packs
-    // on post-scrub token counts. Cost on top of pipeline_curate: the
-    // positioned re-shingle of survivors + the benchmark-broadcast hash
-    // join — the island windows partition on (pair, diag), never
-    // corpus-global. CurationJob (day 0, benchIndex=) and DailyIncrement
-    // (per batch, against the maintained positioned benchmark index at
-    // |batch| probe cost) run the same stage.
-    "pipeline_curate_scrub" -> { (s, dir) => pipelineCurateScrub(s, dir) },
-
-    // pipeline_curate with the SPAN KEEP-FIRST stage on — intra-corpus
-    // duplicated-span removal that keeps the first (lowest-id) copy of
-    // every duplicated trigram run and packs on post-scrub token counts
-    // (dedup_span_keepfirst as a curation stage; the near-dup gate drops
-    // whole documents, this excises the shared passages that survive
-    // it — boilerplate, license blocks, quote chains). Cost on top of
-    // pipeline_curate: one positioned shingle pass + the per-hash keeper
-    // aggregate — no pairwise doc join. CurationJob (day 0, spanIndex=)
-    // and DailyIncrement (per batch, probing the maintained shingle
-    // index at |batch| cost — arrival-order keep-first, EXACTLY equal to
-    // a union rebuild because keeper = min id = first arrival) run the
-    // same stage.
-    "pipeline_curate_spans" -> { (s, dir) => pipelineCurateSpans(s, dir) },
-
-    // the FULL-STRENGTH DAG: every optional stage on in CurationJob's
-    // composition order (near-dup drops docs on RAW text; then the
-    // benchmark-scrub and span-keep-first dup starts UNION into one
-    // token rebuild; packing on post-scrub counts) — the production
-    // invocation, oracle-checked END TO END so the stage COMPOSITION is
-    // itself a driver-gate hash equality, not just each stage alone.
-    "pipeline_curate_full" -> { (s, dir) => pipelineCurateFull(s, dir) },
-
-    // The fate trace for the FULL-STRENGTH DAG — pipeline_audit_neardup's
-    // verdict CASE (near-dup drops land between 'contaminated' and
-    // 'kept') PLUS both text-rewriting stages' per-doc effect: n_removed
-    // is the tokens excised by the UNION of benchmark-scrub and
-    // span-keep-first dup starts (the one-rebuild composition
-    // pipeline_curate_full packs), and shard placement comes from that
-    // post-scrub packing. One row answers every "what happened to doc X
-    // in production?" ticket the composed pipeline fields. The cached
-    // cluster table feeds BOTH the fate column and the packing through
-    // packCurateFull, so the components loop runs once per query.
-    "pipeline_audit_full" -> { (s, dir) =>
-      import s.implicits._
-      val (docs, win, contam) = auditStageFrames(s, dir)
-      val train = curatedTrain(s, dir).cache()
-      val clusters = nearDupClusters(train).cache()
-      val nd = train
-        .join(clusters.filter($"cluster" === $"doc_id").select($"doc_id"),
-          Seq("doc_id"), "left_semi")
-        .select($"doc_id", $"text").cache()
-      val packed = packCurateFull(s, dir, Tokenizer.Whitespace, nd)
-        .select($"doc_id", $"n_removed", $"shard", $"shard_offset")
-      // materialized so the caches release before the return (the
-      // pipelineCurateFull leak discipline applied to the audit twin)
-      val out = docs.select($"doc_id", $"n_tokens", $"ch")
-        .join(win, Seq("ch"), "left")
-        .join(contam, Seq("doc_id"), "left")
-        .join(clusters, Seq("doc_id"), "left")
-        .join(packed, Seq("doc_id"), "left")
-        .select($"doc_id", $"n_tokens",
-          when($"keep_id".isNull, lit("gate_failed"))
-            .when($"keep_id" =!= $"doc_id", lit("dup"))
-            .when($"doc_id" % EvalMod === 0, lit("eval_split"))
-            .when($"contam_frac" >= 0.5, lit("contaminated"))
-            .when($"cluster" =!= $"doc_id", lit("neardup"))
-            .otherwise(lit("kept")).as("fate"),
-          when($"keep_id" =!= $"doc_id", $"keep_id")
-            .when($"cluster" =!= $"doc_id", $"cluster").as("dup_of"),
-          $"contam_frac", $"n_removed", $"shard", $"shard_offset")
-        .localCheckpoint(true)
-      clusters.unpersist(); nd.unpersist(); train.unpersist()
-      out
-    },
-
-    // pipeline_audit with the near-dup stage in the fate order — the
-    // operability trace for the full-strength DAG: 'neardup' lands
-    // between 'contaminated' and 'kept', dup_of reports the cluster
-    // keeper the doc lost to (the exact-dedup winner for 'dup' rows),
-    // and shard placement comes from the thinner near-dup packing.
-    "pipeline_audit_neardup" -> { (s, dir) =>
-      import s.implicits._
-      val (docs, win, contam) = auditStageFrames(s, dir)
-      val train = curatedTrain(s, dir).cache()
-      // cached: the assignment feeds BOTH the fate column and the
-      // packing, and the components loop must not run twice
-      val clusters = nearDupClusters(train).cache()
-      val packed = packNearDupKeepers(train, clusters)
-        .select($"doc_id", $"shard", $"shard_offset")
-      // materialized so the cluster cache releases before the return
-      // (the pipelineCurateFull leak discipline)
-      val out = docs.select($"doc_id", $"n_tokens", $"ch")
-        .join(win, Seq("ch"), "left")
-        .join(contam, Seq("doc_id"), "left")
-        .join(clusters, Seq("doc_id"), "left")
-        .join(packed, Seq("doc_id"), "left")
-        .select($"doc_id", $"n_tokens",
-          when($"keep_id".isNull, lit("gate_failed"))
-            .when($"keep_id" =!= $"doc_id", lit("dup"))
-            .when($"doc_id" % EvalMod === 0, lit("eval_split"))
-            .when($"contam_frac" >= 0.5, lit("contaminated"))
-            .when($"cluster" =!= $"doc_id", lit("neardup"))
-            .otherwise(lit("kept")).as("fate"),
-          when($"keep_id" =!= $"doc_id", $"keep_id")
-            .when($"cluster" =!= $"doc_id", $"cluster").as("dup_of"),
-          $"contam_frac", $"shard", $"shard_offset")
-        .localCheckpoint(true)
-      clusters.unpersist(); train.unpersist()
-      out
-    },
-
-    // pipeline_audit with the SCRUB stage in the trace — the scrub never
-    // drops a doc, so the fate column is pipeline_audit's verbatim; what
-    // the trace adds is the stage's per-doc effect: n_removed (tokens
-    // excised by benchmark-run scrubbing; 0 = kept untouched, NULL =
-    // never reached the stage) and shard placement from the POST-scrub
-    // packing — the "why is doc X shorter in the shards than in the
-    // crawl?" ticket answered in one row.
-    "pipeline_audit_scrub" -> { (s, dir) =>
-      import s.implicits._
-      val (docs, win, contam) = auditStageFrames(s, dir)
-      val packed = pipelineCurateScrub(s, dir)
-        .select($"doc_id", $"n_removed", $"shard", $"shard_offset")
-      docs.select($"doc_id", $"n_tokens", $"ch")
-        .join(win, Seq("ch"), "left")
-        .join(contam, Seq("doc_id"), "left")
-        .join(packed, Seq("doc_id"), "left")
-        .select($"doc_id", $"n_tokens",
-          when($"keep_id".isNull, lit("gate_failed"))
-            .when($"keep_id" =!= $"doc_id", lit("dup"))
-            .when($"doc_id" % EvalMod === 0, lit("eval_split"))
-            .when($"contam_frac" >= 0.5, lit("contaminated"))
-            .otherwise(lit("kept")).as("fate"),
-          when($"keep_id" =!= $"doc_id", $"keep_id").as("dup_of"),
-          $"contam_frac", $"n_removed", $"shard", $"shard_offset")
-    },
-
-    // pipeline_audit with the SPAN KEEP-FIRST stage in the trace — same
-    // doctrine as pipeline_audit_scrub (the stage never drops a doc, so
-    // the fate column is pipeline_audit's verbatim): n_removed here is
-    // the tokens excised because a LOWER surviving doc carried the same
-    // passage first, and shard placement comes from the post-span
-    // packing — "why is doc X shorter than its crawl copy when it never
-    // touched a benchmark?" answered in one row.
-    "pipeline_audit_spans" -> { (s, dir) =>
-      import s.implicits._
-      val (docs, win, contam) = auditStageFrames(s, dir)
-      val packed = pipelineCurateSpans(s, dir)
-        .select($"doc_id", $"n_removed", $"shard", $"shard_offset")
-      docs.select($"doc_id", $"n_tokens", $"ch")
-        .join(win, Seq("ch"), "left")
-        .join(contam, Seq("doc_id"), "left")
-        .join(packed, Seq("doc_id"), "left")
-        .select($"doc_id", $"n_tokens",
-          when($"keep_id".isNull, lit("gate_failed"))
-            .when($"keep_id" =!= $"doc_id", lit("dup"))
-            .when($"doc_id" % EvalMod === 0, lit("eval_split"))
-            .when($"contam_frac" >= 0.5, lit("contaminated"))
-            .otherwise(lit("kept")).as("fate"),
-          when($"keep_id" =!= $"doc_id", $"keep_id").as("dup_of"),
-          $"contam_frac", $"n_removed", $"shard", $"shard_offset")
-    },
-
-    // Per-document FATE TRACE through the curation DAG — the operability
+    // Per-document FATE TRACE through the same DAG — the operability
     // query behind every "why did doc X disappear from the training
-    // set?" ticket a 100 TB pipeline fields: ONE row per corpus doc with
-    // the stage that ended it (gate_failed → dup → eval_split →
-    // contaminated → kept, in DAG order), the exact-dedup winner it lost
-    // to, its decontam fraction, and its packed shard location when it
-    // survived everything. Composes the SAME stage algebra the pipeline
-    // runs (qualityGate / curatedKept / contamination / pipelineCurate —
-    // one definition, so the audit can never drift from the pipeline),
-    // joined back to the full corpus with request-shaped left joins; the
+    // set?" ticket: ONE row per corpus doc with the stage that ended it
+    // (gate_failed → dup → eval_split → contaminated [→ neardup] → kept,
+    // in DAG order), the doc it lost to (the exact-dedup winner, or the
+    // near-dup cluster keeper), its decontam fraction, the tokens the
+    // rewrite stages excised (n_removed; 0 = untouched, NULL = never
+    // reached them) and its packed placement when it survived. The
     // oracle replays the stage CTEs and the verdict CASE verbatim.
-    "pipeline_audit" -> { (s, dir) =>
-      import s.implicits._
-      val (docs, win, contam) = auditStageFrames(s, dir)
-      val packed = pipelineCurate(s, dir).select($"doc_id", $"shard", $"shard_offset")
-      docs.select($"doc_id", $"n_tokens", $"ch")
-        .join(win, Seq("ch"), "left")
-        .join(contam, Seq("doc_id"), "left")
-        .join(packed, Seq("doc_id"), "left")
-        .select($"doc_id", $"n_tokens",
-          when($"keep_id".isNull, lit("gate_failed"))
-            .when($"keep_id" =!= $"doc_id", lit("dup"))
-            .when($"doc_id" % EvalMod === 0, lit("eval_split"))
-            .when($"contam_frac" >= 0.5, lit("contaminated"))
-            .otherwise(lit("kept")).as("fate"),
-          when($"keep_id" =!= $"doc_id", $"keep_id").as("dup_of"),
-          $"contam_frac", $"shard", $"shard_offset")
-    },
+    "pipeline_audit" -> CurationDag.audit(),
+    "pipeline_audit_neardup" -> CurationDag.audit(nearDup = true),
+    "pipeline_audit_scrub" -> CurationDag.audit(scrub = true),
+    "pipeline_audit_spans" -> CurationDag.audit(spans = true),
+    "pipeline_audit_full" -> CurationDag.audit(nearDup = true, scrub = true, spans = true),
 
     // Cross-source overlap matrix from per-source MinHash signatures —
     // the corpus-mixing / cross-source-contamination signal ("how much of
@@ -930,10 +747,7 @@ object CorpusQueries extends QueryModule {
     import s.implicits._
     val docs = Tables.load(s, dir, "documents")
       .select($"doc_id", tok.count($"text").as("n_tokens"))
-    GlobalCumsum.runningBefore(docs, "doc_id", "n_tokens", "cb")
-      .select($"doc_id", $"n_tokens",
-        expr(s"CAST(cb DIV $PackBudget AS BIGINT)").as("shard"),
-        ($"cb" % PackBudget).as("shard_offset"))
+    PackedExport.pack(docs)
   }
 
   private[graft] def docChunk(s: SparkSession, dir: String,
@@ -963,11 +777,7 @@ object CorpusQueries extends QueryModule {
     val baseRow = docs.filter($"doc_id" % 10 =!= 0)
       .agg(coalesce(sum($"n_tokens"), lit(0L))).head()
     val base = baseRow.getLong(0)
-    GlobalCumsum.runningBefore(
-        docs.filter($"doc_id" % 10 === 0), "doc_id", "n_tokens", "cb")
-      .select($"doc_id", $"n_tokens",
-        expr(s"CAST((cb + $base) DIV $PackBudget AS BIGINT)").as("shard"),
-        (($"cb" + base) % PackBudget).as("shard_offset"))
+    PackedExport.pack(docs.filter($"doc_id" % 10 === 0), base = base)
   }
 
   private[graft] def sampleWeighted(s: SparkSession, dir: String,
@@ -1182,25 +992,16 @@ object CorpusQueries extends QueryModule {
         ($"w" / $"denom").as("mix_p"))
   }
 
-  /** The curation DAG's surviving TRAIN set (doc_id, text, n_tokens) —
-    * quality gate → exact dedup → decontamination, text retained so
-    * downstream exports (shards, retrieval indexes) can consume it.
-    * Shared by pipeline_curate (which packs it) and
-    * operators/CurationJob (which also builds the indexes). */
-  /** The curation quality gate — shared verbatim by [[curatedTrain]] and
+  /** The curation quality gate — shared verbatim by [[curatedKept]] and
     * the daily-increment path so both days apply the identical rule. */
   private[graft] def qualityGate(docs: DataFrame): DataFrame =
     docs.filter(col("n_tokens") >= 5 &&
       (regexp_count(col("text"), lit("[^A-Za-z0-9\\s]")).cast("double") /
         nullif(length(col("text")), lit(0))) < 0.3)
 
-  /** The quality→exact-dedup prefix of [[curatedTrain]], BEFORE the eval
-    * drop/decontam — exposed so CurationJob can derive the persisted eval
-    * shingle benchmark (outDir/evalh) from the SAME gated/deduped set the
-    * decontam stage uses (an eval doc that fails the gate or loses dedup
-    * contributes no shingles — the daily path must agree; see
-    * DailyIncrement). Cached at the stage boundary; a second call builds
-    * the identical plan and hits the same cache entry. */
+  /** The quality→exact-dedup prefix of the curation DAG: gate survivors,
+    * the lowest doc_id kept per content digest. [[graft.operators.CurationDag]]
+    * caches it at the stage boundary. */
   private[graft] def curatedKept(s: SparkSession, dir: String,
       tok: Tokenizer = Tokenizer.Whitespace,
       docFilter: org.apache.spark.sql.Column = lit(true)): DataFrame = {
@@ -1212,314 +1013,16 @@ object CorpusQueries extends QueryModule {
     val quality = qualityGate(docs)
     // exact dedup: keep the lowest doc_id per content digest — min_by
     // carries the whole winner row through ONE map-side-combinable
-    // aggregate (doc_id unique ⇒ deterministic), where the old
-    // agg+join-back spelling scanned and gated the corpus twice
-    // (r18: 0.95 → 0.50 s per materialization at sf0.1).
-    // `kept` feeds BOTH the shingle index and the packing input, and
-    // GlobalCumsum drives multiple actions (quantile sketch, bucket
-    // totals, final plan) — cache the stage boundary or the whole
-    // scan→quality→dedup prefix re-executes once per action
+    // aggregate (doc_id unique ⇒ deterministic)
     quality.groupBy(md5($"text").as("ch"))
       .agg(min_by(struct($"doc_id", $"text", $"n_tokens"), $"doc_id").as("w"))
       .select($"w.doc_id".as("doc_id"), $"w.text".as("text"),
         $"w.n_tokens".as("n_tokens"))
-      .cache()
   }
-
-  /** The eval-shingle benchmark the curation decontam stage checks
-    * against: distinct shingle hashes of EVAL-SPLIT docs among the
-    * gate/dedup survivors — NOT the raw table (an eval doc that fails
-    * the quality gate or loses exact dedup to a lower-id doc contributes
-    * no shingles). This is the exact set [[curatedTrain]]'s internal
-    * `contamination` sees; CurationJob persists it (outDir/evalh) so the
-    * daily path applies the identical benchmark. */
-  private[graft] def curatedEvalH(s: SparkSession, dir: String,
-      tok: Tokenizer = Tokenizer.Whitespace,
-      docFilter: org.apache.spark.sql.Column = lit(true)): DataFrame =
-    curatedKept(s, dir, tok, docFilter)
-      .filter(col("doc_id") % EvalMod === 0)
-      // (doc_id, h) pairs, not a bare hash set: the attribution is what
-      // lets a takedown forget an eval doc's fingerprint exactly (mask on
-      // doc_id) — readers project .select("h").distinct()
-      .select(col("doc_id"), explode(shingleHashSet(col("text"))).as("h"))
-
-  /** The gate/dedup-surviving EVAL docs (doc_id, text) — the benchmark
-    * POPULATION behind both decontam forms: [[curatedEvalH]] is its
-    * unordered shingle-hash projection (the ≥50% DROP rule), and the
-    * scrub stage's positioned benchmark index materializes over these
-    * same docs (an eval doc that fails the gate or loses dedup
-    * contributes no runs either). Hits the [[curatedKept]] cache. */
-  private[graft] def curatedEvalDocs(s: SparkSession, dir: String,
-      tok: Tokenizer = Tokenizer.Whitespace,
-      docFilter: org.apache.spark.sql.Column = lit(true)): DataFrame =
-    curatedKept(s, dir, tok, docFilter)
-      .filter(col("doc_id") % EvalMod === 0)
-      .select(col("doc_id"), col("text"))
 
   /** Near-dup gate threshold for the curation DAG's optional fourth
     * stage (exact word-3-gram jaccard — dedup_ngram_jaccard's cut). */
   val NearDupThreshold = 0.6
-
-  /** The near-dup gate verdict over a train-survivor frame (doc_id,
-    * text, ...): the subset surviving lowest-id-wins clustering of the
-    * exact jaccard ≥ threshold pair graph — the dedup_clusters algebra
-    * as a CURATION STAGE (pairs among survivors, keeper = component
-    * min). Shared by pipeline_curate_neardup, CurationJob's day-0
-    * near-dup stage, and (probe-fed) DailyIncrement's batch gate. */
-  private[graft] def nearDupSurvivors(train: DataFrame,
-      threshold: Double = NearDupThreshold): DataFrame =
-    train.join(
-      nearDupClusters(train, threshold).filter(col("cluster") === col("doc_id"))
-        .select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
-
-  /** The stage's full cluster assignment (doc_id, cluster = keeper id) —
-    * [[nearDupSurvivors]] keeps the cluster == doc_id rows; the fate
-    * trace (pipeline_audit_neardup) reports the keeper as dup_of. */
-  private[graft] def nearDupClusters(train: DataFrame,
-      threshold: Double = NearDupThreshold): DataFrame = {
-    val edges = DedupQueries.jaccardPairsFrames(train, threshold)
-      .select(col("doc_a").as("a"), col("doc_b").as("b"))
-    graft.operators.ConnectedComponents
-      .clusters(train.select(col("doc_id").as("id")), edges)
-      .select(col("id").as("doc_id"), col("cluster"))
-  }
-
-  /** The decontam stage's contamination table over the gate/dedup
-    * survivors — (doc_id, n_shingles, n_contaminated), train-side docs
-    * only. Cached at the stage boundary (the [[curatedKept]] doctrine):
-    * its lineage is the corpus-wide shingle explode + distinct + eval
-    * join, and the audit family reads it TWICE per query (the
-    * contam_frac trace column AND the ≥50% drop rule inside
-    * [[curatedTrain]]) — uncached, each reference re-ran that whole
-    * chain (measured r17: 40-88 scan nodes per audit plan). A second
-    * call builds the identical plan and hits the same cache entry, so
-    * callers need no plumbing. */
-  private[graft] def curatedContam(s: SparkSession, dir: String,
-      tok: Tokenizer = Tokenizer.Whitespace,
-      docFilter: org.apache.spark.sql.Column = lit(true)): DataFrame = {
-    import s.implicits._
-    contamination(curatedKept(s, dir, tok, docFilter)
-        .select($"doc_id", explode(shingleHashSet($"text")).as("h")))
-      .cache()
-  }
-
-  private[graft] def curatedTrain(s: SparkSession, dir: String,
-      tok: Tokenizer = Tokenizer.Whitespace,
-      docFilter: org.apache.spark.sql.Column = lit(true)): DataFrame = {
-    import s.implicits._
-    val kept = curatedKept(s, dir, tok, docFilter)
-    // decontamination: drop the eval split and anything ≥50% eval-overlapping.
-    // Deliberately NOT routed through [[curatedContam]]'s .cache(): in the
-    // curate-only paths contamination has exactly one consumer, so forcing
-    // a cache materialization is pure overhead (measured +16-19% on
-    // pipeline_curate/_full in r17) — while in the audit paths, where
-    // auditStageFrames HAS cached the identical plan, the CacheManager's
-    // sameResult substitution serves this subtree from that entry anyway.
-    val sh = kept
-      .select($"doc_id", explode(shingleHashSet($"text")).as("h"))
-    val contaminated = contamination(sh)
-      .filter($"n_contaminated".cast("double") / $"n_shingles" >= 0.5)
-      .select($"doc_id")
-    kept.filter($"doc_id" % EvalMod =!= 0)
-      .join(contaminated, Seq("doc_id"), "left_anti")
-  }
-
-  /** The audit family's shared stage prefix — (docs, dups, contam): the
-    * per-doc token counts, the exact-dedup winner map, and the decontam
-    * fraction. Each derives from the CACHED stage tables so the five
-    * audit keys pay the gate/md5/shingle chains ONCE per query (r17
-    * optimization — the old per-key spelling recomputed them beside the
-    * cached twins): `win` reads the winners' digests straight off
-    * [[curatedKept]] — the winners ARE the per-digest min rows, so
-    * md5-ing the cached winner set replaces a second corpus-wide md5
-    * aggregation (PipelineAuditSpec pins the equality) — and contam_frac
-    * projects [[curatedContam]], the same cache entry
-    * [[curatedTrain]]'s ≥50% drop rule reads. */
-  private def auditStageFrames(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    import s.implicits._
-    // docs carries the content digest so the winner map joins on ch
-    // DIRECTLY (r18): the old `dups` frame re-ran scan+tokenize+gate+md5
-    // just to re-derive each doc's digest. The gate is a pure function
-    // of text and every winner passed it, so a doc's digest matches a
-    // winner digest IFF the doc passed the gate — the explicit gate
-    // re-run (and the extra corpus scan under it) was redundant, and
-    // keep_id IS NULL still reads exactly as "gate_failed".
-    val docs = Tables.load(s, dir, "documents")
-      .select($"doc_id", $"text", Tokenizer.Whitespace.count($"text").as("n_tokens"),
-        md5($"text").as("ch"))
-    val win = curatedKept(s, dir)
-      .select(md5($"text").as("ch"), $"doc_id".as("keep_id"))
-    val contam = curatedContam(s, dir)
-      .select($"doc_id",
-        ($"n_contaminated".cast("double") / $"n_shingles").as("contam_frac"))
-    (docs, win, contam)
-  }
-
-  private[graft] def pipelineCurate(s: SparkSession, dir: String,
-      tok: Tokenizer = Tokenizer.Whitespace): DataFrame = {
-    import s.implicits._
-    // pack the survivors
-    val train = curatedTrain(s, dir, tok).select($"doc_id", $"n_tokens")
-    GlobalCumsum.runningBefore(train, "doc_id", "n_tokens", "cb")
-      .select($"doc_id", $"n_tokens",
-        expr(s"CAST(cb DIV $PackBudget AS BIGINT)").as("shard"),
-        ($"cb" % PackBudget).as("shard_offset"))
-  }
-
-  /** The near-dup packing from a PRECOMPUTED cluster assignment — the
-    * shared tail of [[pipelineCurateNearDup]] and pipeline_audit_neardup
-    * (one packing definition so the audit's shard columns can never
-    * drift from the query's, and the audit's CACHED cluster table feeds
-    * both its fate column and this packing, so the iterative
-    * ConnectedComponents loop runs ONCE per query, not twice). */
-  private def packNearDupKeepers(train: DataFrame, clusters: DataFrame): DataFrame = {
-    val nd = train
-      .join(clusters.filter(col("cluster") === col("doc_id")).select(col("doc_id")),
-        Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("n_tokens"))
-    GlobalCumsum.runningBefore(nd, "doc_id", "n_tokens", "cb")
-      .select(col("doc_id"), col("n_tokens"),
-        expr(s"CAST(cb DIV $PackBudget AS BIGINT)").as("shard"),
-        (col("cb") % PackBudget).as("shard_offset"))
-  }
-
-  /** [[pipelineCurate]] with the near-dup stage on. */
-  private[graft] def pipelineCurateNearDup(s: SparkSession, dir: String,
-      tok: Tokenizer = Tokenizer.Whitespace): DataFrame = {
-    // cache: the gate+decontam chain fans out into the jaccard pair
-    // self-join, the components node set and the packing semi-join —
-    // uncached it re-executed (shingle explode included) once per
-    // consumer. Materialize-then-unpersist, the pipelineCurateFull leak
-    // discipline.
-    val train = curatedTrain(s, dir, tok).cache()
-    val out = packNearDupKeepers(train, nearDupClusters(train))
-      .localCheckpoint(true)
-    train.unpersist()
-    out
-  }
-
-  /** [[pipelineCurate]] with the token-level SCRUB stage on: the decontam
-    * DROP stage removes docs ≥50% benchmark-overlapping, but a surviving
-    * doc can still carry a long verbatim benchmark quote (a 60-token
-    * quote in a 10k-token doc is 0.6% overlap) — this stage excises
-    * exactly those runs (the decontam_scrub algebra over the CURATED
-    * frames: train survivors vs the gate/dedup-surviving eval split, the
-    * same benchmark population the drop stage checked) and packs on the
-    * POST-scrub token counts, so shard budgets account for what a trainer
-    * actually reads. Output (doc_id, n_tokens, n_removed, shard,
-    * shard_offset); n_tokens is the post-scrub count. */
-  private[graft] def pipelineCurateScrub(s: SparkSession, dir: String,
-      tok: Tokenizer = Tokenizer.Whitespace): DataFrame = {
-    import graft.operators.OverlapIndex
-    val train = curatedTrain(s, dir, tok).select(col("doc_id"), col("text"))
-    val evalDocs = curatedKept(s, dir, tok)
-      .filter(col("doc_id") % EvalMod === 0)
-      .select(col("doc_id"), col("text"))
-    val scrub = OverlapIndex.scrubFrames(
-      train, OverlapIndex.positioned(train), OverlapIndex.positioned(evalDocs),
-      MinRunTokens)
-    val packIn = scrub.select(col("doc_id"),
-      (col("n_tokens") - col("n_removed")).as("n_tokens"), col("n_removed"))
-    GlobalCumsum.runningBefore(packIn, "doc_id", "n_tokens", "cb")
-      .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-        expr(s"CAST(cb DIV $PackBudget AS BIGINT)").as("shard"),
-        (col("cb") % PackBudget).as("shard_offset"))
-  }
-
-  /** [[pipelineCurate]] with the SPAN KEEP-FIRST stage on: after the
-    * drop gates, any trigram duplicated among the surviving train docs
-    * keeps ONE copy — the lowest surviving doc_id holding it — and every
-    * other occurrence is excised (the dedup_span_keepfirst rule as a
-    * CURATION STAGE: Lee et al. 2022's "remove it from one of them"
-    * applied to the corpus the trainer actually reads), then the packing
-    * window runs over the POST-scrub token counts. Output (doc_id,
-    * n_tokens, n_removed, shard, shard_offset); n_tokens is post-scrub.
-    * Cost on top of pipeline_curate: the positioned-shingle pass and the
-    * per-hash keeper aggregate — no pairwise doc join. */
-  private[graft] def pipelineCurateSpans(s: SparkSession, dir: String,
-      tok: Tokenizer = Tokenizer.Whitespace): DataFrame = {
-    val train = curatedTrain(s, dir, tok).select(col("doc_id"), col("text"))
-    val occ = train.select(col("doc_id"),
-      posexplode(shingleHashes(col("text"))).as(Seq("q", "h")))
-    val dupStarts = DedupQueries.spanKeepFirstStartRowsFromDocs(occ, train)
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("q"))).as("dup_starts"))
-    val scrub = DedupQueries.scrubRebuild(s, train, dupStarts)
-    val packIn = scrub.select(col("doc_id"),
-      (col("n_tokens") - col("n_removed")).as("n_tokens"), col("n_removed"))
-    GlobalCumsum.runningBefore(packIn, "doc_id", "n_tokens", "cb")
-      .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-        expr(s"CAST(cb DIV $PackBudget AS BIGINT)").as("shard"),
-        (col("cb") % PackBudget).as("shard_offset"))
-  }
-
-  /** The FULL-STRENGTH curation DAG in one query — every optional stage
-    * on, composed exactly as `CurationJob.run(nearDupIndex=, benchIndex=,
-    * spanIndex=)` composes them: quality → exact dedup → decontam →
-    * near-dup clustering (lowest-id-wins) → ONE token rebuild over the
-    * UNION of the benchmark-scrub and span-keep-first dup starts (both
-    * judged on RAW text; an overlapping region excises once) → packing
-    * on post-scrub counts. This is the production invocation a user
-    * actually runs; oracle-checked end to end so the COMPOSITION — not
-    * just each stage — is a driver-gate hash equality. */
-  private[graft] def pipelineCurateFull(s: SparkSession, dir: String,
-      tok: Tokenizer = Tokenizer.Whitespace): DataFrame = {
-    // train cached too: nearDupSurvivors fans it into the jaccard pair
-    // self-join, the components node set and its own semi-join — the
-    // gate+decontam chain must execute once, not once per consumer.
-    val train = curatedTrain(s, dir, tok).cache()
-    // cache: the components loop ran inside nearDupSurvivors; nd feeds
-    // two positioned passes, the span occurrence pass and the rebuild.
-    // The packing MATERIALIZES here (localCheckpoint cuts the returned
-    // plan to a LogicalRDD leaf) so nd releases before the return — a
-    // lazy return would keep the cache entry pinned inside the caller's
-    // plan, leaking one nd per invocation in callers without an explicit
-    // clearCache between queries.
-    val nd = nearDupSurvivors(train).select(col("doc_id"), col("text")).cache()
-    val out = packCurateFull(s, dir, tok, nd).localCheckpoint(true)
-    nd.unpersist(); train.unpersist()
-    out
-  }
-
-  /** The full-strength DAG's text-rewriting + packing tail from a
-    * PRECOMPUTED near-dup survivor frame `nd` (doc_id, text; cached by
-    * the caller): union of the benchmark-scrub and span-keep-first dup
-    * starts → one token rebuild → packing on post-scrub counts. Shared
-    * by [[pipelineCurateFull]] and pipeline_audit_full so the audit's
-    * CACHED cluster table feeds both its fate column and this packing —
-    * the components loop runs ONCE per query (the packNearDupKeepers
-    * doctrine applied to the capstone). */
-  private def packCurateFull(s: SparkSession, dir: String,
-      tok: Tokenizer, nd: DataFrame): DataFrame = {
-    val evalDocs = curatedKept(s, dir, tok)
-      .filter(col("doc_id") % EvalMod === 0)
-      .select(col("doc_id"), col("text"))
-    // NOT cached (r17 optimization note): sharing one cached positioned
-    // pass between the bench-scrub and span-keep-first start relations
-    // measured +26..70% on the _full keys — materializing every (doc_id,
-    // q, h) row costs more than the re-explode it saves, because the
-    // uncached spelling pipelines the explode straight into each
-    // consumer's partial aggregate inside one codegen stage.
-    val benchStarts = graft.operators.OverlapIndex.scrubStartRows(
-      graft.operators.OverlapIndex.positioned(nd),
-      graft.operators.OverlapIndex.positioned(evalDocs), MinRunTokens)
-    val spanStarts = DedupQueries.spanKeepFirstStartRowsFromDocs(
-      nd.select(col("doc_id"),
-        posexplode(shingleHashes(col("text"))).as(Seq("q", "h"))),
-      nd)
-    val dupStarts = benchStarts.unionByName(spanStarts).distinct()
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("q"))).as("dup_starts"))
-    val scrub = DedupQueries.scrubRebuild(s, nd, dupStarts)
-    val packIn = scrub.select(col("doc_id"),
-      (col("n_tokens") - col("n_removed")).as("n_tokens"), col("n_removed"))
-    GlobalCumsum.runningBefore(packIn, "doc_id", "n_tokens", "cb")
-      .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-        expr(s"CAST(cb DIV $PackBudget AS BIGINT)").as("shard"),
-        (col("cb") % PackBudget).as("shard_offset"))
-  }
 
   /** The positioned-occurrence run chain shared by decontam_runs and its
     * index-probe twin: zipped unnest pairs each shingle with its 0-based

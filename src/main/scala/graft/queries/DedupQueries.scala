@@ -90,15 +90,12 @@ object DedupQueries extends QueryModule {
       maxDfFrac: Double = 1.0): DataFrame =
     jaccardOfShingles(s, dfCeiled(shingleSet(s, dir), maxDfFrac).cache(), 0.6)
 
-  /** [[jaccardPairs]] over an arbitrary (doc_id, text) frame — the
-    * curation DAG's near-dup stage runs this on the decontam survivors
-    * (CorpusQueries.nearDupSurvivors) rather than the raw table. */
-  private[graft] def jaccardPairsFrames(docs: DataFrame,
-      threshold: Double): DataFrame =
-    jaccardOfShingles(docs.sparkSession,
-      docs.select(col("doc_id"), explode(shingleHashSet(col("text"))).as("h"))
-        .cache(),
-      threshold)
+  /** [[jaccardPairs]] over an arbitrary (doc_id, h) distinct-shingle
+    * frame — the curation DAG's near-dup stage runs this on the decontam
+    * survivors (CurationDag.clusters) rather than the raw table. `sh` is
+    * read several times; the caller caches it. */
+  private[graft] def jaccardPairsFrames(sh: DataFrame, threshold: Double): DataFrame =
+    jaccardOfShingles(sh.sparkSession, sh, threshold)
 
   // recorded NON-WIN (r18): carrying a doc-local n = size(shingleHashSet)
   // through the jaccard self-join's group keys (eliminating the per-doc

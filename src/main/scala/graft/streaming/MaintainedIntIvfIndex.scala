@@ -27,8 +27,8 @@ import graft.operators.{IntIvfIndex, IntegerKMeans, IvfAdc}
   *
   * Deletes are out-of-band tombstones (side-table-free index: the frozen
   * quantizers depend on no per-batch state, so a mask before ranking is
-  * exact and never competes with the stream's batch sequence); vacuum
-  * rewrites survivors under the same (batch, cluster) layout. vec_ids
+  * exact and never competes with the stream's batch sequence); compact
+  * erases tombstoned rows physically through a staged swap. vec_ids
   * must be unique across the stream's life (the IncrementalDedup
   * contract). */
 final class MaintainedIntIvfIndex(path: Path, spark: SparkSession) {
@@ -100,22 +100,6 @@ final class MaintainedIntIvfIndex(path: Path, spark: SparkSession) {
     else df.join(
       spark.read.parquet(tombDir.toString).select(col("vec_id")).distinct(),
       Seq("vec_id"), "left_anti")
-
-  /** Physically drop tombstoned vectors under the same (batch, cluster)
-    * layout — surviving rows keep their batch ids so probe gating is
-    * untouched (the [[MaintainedVectorIndex.vacuum]] full-overwrite
-    * rationale: dynamic per-partition overwrite would leave fully-
-    * tombstoned partitions' old files in place). */
-  def vacuum(): Unit = {
-    if (!Files.exists(tombDir)) return
-    val kept = maskedCorpus(spark.read.parquet(vecsDir.toString)
-        .select(col("vec_id"), col("qv"), col("codes"), col("batch"), col("cluster")))
-      .localCheckpoint(true)
-    kept.write.mode("overwrite")
-      .partitionBy("batch", "cluster")
-      .parquet(vecsDir.toString)
-    graft.store.FileTree.deleteRecursively(tombDir)
-  }
 
   // ---------------------------------------------------------------------
   // Layout maintenance

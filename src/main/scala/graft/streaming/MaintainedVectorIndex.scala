@@ -61,25 +61,6 @@ final class MaintainedVectorIndex(path: Path, spark: SparkSession,
       spark.read.parquet(tombDir.toString).select(col("vec_id")).distinct(),
       Seq("vec_id"), "left_anti")
 
-  /** Physically drop tombstoned vectors: a full masked rewrite under the
-    * same (batch, bucket) partitioning — surviving rows keep their batch
-    * ids, so the `batch <= lastCommitted` probe gating is untouched, and
-    * a partition whose every row was tombstoned disappears entirely
-    * (dynamic per-partition overwrite would silently leave such
-    * partitions' old files in place). EAGER localCheckpoint pins the
-    * surviving rows before the overwrite (the VectorIndex.vacuum
-    * discipline). */
-  def vacuum(): Unit = {
-    if (!Files.exists(tombDir)) return
-    val kept = maskedCorpus(spark.read.parquet(vecsDir.toString)
-        .select(col("vec_id"), col("v"), col("batch"), col("bucket")))
-      .localCheckpoint(true)
-    kept.write.mode("overwrite")
-      .partitionBy("batch", "bucket")
-      .parquet(vecsDir.toString)
-    graft.store.FileTree.deleteRecursively(tombDir)
-  }
-
   // ---------------------------------------------------------------------
   // Layout maintenance
 
@@ -91,8 +72,7 @@ final class MaintainedVectorIndex(path: Path, spark: SparkSession,
     * else bounds the partition count a bucket-pruned probe lists.
     * `batch=0` stays under the `batch <= lastCommitted` gate; EOS state
     * untouched; applied tombstones clear with the fold (re-requested
-    * deletes of folded-away ids are no-ops). Quiescent-stream contract,
-    * like [[vacuum]]. */
+    * deletes of folded-away ids are no-ops). Quiescent-stream contract. */
   def compact(): Unit = {
     val last = proj.lastCommitted
     val swaps = Seq(vecsDir -> path.resolve("vectors_compact"))

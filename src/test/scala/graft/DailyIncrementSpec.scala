@@ -69,15 +69,14 @@ class DailyIncrementSpec extends AnyFunSuite {
     val afterAnti = quality.filter(q => !day0Digests.contains(q._3))
     val batchWinners = afterAnti.groupBy(_._3).values.map(_.minBy(_._1)).toSeq
     // the benchmark the batch decontam must apply: day0's GATE/DEDUP
-    // SURVIVOR eval shingles (curatedEvalH — NOT the raw table: an eval
-    // doc that fails the gate or loses dedup contributes nothing) ∪ this
-    // batch's own eval-split survivors
+    // SURVIVOR eval shingles (CurationDag.evalH — NOT the raw table: an
+    // eval doc that fails the gate or loses dedup contributes nothing) ∪
+    // this batch's own eval-split survivors
     val evalShingles = {
-      val e = CorpusQueries.curatedEvalH(spark, sf,
-          docFilter = col("doc_id") % 10 =!= 0)
-        .select($"h").as[Long].collect().toSet
-      CorpusQueries.curatedKept(spark, sf,
-        docFilter = col("doc_id") % 10 =!= 0).unpersist()
+      val day0 = new graft.operators.CurationDag(spark, sf,
+        docFilter = col("doc_id") % 10 =!= 0)()
+      val e = day0.evalH.select($"h").as[Long].collect().toSet
+      day0.release()
       e ++ batchWinners.filter(_._1 % CorpusQueries.EvalMod == 0)
         .flatMap(q => shingles(q._4))
     }
@@ -1230,6 +1229,64 @@ class DailyIncrementSpec extends AnyFunSuite {
       DsirModel.load(spark, s"$cleanDir/dsir").collect().map(_.toSeq).toSet,
       "replay mutated the dsir model")
     spark.catalog.clearCache()
+  }
+
+  test("a crash at any step's seal rolls forward: recover() through another spelling of the tree lands every artifact of the clean run, nothing applied twice") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    GraftExtensions.register(spark)
+    // one day-0 tree with the batch staged; each run below applies it on
+    // its own copy, the reference with no crash
+    val template = Files.createTempDirectory("graft-daily-seal-").toString
+    CurationJob.run(spark, sf, template, docFilter = col("doc_id") % 10 =!= 0)
+    val batch = Tables.load(spark, sf, "documents")
+      .filter($"doc_id" % 10 === 0).select($"doc_id", $"text", $"lang")
+    val embs = Tables.load(spark, sf, "embeddings").select($"vec_id", $"embedding")
+    assert(DailyIncrement.stage(spark, batch, embs, template,
+      graft.functions.Tokenizer.Whitespace) > 0, "vacuous: no batch doc staged")
+    def copyOf(tag: String): String = {
+      val to = Files.createTempDirectory(s"graft-daily-seal-$tag-")
+      val from = java.nio.file.Paths.get(template)
+      graft.store.FileTree.all(from).foreach { p =>
+        val q = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
+      }
+      to.toString
+    }
+    // every artifact as a sorted multiset: a batch applied twice shows
+    // up as duplicate rows, which a set comparison would hide
+    def artifacts(d: String): Map[String, Seq[String]] = {
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      Seq("curated", "batchctr", "evalh", "shards", "packbase", "vectors", "dsir",
+          "tokenizer_vocab")
+        .map(a => a -> rows(spark.read.parquet(s"$d/$a").drop("v"))).toMap ++ Map(
+        "bm25 stats" -> rows(spark.read.parquet(Bm25Index.statsPath(s"$d/bm25"))),
+        "bm25 postings" -> rows(Bm25Index.postingsDf(spark, s"$d/bm25")))
+    }
+    val cleanDir = copyOf("clean")
+    DailyIncrement.recover(spark, cleanDir)
+    val clean = artifacts(cleanDir)
+    for (st <- Seq("curated", "batchctr", "evalh", "shards", "packbase", "bm25",
+        "vectors", "dsir", "tokvocab")) {
+      val d = copyOf(st)
+      intercept[IllegalStateException] {
+        TestSpark.crashAt(s => s.op == "create" &&
+            s.paths.head.getFileName.toString == s"$st.done") {
+          DailyIncrement.recover(spark, d)
+        }
+      }
+      // the retry names the tree through a symlink: the step listings
+      // must match the live files by their place in the artifact dir,
+      // not by how the first attempt spelled `outDir`
+      val link = Files.createSymbolicLink(
+        Files.createTempDirectory(s"graft-daily-seal-$st-link-").resolve("tree"),
+        java.nio.file.Paths.get(d))
+      DailyIncrement.recover(spark, link.toString)
+      val got = artifacts(d)
+      for ((a, want) <- clean)
+        if (got(a) != want) fail(s"crash at the $st seal: $a has ${got(a).size} rows, clean run ${want.size}")
+      spark.catalog.clearCache()
+    }
   }
 
   test("as-of readers: every historical manifest/shards/evalh view equals the live snapshot taken then; takedown purges history") {

@@ -61,7 +61,7 @@ class OptimizedQuerySpec extends AnyFunSuite {
         sum(coalesce($"hit", lit(0L))).as("n_contaminated"))
     val contam = contamCounts
       .select($"doc_id", ($"n_contaminated".cast("double") / $"n_shingles").as("contam_frac"))
-    val packed = CorpusQueries.pipelineCurate(s, dir)
+    val packed = new graft.operators.CurationDag(s, dir)().packed
       .select($"doc_id", $"shard", $"shard_offset")
     val want = rows(docs.select($"doc_id", $"n_tokens")
       .join(dups, Seq("doc_id"), "left")

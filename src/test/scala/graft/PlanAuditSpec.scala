@@ -20,6 +20,30 @@ class PlanAuditSpec extends AnyFunSuite {
     df.queryExecution.explainString(FormattedMode)
   }
 
+  /** Audits a curation key's composed frame: the registered key's own
+    * [[graft.operators.CurationDag]] and frame, taken before the key
+    * materializes it (the key itself returns a checkpointed leaf, whose
+    * plan would show nothing). A floor keeps the audit honest: the plan
+    * must hold a shuffle and more than 50 operators (the numbered
+    * `(N) Name` entries of the formatted plan), so a frame cut to a leaf
+    * fails here instead of passing every check. The DAG is released
+    * after `check`, so no cache entry leaks into a later audit. */
+  private def curationPlan(q: String)(check: (org.apache.spark.sql.DataFrame, String) => Unit): Unit = {
+    val key = graft.queries.CorpusQueries.queries(q) match {
+      case k: graft.operators.CurationDag.Key => k
+      case _ => fail(s"$q is not registered as a CurationDag key")
+    }
+    val dag = key.dag(spark, dir)
+    try {
+      val df = key.frame(dag)
+      val p = df.queryExecution.explainString(FormattedMode)
+      assert(p.contains("Exchange"), s"$q: audited plan has no Exchange:\n$p")
+      val n = "(?m)^\\((\\d+)\\) ".r.findAllMatchIn(p).map(_.group(1)).toSet.size
+      assert(n > 50, s"$q: audited plan has only $n operators:\n$p")
+      check(df, p)
+    } finally dag.release()
+  }
+
   test("q6_filter: selective predicates reach the parquet scan (PushedFilters) and only needed columns are read") {
     val p = plan("q6_filter")
     assert(p.contains("PushedFilters:"), p)
@@ -332,9 +356,10 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("pipeline_curate: the whole curation DAG plans without a single-partition stage or cartesian") {
-    val p = plan("pipeline_curate")
-    assert(!p.contains("SinglePartition"), s"curation funnels into one task:\n$p")
-    assert(!p.contains("CartesianProduct"), p)
+    curationPlan("pipeline_curate") { (_, p) =>
+      assert(!p.contains("SinglePartition"), s"curation funnels into one task:\n$p")
+      assert(!p.contains("CartesianProduct"), p)
+    }
   }
 
   test("ev_topk_per_user: rank filter plans a PARTIAL WindowGroupLimit below the exchange") {
@@ -565,17 +590,17 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("pipeline_audit: stage joins stay keyed (no cartesian), raw text never a partitioning key") {
-    val p = plan("pipeline_audit")
-    assert(!p.contains("CartesianProduct"), p)
-    assert("hashpartitioning\\([^)]*text#".r.findFirstIn(p).isEmpty, p)
+    curationPlan("pipeline_audit") { (_, p) =>
+      assert(!p.contains("CartesianProduct"), p)
+      assert("hashpartitioning\\([^)]*text#".r.findFirstIn(p).isEmpty, p)
+    }
   }
 
   test("decontam_runs/scrub: islands window partitions on (pair, diag) — no cartesian, no single partition, no text keys") {
     // pipeline_curate_scrub rides the same scrubFrames algebra over the
     // curated frames — the island windows must stay (pair, diag)-keyed
     // there too (a stage composition must not regress the operator's plan)
-    for (q <- Seq("decontam_runs", "decontam_scrub", "pipeline_curate_scrub")) {
-      val p = plan(q)
+    def check(q: String, p: String): Unit = {
       assert(!p.contains("CartesianProduct"), s"$q:\n$p")
       assert(!p.contains("SinglePartition"), s"$q:\n$p")
       assert("hashpartitioning\\([^)]*text#".r.findFirstIn(p).isEmpty, s"$q:\n$p")
@@ -587,16 +612,18 @@ class PlanAuditSpec extends AnyFunSuite {
       assert("hashpartitioning\\(t_doc#\\d+L?, e_doc#\\d+L?, diag#\\d+"
         .r.findFirstIn(p).isDefined, s"$q:\n$p")
     }
+    for (q <- Seq("decontam_runs", "decontam_scrub")) check(q, plan(q))
+    curationPlan("pipeline_curate_scrub")((_, p) => check("pipeline_curate_scrub", p))
   }
 
   test("near-dup pipeline queries: no cartesian, no text-keyed exchange, no single-partition funnel") {
     for (q <- Seq("pipeline_curate_neardup", "pipeline_audit_neardup",
         "pipeline_audit_full")) {
-      val p = plan(q)
-      assert(!p.contains("CartesianProduct"), s"$q:\n$p")
-      assert(!p.contains("SinglePartition"), s"$q:\n$p")
-      assert("hashpartitioning\\([^)]*text#".r.findFirstIn(p).isEmpty, s"$q:\n$p")
-      spark.catalog.clearCache()
+      curationPlan(q) { (_, p) =>
+        assert(!p.contains("CartesianProduct"), s"$q:\n$p")
+        assert(!p.contains("SinglePartition"), s"$q:\n$p")
+        assert("hashpartitioning\\([^)]*text#".r.findFirstIn(p).isEmpty, s"$q:\n$p")
+      }
     }
   }
 
@@ -624,16 +651,15 @@ class PlanAuditSpec extends AnyFunSuite {
   test("plan-size: the composed curation capstones stay tree-bounded (no multiplicative stage blowup)") {
     for (q <- Seq("pipeline_curate_full", "pipeline_curate_neardup",
         "pipeline_curate_scrub", "pipeline_curate_spans", "pipeline_audit_full")) {
-      val df = SparkEntry.queries(q)(spark, dir)
-      val n = graft.plans.PlanGuard.nodeCount(df, cap = 10000)
-      assert(n <= 10000, s"$q: analyzed plan exceeds 10k nodes ($n+) — a " +
-        "stage re-composition multiplied the tree; cut lineage at the " +
-        "stage boundary (PlanGuard scaladoc)")
-      // formatting must also stay cheap — this is the exact site that
-      // OOM'd r13's suite runs
-      assert(df.queryExecution.explainString(FormattedMode).length < 4000000,
-        s"$q: formatted plan unexpectedly large")
-      spark.catalog.clearCache()
+      curationPlan(q) { (df, p) =>
+        val n = graft.plans.PlanGuard.nodeCount(df, cap = 10000)
+        assert(n <= 10000, s"$q: analyzed plan exceeds 10k nodes ($n+) — a " +
+          "stage re-composition multiplied the tree; cut lineage at the " +
+          "stage boundary (PlanGuard scaladoc)")
+        // formatting must also stay cheap — this is the exact site that
+        // OOM'd r13's suite runs
+        assert(p.length < 4000000, s"$q: formatted plan unexpectedly large")
+      }
     }
   }
 

@@ -184,7 +184,7 @@ class StreamingRetrievalSpec extends AnyFunSuite {
 
     // delete on the STREAMING artifact: exact (side-table-free mask) —
     // probe == a batch materialize+probe on the remaining vectors; and
-    // vacuum physically erases without changing any probe
+    // compact physically erases without changing any probe
     val removed = rows.map(_._1).filter(_ % 5 == 3).toSet
     assert(removed.nonEmpty, "takedown set empty — vacuous")
     idx.delete(removed.toSeq.toDF("vec_id"))
@@ -195,15 +195,15 @@ class StreamingRetrievalSpec extends AnyFunSuite {
       hits(VectorIndex.probe(spark, remainingIdx, queries, k = 3, nprobe = 2)),
       "maintained probe after delete != rebuild on remaining vectors")
     assert(afterDelete != expected, "vacuous: delete changed no probe result")
-    idx.vacuum()
+    idx.compact()
     assert(hits(idx.probe(queries, k = 3, nprobe = 2)) == afterDelete,
-      "vacuum changed the probe")
+      "compact changed the probe")
     val survivors = spark.read.parquet(idxPath.resolve("vectors").toString)
       .select($"vec_id").distinct().as[Long].collect().toSet
     assert(survivors.intersect(removed).isEmpty,
-      "vacuum left removed vec_ids on disk")
+      "compact left removed vec_ids on disk")
     assert(!Files.exists(idxPath.resolve("tombstones")),
-      "tombstones survived the vacuum")
+      "tombstones survived the compact")
     spark.catalog.clearCache()
   }
 
@@ -283,15 +283,15 @@ class StreamingRetrievalSpec extends AnyFunSuite {
       hits(IntIvfIndex.probeAdc(spark, remainingIdx, qpts, 2, 5, 40)),
       "maintained ADC probe after delete != rebuild on remaining vectors")
     assert(afterDelete != expected, "vacuous: delete changed no probe result")
-    idx.vacuum()
+    idx.compact()
     assert(hits(idx.probeAdc(queries, 2, 5, 40)) == afterDelete,
-      "vacuum changed the probe")
+      "compact changed the probe")
     val survivors = spark.read.parquet(idxPath.resolve("vectors").toString)
       .select($"vec_id").distinct().as[Long].collect().toSet
     assert(survivors.intersect(removed).isEmpty,
-      "vacuum left removed vec_ids on disk")
+      "compact left removed vec_ids on disk")
     assert(!Files.exists(idxPath.resolve("tombstones")),
-      "tombstones survived the vacuum")
+      "tombstones survived the compact")
     pts.unpersist()
     spark.catalog.clearCache()
   }
