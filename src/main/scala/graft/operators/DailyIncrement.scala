@@ -613,8 +613,10 @@ object DailyIncrement {
           s"${oversized.headOption.map(_.get(1)).orNull} tokens > budget $budget — " +
           "chunk oversized docs (doc_chunk) before packing")
       if (!kept.isEmpty) {
-        PackedExport.pack(kept.select($"doc_id", $"n_tokens"), base = base, budget = budget)
+        val in = kept.select($"doc_id", $"n_tokens")
+        try PackedExport.pack(in, base = base, budget = budget)
           .write.partitionBy("shard").mode("append").parquet(s"$outDir/shards")
+        finally in.unpersist() // pack caches its input
       }
     }
     step("packbase", Seq(s"$outDir/packbase")) {

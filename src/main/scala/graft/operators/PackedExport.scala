@@ -27,7 +27,9 @@ object PackedExport {
     * uses: `docs` (with `orderKey` and `n_tokens`) stream in `orderKey`
     * order into `budget`-token training sequences, the stream starting
     * `base` tokens in. Returns `docs`' columns plus (shard, shard_offset),
-    * the doc's sequence and its token offset inside it. */
+    * the doc's sequence and its token offset inside it. `docs` is cached
+    * (GlobalCumsum.runningBefore); the caller unpersists it once the
+    * result has been written. */
   def pack(docs: DataFrame, orderKey: String = "doc_id", base: Long = 0L,
       budget: Long = graft.queries.CorpusQueries.PackBudget): DataFrame = {
     GlobalCumsum.runningBefore(docs, orderKey, "n_tokens", "cb")
@@ -60,8 +62,9 @@ object PackedExport {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
       return 0L
     }
-    pack(docs.select(col("doc_id"), col("n_tokens")), budget = budget)
-      .write.partitionBy("shard").mode("overwrite").parquet(outDir)
+    val in = docs.select(col("doc_id"), col("n_tokens"))
+    try pack(in, budget = budget).write.partitionBy("shard").mode("overwrite").parquet(outDir)
+    finally in.unpersist() // pack caches its input
     val spark = docs.sparkSession
     // partition-column inference types `shard=K` dirs as int — normalize
     spark.read.parquet(outDir)

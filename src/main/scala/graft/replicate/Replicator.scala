@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.codec.Cursor
+import graft.functions.expressions.LongParam
 import graft.sources.KafkaShapedLog
 import graft.store.EventLog
 
@@ -197,8 +198,11 @@ final class Replicator(
     * WITHOUT relying on the Spark checkpoint alone: every batch is
     * re-filtered by the sink's committed cursor, so a replayed batch (crash
     * after sink commit, before checkpoint commit — or a deleted checkpoint)
-    * re-commits nothing. Micro-batches are whole committed appends in lsn
-    * order, so the cursor always covers a complete id prefix; an id gap
+    * re-commits nothing. The re-filter's cursor is a pair of
+    * [[LongParam]]s (the batch's files are already lsn-bounded), so each
+    * micro-batch runs the first one's compiled code. Micro-batches are
+    * whole committed appends in lsn order, so the cursor always covers a
+    * complete id prefix; an id gap
     * (retention) FAILS FAST (G8) — recover with a [[run]] drain and a
     * stream restart. This is the always-on form of [[runLoop]];
     * `Trigger.AvailableNow` turns it into a one-shot drain. */
@@ -233,7 +237,8 @@ final class Replicator(
           val cursor = sink.cursorFor(t)
           if (!sourceIdle(t, cursor))
             pollWith(t, cursor, batch.filter(col("topic") === t &&
-              struct(col("lsn"), col("id")) > struct(lit(cursor.lsn), lit(cursor.id)))
+              struct(col("lsn"), col("id")) >
+                struct(LongParam.col(cursor.lsn), LongParam.col(cursor.id)))
               .drop("topic"), skipGaps = false)
         } finally { if (batch ne df) batch.unpersist(); () }
       }

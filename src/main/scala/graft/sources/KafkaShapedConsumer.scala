@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.expressions.LongParam
 import graft.store.TopicOffsets
 
 /** Incremental read-committed consumer over a [[KafkaShapedLog]] — the
@@ -26,14 +27,19 @@ import graft.store.TopicOffsets
   * partition, the last consumed offset with the manifest's next offset —
   * driver-side metadata, so a poll with nothing new launches no Spark job
   * (a Kafka idle fetch analog). A delivering poll launches no job of its
-  * own either: the handler gets that manifest's files filtered to
-  * `last < offset < next` per partition, and only what the handler runs
-  * executes. The count needs no job because `appendTxn` writes dense
-  * offsets per partition. Each `appendTxn` transaction stages one file of
-  * one topic, sorted by (partition, offset); the manifest keeps no per-file
-  * topic or offset ranges, so the filter is row-level over every committed
-  * file. A delivering poll's scan therefore grows with committed history,
-  * and long-lived logs should compact.
+  * own either: the handler gets the records with `last < offset < next`
+  * per partition, and only what the handler runs executes. The count needs
+  * no job because `appendTxn` writes dense offsets per partition.
+  *
+  * A delivering poll's scan follows what it delivers, not committed
+  * history: the manifest records each file's (topic, partition, first,
+  * last) offset ranges, and the poll opens only the files whose ranges
+  * meet a due `(last, next)` range (plus any file with no recorded
+  * ranges), then filters rows. Each `appendTxn` transaction stages one
+  * file of one topic in bounded row groups, so a poll one transaction
+  * behind reads one file, split across cores when it is large. The
+  * offset bounds are [[LongParam]]s, so every poll runs the first poll's
+  * compiled code.
   */
 final class KafkaShapedConsumer(
     log: KafkaShapedLog,
@@ -50,10 +56,12 @@ final class KafkaShapedConsumer(
     (m, due)
   }
 
-  /** The records of `due` in manifest `m`. */
+  /** The records of `due` in manifest `m`, read from the files that hold
+    * them. */
   private def records(m: KafkaShapedLog.Manifest, due: Seq[(Int, Long, Long)]): DataFrame =
-    log.read(topic, m).filter(due.map { case (p, last, next) =>
-      col("partition") === p && col("offset") > last && col("offset") < next
+    log.scan(topic, m.filesMeeting(topic, due)).filter(due.map { case (p, last, next) =>
+      col("partition") === p && col("offset") > LongParam.col(last) &&
+        col("offset") < LongParam.col(next)
     }.foldLeft(lit(false): Column)(_ || _))
 
   /** Committed-but-unconsumed records, per the offset store, as of one

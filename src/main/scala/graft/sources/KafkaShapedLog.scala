@@ -32,9 +32,16 @@ import graft.store.{Commit, FileTree}
   * `_event_replicator_progress` topic (EventReplicator.java:79,158) fused
   * into one commit point.
   *
-  * Scale: the manifest holds file names and counters only (O(appends), and
-  * compactable); record data never passes through the driver — one Spark
-  * task writes a transaction's staged file and commit is a metadata rename.
+  * The manifest also records, per file, the (topic, partition, first
+  * offset, last offset) ranges it holds, committed with the file list, so
+  * a consumer opens only the files its unconsumed offsets fall in. Files
+  * without recorded ranges (listed by a manifest written before ranges
+  * were kept) are opened by every read.
+  *
+  * Scale: the manifest holds file names, ranges and counters only
+  * (O(appends), and compactable); record data never passes through the
+  * driver — one Spark task writes a transaction's staged file and commit
+  * is a metadata rename.
   */
 final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numPartitions: Int = 1) {
 
@@ -73,7 +80,9 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
     * base offset is looked up in a literal array of this topic's next
     * offsets, from the manifest snapshot the commit extends. The
     * per-partition counts ride the write as `observe` metrics, so the next
-    * offsets need no second pass.
+    * offsets, and the file's offset ranges, need no second pass. Row
+    * groups are bounded at [[RowGroupBytes]], so a large transaction's
+    * file is several row groups that a read splits across cores.
     *
     * `newCursor` is by-name and evaluated exactly once, AFTER the staged
     * write has completed — so callers may derive it from `observe` metrics
@@ -98,7 +107,7 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
         (0 until numPartitions).map(p => count(when(partition === p, 1)).as(s"n$p")): _*)
       .select(lit(topic).as("topic"), partition, col("offset"), col("key"), col("value"),
         col("headers"), col("timestamp"))
-      .write.parquet(stage.toString)
+      .write.option("parquet.block.size", RowGroupBytes).parquet(stage.toString)
     val n = obs.get("n").asInstanceOf[Long]
     if (n == 0) {
       // empty transaction: nothing staged, nothing to commit — drop the
@@ -106,30 +115,35 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
       FileTree.deleteRecursively(stage)
       return 0L
     }
-    val files = {
-      val s = Files.list(stage)
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => root.relativize(p).toString).toList
-      finally s.close()
-    }
-    val offsets = (0 until numPartitions).foldLeft(m.offsets) { (acc, p) =>
-      val np = obs.get(s"n$p").asInstanceOf[Long]
-      if (np == 0) acc else acc + ((topic, p) -> (next(p) + np))
-    }
+    val files = stagedFiles(stage)
+    val ranges = (0 until numPartitions).map(p => p -> obs.get(s"n$p").asInstanceOf[Long])
+      .collect { case (p, np) if np > 0 => OffsetRange(topic, p, next(p), next(p) + np - 1) }
+      .toList
+    val offsets = ranges.foldLeft(m.offsets)((acc, r) => acc + ((topic, r.partition) -> (r.last + 1)))
     commitManifest(stage, Manifest(m.files ++ files, offsets,
-      m.cursors + (sourceTable -> newCursor)))
+      m.cursors + (sourceTable -> newCursor), m.ranges ++ files.map(_ -> ranges)))
     n
   }
 
+  /** The parquet files of a staged dir, relative to the log root. */
+  private def stagedFiles(stage: Path): List[String] = {
+    val s = Files.list(stage)
+    try s.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(p => root.relativize(p).toString).toList.sorted
+    finally s.close()
+  }
+
   /** read_committed view of one topic, as of manifest `at`. */
-  def read(topic: String, at: Manifest = manifest()): DataFrame = {
-    val files = at.files.map(f => root.resolve(f).toString)
+  def read(topic: String, at: Manifest = manifest()): DataFrame = scan(topic, at.files)
+
+  /** The records of `topic` in the committed `files` (manifest names). */
+  def scan(topic: String, files: Seq[String]): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], recordSchema)
         .filter(col("topic") === topic)
-    else spark.read.schema(recordSchema).parquet(files: _*).filter(col("topic") === topic)
-  }
+    else spark.read.schema(recordSchema).parquet(files.map(f => root.resolve(f).toString): _*)
+      .filter(col("topic") === topic)
 
   /** S2/S3 direct publish: typed events → records, bypassing the source
     * log (the reference's Kafka-backed `EventStore.save`,
@@ -191,9 +205,12 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
     * (topic, partition, offset)-range-partitioned files: thousands of
     * small per-transaction files make the read_committed scan
     * file-open-bound at scale; compaction restores big sorted segments
-    * whose min/max stats still prune offset-resumed consumers. Offsets
-    * and progress cursors are untouched — only the `files` list swaps, in the same atomic manifest commit as every transaction,
-    * so in-flight readers keep their old generation until [[vacuum]]. */
+    * whose min/max stats still prune offset-resumed consumers. The new
+    * files' offset ranges come from one grouped aggregate over the staged
+    * output. Offsets and progress cursors are untouched — only the files
+    * and their ranges swap, in the same atomic manifest commit as every
+    * transaction, so in-flight readers keep their old generation until
+    * [[vacuum]]. */
   def compact(targetFiles: Int = 1): Unit = synchronized {
     val m = manifest()
     if (m.files.isEmpty) return
@@ -203,14 +220,17 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
       .repartitionByRange(targetFiles, col("topic"), col("partition"), col("offset"))
       .sortWithinPartitions(col("topic"), col("partition"), col("offset"))
       .write.parquet(stage.toString)
-    val files = {
-      val s = Files.list(stage)
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => root.relativize(p).toString).toList.sorted
-      finally s.close()
-    }
-    commitManifest(stage, m.copy(files = files))
+    val files = stagedFiles(stage)
+    val byName = files.map(f => Paths.get(f).getFileName.toString -> f).toMap
+    val found = spark.read.schema(recordSchema).parquet(files.map(f => root.resolve(f).toString): _*)
+      .groupBy(col("_metadata.file_name"), col("topic"), col("partition"))
+      .agg(min(col("offset")), max(col("offset")))
+      .collect().toList
+      .map(r => byName(r.getString(0)) ->
+        OffsetRange(r.getString(1), r.getInt(2), r.getLong(3), r.getLong(4)))
+      .groupMap(_._1)(_._2)
+    commitManifest(stage, m.copy(files = files,
+      ranges = files.map(f => f -> found.getOrElse(f, Nil)).toMap))
   }
 
   /** Reclaim staged parquet no committed reader can reach: files under
@@ -258,49 +278,72 @@ object KafkaShapedLog {
       nullable = true),
     StructField("timestamp", TimestampType, nullable = false)))
 
-  /** Committed state: files + per-(topic,partition) next offsets + per-source
-    * progress cursors. Hand-rolled JSON (flat, driver-side, tiny). */
+  /** Row-group bound of a transaction's staged file. */
+  val RowGroupBytes: Long = 1L << 20
+
+  /** The offsets `first..last` of one (topic, partition) held by a file. */
+  final case class OffsetRange(topic: String, partition: Int, first: Long, last: Long)
+
+  /** Committed state: files, their offset ranges, per-(topic,partition)
+    * next offsets and per-source progress cursors. A file with no entry in
+    * `ranges` may hold any record. */
   final case class Manifest(
       files: List[String],
       offsets: Map[(String, Int), Long],
-      cursors: Map[String, Cursor]) {
+      cursors: Map[String, Cursor],
+      ranges: Map[String, List[OffsetRange]] = Map.empty) {
+
+    /** The files that may hold a record of `topic` with
+      * `after < offset < before` in `partition`, for some
+      * (partition, after, before) of `due`. */
+    def filesMeeting(topic: String, due: Seq[(Int, Long, Long)]): List[String] =
+      files.filter(f => ranges.get(f).forall(_.exists(r => r.topic == topic && due.exists {
+        case (p, after, before) => r.partition == p && r.last > after && r.first < before
+      })))
+
     def render: String = {
       def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      def obj(kvs: Seq[(String, String)]) =
+        kvs.map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ",", "}")
       val fs = files.map(q).mkString("[", ",", "]")
-      val os = offsets.toSeq.sortBy(_._1)
-        .map { case ((t, p), o) => s"${q(s"$t/$p")}: $o" }.mkString("{", ",", "}")
-      val cs = cursors.toSeq.sortBy(_._1)
-        .map { case (t, c) => s"${q(t)}: ${q(c.encoded)}" }.mkString("{", ",", "}")
-      s"""{"files": $fs, "offsets": $os, "cursors": $cs}"""
+      val os = obj(offsets.toSeq.sortBy(_._1).map { case ((t, p), o) => s"$t/$p" -> o.toString })
+      val cs = obj(cursors.toSeq.sortBy(_._1).map { case (t, c) => t -> q(c.encoded) })
+      val rs = obj(ranges.toSeq.sortBy(_._1).map { case (f, rs) =>
+        f -> rs.map(r => s"[${q(r.topic)},${r.partition},${r.first},${r.last}]").mkString("[", ",", "]")
+      })
+      s"""{"files": $fs, "offsets": $os, "cursors": $cs, "ranges": $rs}"""
     }
   }
 
   object Manifest {
-    /** Minimal parser for the exact shape [[Manifest.render]] emits (other
-      * sections, such as the `pending` one older manifests carry, are
-      * ignored). */
+    private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+    /** Parses what [[Manifest.render]] emits. `ranges` may be absent (a
+      * manifest written before ranges were kept); other sections, such as
+      * the `pending` one older manifests carry, are ignored. */
     def parse(s: String): Manifest = {
-      def strings(arr: String): List[String] =
-        "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(arr)
-          .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).toList
-      def section(name: String): String = {
-        val i = s.indexOf("\"" + name + "\"")
-        require(i >= 0, s"manifest missing $name")
-        val start = s.indexOf(if (name == "files") '[' else '{', i)
-        val end = s.indexOf(if (name == "files") ']' else '}', start)
-        s.substring(start + 1, end)
+      val json = mapper.readTree(s)
+      def section(name: String) = {
+        val n = json.get(name)
+        require(n != null, s"manifest missing $name")
+        n
       }
-      val files = strings(section("files"))
-      val offsets = "\"([^\"]+)/(\\d+)\"\\s*:\\s*(\\d+)".r
-        .findAllMatchIn(section("offsets"))
-        .map(m => (m.group(1), m.group(2).toInt) -> m.group(3).toLong).toMap
+      def entries(n: com.fasterxml.jackson.databind.JsonNode) =
+        n.properties().asScala.toList.map(e => e.getKey -> e.getValue)
+      val files = section("files").asScala.map(_.asText).toList
+      val offsets = entries(section("offsets")).map { case (k, v) =>
+        val i = k.lastIndexOf('/')
+        (k.substring(0, i), k.substring(i + 1).toInt) -> v.asLong
+      }.toMap
       // strict: a malformed cursor value must fail init, not be skipped
       // (EventReplicatorIT.java:251-277 — Cursor.parse throws
       // IllegalStateException on anything but "<lsn>:<id>")
-      val cursors = "\"([^\"]+)\"\\s*:\\s*\"([^\"]*)\"".r
-        .findAllMatchIn(section("cursors"))
-        .map(m => m.group(1) -> Cursor.parse(m.group(2))).toMap
-      Manifest(files, offsets, cursors)
+      val cursors = entries(section("cursors")).map { case (t, c) => t -> Cursor.parse(c.asText) }.toMap
+      val ranges = Option(json.get("ranges")).toList.flatMap(entries).map { case (f, rs) =>
+        f -> rs.asScala.toList.map(r =>
+          OffsetRange(r.get(0).asText, r.get(1).asInt, r.get(2).asLong, r.get(3).asLong))
+      }.toMap
+      Manifest(files, offsets, cursors, ranges)
     }
   }
 

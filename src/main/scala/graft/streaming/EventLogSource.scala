@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.StreamSourceProvider
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import graft.functions.expressions.LongParam
 import graft.store.{EventLog, EventLogSchema}
 
 /** Structured Streaming source over [[EventLog]] topics, gated on each
@@ -25,9 +26,10 @@ import graft.store.{EventLog, EventLogSchema}
   *
   * A batch reads the manifest-listed segments of its appends (by their
   * `seg-<lsn>-…` names) plus any compacted files, filtered on lsn: cost
-  * O(new appends). At most `maxAppendsPerTrigger` appends per topic are
-  * admitted per trigger; `Trigger.AvailableNow` stops at the lsns
-  * committed when it started. Rows carry their `topic`. */
+  * O(new appends). The lsn bounds are [[LongParam]]s, so every batch runs
+  * the first batch's compiled code. At most `maxAppendsPerTrigger` appends
+  * per topic are admitted per trigger; `Trigger.AvailableNow` stops at the
+  * lsns committed when it started. Rows carry their `topic`. */
 final class EventLogSource(spark: SparkSession, logRoot: String, topics: Seq[String],
     maxAppendsPerTrigger: Int)
     extends Source with SupportsAdmissionControl with SupportsTriggerAvailableNow {
@@ -71,7 +73,7 @@ final class EventLogSource(spark: SparkSession, logRoot: String, topics: Seq[Str
       if (files.isEmpty) None
       else Some(GraftPlanBridge.streamingParquet(spark, files.map(_.toString),
           EventLogSchema.schema)
-        .filter(col("lsn") > lo && col("lsn") <= hi)
+        .filter(col("lsn") > LongParam.col(lo) && col("lsn") <= LongParam.col(hi))
         .withColumn("topic", lit(t)))
     }
     if (parts.isEmpty) GraftPlanBridge.emptyStream(spark, schema)

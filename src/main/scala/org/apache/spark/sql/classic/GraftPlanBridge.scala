@@ -1,6 +1,7 @@
 package org.apache.spark.sql.classic
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.{DataSource, LogicalRelation}
 import org.apache.spark.sql.types.StructType
@@ -13,6 +14,9 @@ object GraftPlanBridge {
   def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan):
       org.apache.spark.sql.DataFrame =
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
+
+  /** A column over one of graft's own catalyst expressions. */
+  def column(e: Expression): org.apache.spark.sql.Column = ExpressionUtils.column(e)
 
   /** A streaming-flagged parquet scan of exactly `paths` — the batch shape
     * a V1 stream source's `getBatch` must return (Spark's FileStreamSource

@@ -131,6 +131,25 @@ class CodegenSpec extends AnyFunSuite {
     assert(headers.forall(_ == Seq("id", "lsn", "seq")))
   }
 
+  test("LongParam compiles; plans differing only in its values share compiled code") {
+    import spark.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import graft.functions.expressions.LongParam
+    val rows = spark.range(0, 100).select(($"id" / 10).cast("long").as("lsn"), $"id")
+    def run(lo: Long, hi: Long): Seq[(Long, Long)] = rows
+      .filter($"lsn" > LongParam.col(lo) && $"lsn" <= LongParam.col(hi) &&
+        struct($"lsn", $"id") > struct(LongParam.col(lo + 1), LongParam.col(lo * 10 + 13)))
+      .select($"id", ($"id" + LongParam.col(hi)).as("s")).as[(Long, Long)].collect().toSeq
+    def expect(lo: Long, hi: Long): Seq[(Long, Long)] = (0L until 100L)
+      .filter { i => val l = i / 10; l > lo && l <= hi && (l > lo + 1 || i > lo * 10 + 13) }
+      .map(i => (i, i + hi))
+    assert(run(1, 3) == expect(1, 3))
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(run(4, 7) == expect(4, 7))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before,
+      "new parameter values compiled new classes")
+  }
+
   test("graft_lsh_bands compiles; bit-identical to the composed graft_dot spelling") {
     import spark.implicits._
     import graft.queries.CrossHash

@@ -194,7 +194,10 @@ class CommitCrashMatrixSpec extends AnyFunSuite {
             r.getAs[Long]("offset"), new String(r.getAs[Array[Byte]]("key"), UTF_8))).sorted.toSeq
           assert(rows.map(r => (r._1, r._2)).distinct.size == rows.size, "duplicate (partition, offset)")
           val m = s.manifest()
-          Map("sink" -> (rows, m.offsets, m.cursors))
+          // each listed file's offset ranges (file names are fresh per
+          // run, so the ranges are compared without them)
+          val ranges = m.files.map(f => m.ranges.get(f).toString).sorted
+          Map("sink" -> (rows, m.offsets, m.cursors, ranges))
         }
         def publishes() =
           Seq(root.resolve("manifest.json") -> sink.manifest().files.map(root.resolve).toSet)

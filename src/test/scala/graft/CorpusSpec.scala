@@ -266,6 +266,19 @@ class CorpusSpec extends AnyFunSuite {
     assert(e.getMessage.contains("chunk oversized docs"), e.getMessage)
   }
 
+  test("PackedExport.writeShards releases the input its pack cached") {
+    import org.apache.spark.sql.functions.size
+    import spark.implicits._
+    import graft.queries.CrossHash.tokens
+    val docs = Tables.load(spark, dir, "documents")
+      .select($"doc_id", size(tokens($"text")).cast("long").as("n_tokens"))
+    spark.catalog.clearCache()
+    val out = java.nio.file.Files.createTempDirectory("graft-packed-rel-").toString
+    assert(graft.operators.PackedExport.writeShards(docs, out,
+      graft.queries.CorpusQueries.PackBudget) > 1)
+    assert(spark.sharedState.cacheManager.isEmpty, "writeShards left a cache entry")
+  }
+
   test("mix_temperature: α=0.5 weights — probabilities sum to 1 and flatten the token head") {
     import spark.implicits._
     val rows = SparkEntry.queries("mix_temperature")(spark, dir)

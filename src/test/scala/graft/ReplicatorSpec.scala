@@ -489,6 +489,8 @@ class ReplicatorSpec extends AnyFunSuite {
     assert(filesBefore >= 3, s"fixture should commit several files, got $filesBefore")
     sink.compact(targetFiles = 1)
     assert(sink.manifest().files.size == 1, "one compacted segment")
+    assert(sink.manifest().ranges == Map(sink.manifest().files.head ->
+      List(KafkaShapedLog.OffsetRange("t_events", 0, 0, 6))), "compaction records ranges")
     assert(sink.read("t_events").orderBy("partition", "offset").collect().toSeq == before,
       "compaction must not change committed records")
     assert(sink.cursorFor("t_events") == Cursor(1, 7), "cursor untouched")
@@ -567,15 +569,106 @@ class ReplicatorSpec extends AnyFunSuite {
   }
 
   test("manifest renders and reparses losslessly") {
-    import graft.sources.KafkaShapedLog.Manifest
+    import graft.sources.KafkaShapedLog.{Manifest, OffsetRange}
     val m = Manifest(
       List("staging/x/part-0.parquet", "staging/y/part-1.parquet"),
       Map(("a_events", 0) -> 5L, ("b_events", 2) -> 9L),
-      Map("a_events" -> Cursor(3, 17)))
+      Map("a_events" -> Cursor(3, 17)),
+      Map("staging/x/part-0.parquet" -> List(OffsetRange("a_events", 0, 0, 4)),
+        "staging/y/part-1.parquet" -> List(OffsetRange("b_events", 0, 0, 8),
+          OffsetRange("b\"]}/events", 2, 3, 8))))
     assert(Manifest.parse(m.render) == m)
     // older manifests carry a `pending` section; it is ignored
     assert(Manifest.parse(m.render.stripSuffix("}") +
       """, "pending": {"a_events": ["18:25:4:staging/pending-1/part.parquet"]}}""") == m)
+    // a manifest written before ranges were kept has no ranges section
+    val legacy = m.copy(ranges = Map.empty).render.replace(""", "ranges": {}""", "")
+    assert(!legacy.contains("ranges"))
+    assert(Manifest.parse(legacy) == m.copy(ranges = Map.empty))
+  }
+
+  test("files a manifest lists without ranges are read on every poll") {
+    import graft.sources.KafkaShapedLog.Manifest
+    val (_, sink, _, consumer) = consumerFixture(partitions = 4)
+    sink.publishEvents("t_events", (1 to 8).map(ev))
+    sink.publishEvents("t_events", (9 to 16).map(ev))
+    val path = sink.root.resolve("manifest.json")
+    Files.writeString(path, Manifest.parse(Files.readString(path)).copy(ranges = Map.empty)
+      .render.replace(""", "ranges": {}""", ""))
+    assert(consumer.poll(_.count()) == 16L)
+    sink.publishEvents("t_events", (17 to 24).map(ev))
+    assert(sink.manifest().ranges.size == 1, "the new transaction's file has ranges")
+    var files = -1L
+    var delivered = Seq.empty[Long]
+    assert(consumer.poll { df =>
+      files = TestSpark.filesRead(df)
+      delivered = df.collect().toSeq.map(r =>
+        new String(r.getAs[Array[Byte]]("value"), UTF_8).stripPrefix("payload-").toLong)
+    } == 8L)
+    assert(files == 3L, "both files without ranges and the new file are opened")
+    assert(delivered.sorted == (17L to 24L))
+  }
+
+  test("a poll one transaction behind 40 opens one file and runs no job of its own") {
+    val (_, sink, _, consumer) = consumerFixture(partitions = 4)
+    (0 until 39).foreach(i => sink.publishEvents("t_events", (8 * i + 1 to 8 * i + 8).map(ev)))
+    assert(consumer.poll(_ => ()) == 39L * 8)
+    sink.publishEvents("t_events", (313 to 320).map(ev))
+    assert(sink.manifest().files.size == 40)
+    var files = -1L
+    val (n, ownJobs) = TestSpark.jobsDuring(consumer.poll { df =>
+      files = TestSpark.jobsDuring(TestSpark.filesRead(df))._1
+    })
+    assert(n == 8L)
+    assert(ownJobs == 0, s"poll launched $ownJobs jobs beside its handler's")
+    assert(files == 1L, s"the poll read $files files")
+  }
+
+  test("a transaction larger than the row-group bound stages one file of several row groups") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val sink = KafkaShapedLog(Files.createTempDirectory("graft-rg-").toString, spark, numPartitions = 4)
+    def rowGroups(file: String): Int = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(sink.root.resolve(file).toString),
+        spark.sparkContext.hadoopConfiguration))
+      try r.getRowGroups.size finally r.close()
+    }
+    val rnd = new scala.util.Random(7)
+    val big = (1 to 3000).map(i => Event(s"key-$i".getBytes(UTF_8), rnd.nextBytes(1024),
+      Instant.parse("2024-01-01T00:00:00Z").plusSeconds(i)))
+    assert(sink.publishEvents("rg_events", big) == 3000L)
+    assert(sink.publishEvents("rg_events", (1 to 40).map(ev)) == 40L)
+    val Seq(large, small) = sink.manifest().files
+    assert(rowGroups(large) > 1, "3 MiB of records in one row group")
+    assert(rowGroups(small) == 1)
+    assert(sink.read("rg_events").count() == 3040L)
+  }
+
+  test("a warm replicateStream micro-batch and its delivering poll compile no code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (log, sink, _, consumer) = consumerFixture(partitions = 4)
+    val rep = new Replicator(log, sink, batchSize = 100)
+    // one running query: Spark keys its compiled classes by class loader,
+    // and a restarted query runs under a new one
+    val q = rep.replicateStream("t_events",
+      Files.createTempDirectory("graft-repl-cg-").resolve("c").toString,
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+    /** Append 40 events, replicate them and deliver them in one poll;
+      * returns the classes compiled meanwhile. */
+    def round(i: Int): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      log.saveAll("t_events", (40 * i + 1 to 40 * i + 40).map(ev))
+      q.processAllAvailable()
+      assert(consumer.poll(_.collect()) == 40L)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    try {
+      round(0)
+      round(1)
+      assert(round(2) == 0L, "the third micro-batch and poll compiled new classes")
+      assert(q.recentProgress.count(_.numInputRows > 0) == 3, "one micro-batch per append")
+    } finally q.stop()
   }
 
   test("drain job budget: full drain = ONE Spark job, idle poll = ZERO (scale: poll cadence)") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +13,15 @@ class RowValueCursorBoundSpec extends AnyFunSuite {
     s
   }
 
-  private def parquetDF(rows: Seq[(Long, Long)]): org.apache.spark.sql.DataFrame = {
+  private def parquetDir(rows: Seq[(Long, Long)]): String = {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-rule-").toString
     rows.toDF("lsn", "id").write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir)
+    dir
   }
+
+  private def parquetDF(rows: Seq[(Long, Long)]): org.apache.spark.sql.DataFrame =
+    spark.read.parquet(parquetDir(rows))
 
   test("struct cursor filter gains lsn >= bound in the optimized plan") {
     import spark.implicits._
@@ -72,6 +76,28 @@ class RowValueCursorBoundSpec extends AnyFunSuite {
       .getOrElse("")
     assert(pushed.contains("Or(GreaterThan(lsn"), pushed)
     assert(df.collect().map(_.getLong(1)).toSet == (6L to 10L).toSet)
+  }
+
+  test("bound parameters produce no bounds; rows filter identically with and without the rule") {
+    import graft.functions.expressions.LongParam
+    val rows = (1L to 30L).map(i => (i / 3 + 1, i))
+    val dir = parquetDir(rows)
+    val expected = rows.filter { case (l, i) => l > 4 || (l == 4 && i > 10) }.toSet
+    val without = spark.newSession()
+    without.conf.set("spark.sql.optimizer.excludedRules", graft.plans.RowValueCursorBound.ruleName)
+    def cursorFilter(s: org.apache.spark.sql.SparkSession, lsn: Column, id: Column) =
+      s.read.parquet(dir).filter(struct(col("lsn"), col("id")) > struct(lsn, id))
+    def got(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def bounded(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.toString.contains(">=")
+    val withRule = cursorFilter(spark, LongParam.col(4), LongParam.col(10))
+    assert(!bounded(withRule),
+      s"a bound was derived from parameters:\n${withRule.queryExecution.optimizedPlan}")
+    assert(bounded(cursorFilter(spark, lit(4L), lit(10L))), "the rule is on in this session")
+    assert(!bounded(cursorFilter(without, lit(4L), lit(10L))), "the rule is off in the other")
+    assert(got(withRule) == expected)
+    assert(got(cursorFilter(without, LongParam.col(4), LongParam.col(10))) == expected)
   }
 
   test("NULL literal components produce no bounds (struct ordering is nulls-first total order)") {
