@@ -134,16 +134,19 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
     finally s.close()
   }
 
-  /** read_committed view of one topic, as of manifest `at`. */
-  def read(topic: String, at: Manifest = manifest()): DataFrame = scan(topic, at.files)
+  /** read_committed view of one topic. */
+  def read(topic: String): DataFrame = scan(topic, manifest().files)
 
   /** The records of `topic` in the committed `files` (manifest names). */
   def scan(topic: String, files: Seq[String]): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], recordSchema)
         .filter(col("topic") === topic)
-    else spark.read.schema(recordSchema).parquet(files.map(f => root.resolve(f).toString): _*)
-      .filter(col("topic") === topic)
+    else parquet(files).filter(col("topic") === topic)
+
+  /** The records of every topic in `files` (names relative to the root). */
+  private def parquet(files: Seq[String]): DataFrame =
+    spark.read.schema(recordSchema).parquet(files.map(f => root.resolve(f).toString): _*)
 
   /** S2/S3 direct publish: typed events → records, bypassing the source
     * log (the reference's Kafka-backed `EventStore.save`,
@@ -215,14 +218,13 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
     val m = manifest()
     if (m.files.isEmpty) return
     val stage = root.resolve("staging").resolve(s"compact-${UUID.randomUUID()}")
-    spark.read.schema(recordSchema)
-      .parquet(m.files.map(f => root.resolve(f).toString): _*)
+    parquet(m.files)
       .repartitionByRange(targetFiles, col("topic"), col("partition"), col("offset"))
       .sortWithinPartitions(col("topic"), col("partition"), col("offset"))
       .write.parquet(stage.toString)
     val files = stagedFiles(stage)
     val byName = files.map(f => Paths.get(f).getFileName.toString -> f).toMap
-    val found = spark.read.schema(recordSchema).parquet(files.map(f => root.resolve(f).toString): _*)
+    val found = parquet(files)
       .groupBy(col("_metadata.file_name"), col("topic"), col("partition"))
       .agg(min(col("offset")), max(col("offset")))
       .collect().toList
@@ -301,6 +303,8 @@ object KafkaShapedLog {
         case (p, after, before) => r.partition == p && r.last > after && r.first < before
       })))
 
+    /** The manifest's JSON text. Ranges of a file `files` does not list
+      * are dropped. */
     def render: String = {
       def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
       def obj(kvs: Seq[(String, String)]) =
@@ -308,9 +312,10 @@ object KafkaShapedLog {
       val fs = files.map(q).mkString("[", ",", "]")
       val os = obj(offsets.toSeq.sortBy(_._1).map { case ((t, p), o) => s"$t/$p" -> o.toString })
       val cs = obj(cursors.toSeq.sortBy(_._1).map { case (t, c) => t -> q(c.encoded) })
-      val rs = obj(ranges.toSeq.sortBy(_._1).map { case (f, rs) =>
-        f -> rs.map(r => s"[${q(r.topic)},${r.partition},${r.first},${r.last}]").mkString("[", ",", "]")
-      })
+      // one entry per listed file, in `files` order (null: no ranges)
+      val rs = files.map(f => ranges.get(f).fold("null")(_.map(r =>
+        s"[${q(r.topic)},${r.partition},${r.first},${r.last}]").mkString("[", ",", "]")))
+        .mkString("[", ",", "]")
       s"""{"files": $fs, "offsets": $os, "cursors": $cs, "ranges": $rs}"""
     }
   }
@@ -339,10 +344,13 @@ object KafkaShapedLog {
       // (EventReplicatorIT.java:251-277 — Cursor.parse throws
       // IllegalStateException on anything but "<lsn>:<id>")
       val cursors = entries(section("cursors")).map { case (t, c) => t -> Cursor.parse(c.asText) }.toMap
-      val ranges = Option(json.get("ranges")).toList.flatMap(entries).map { case (f, rs) =>
-        f -> rs.asScala.toList.map(r =>
-          OffsetRange(r.get(0).asText, r.get(1).asInt, r.get(2).asLong, r.get(3).asLong))
-      }.toMap
+      val ranges = Option(json.get("ranges")).fold(Map.empty[String, List[OffsetRange]]) { rs =>
+        require(rs.size == files.size, s"manifest lists ${files.size} files but ${rs.size} ranges")
+        files.zip(rs.asScala).collect { case (f, fileRanges) if !fileRanges.isNull =>
+          f -> fileRanges.asScala.toList.map(r =>
+            OffsetRange(r.get(0).asText, r.get(1).asInt, r.get(2).asLong, r.get(3).asLong))
+        }.toMap
+      }
       Manifest(files, offsets, cursors, ranges)
     }
   }

@@ -97,13 +97,16 @@ final class EventLog(val root: Path, spark: SparkSession) {
   }
 
   /** Committed segment files that can hold an lsn in `(after, upTo]`: each
-    * append's `seg-<lsn>-…` files by name, plus every file without an
-    * append name (compacted generations and legacy files span many lsns,
-    * so readers must filter their rows on lsn). */
+    * append's `seg-<lsn>-…` files by name, each compacted generation's
+    * `compacted-upto-<lsn>-…` files when they hold an lsn above `after`,
+    * and every other file (legacy files and older compacted generations
+    * carry no lsn in their name). All but appends' files span many lsns,
+    * so readers must filter their rows on lsn. */
   private[graft] def segmentsBetween(topic: String, after: Long, upTo: Long): Seq[Path] =
     liveFiles(topic).filter { f =>
       f.getFileName.toString match {
         case EventLog.SegmentName(l) => l.toLong > after && l.toLong <= upTo
+        case EventLog.CompactedName(l) => l.toLong > after
         case _ => true
       }
     }
@@ -444,6 +447,8 @@ final class EventLog(val root: Path, spark: SparkSession) {
     * files; at scale the scan cost becomes file-open-bound, and compaction
     * restores big, lsn-ordered segments whose min/max stats still prune
     * cursor scans (S4). Data content and the (lsn,id) order are unchanged.
+    * The new files are named for the highest lsn they hold (an `observe`
+    * metric of the write), so a stream batch past it skips them unopened.
     *
     * CONCURRENT-READER SAFE: the rewrite lands in a staging dir, the new
     * generation moves in under fresh names, and the manifest swap is the
@@ -457,11 +462,14 @@ final class EventLog(val root: Path, spark: SparkSession) {
     if (oldFiles.isEmpty) return
     val stage = dir.resolve("_graft_compact_tmp")
     FileTree.deleteRecursively(stage)
+    val obs = org.apache.spark.sql.Observation()
     read(topic)
       .repartitionByRange(targetFiles, col("lsn"), col("id"))
       .sortWithinPartitions(col("lsn"), col("id"))
+      .observe(obs, max(col("lsn")).as("hi"))
       .write.parquet(stage.toString)
-    publish(topic, stage, "compacted", Nil, currentCursor(topic))
+    val hi = Option(obs.get("hi")).fold(0L)(_.asInstanceOf[Long])
+    publish(topic, stage, s"compacted-upto-$hi", Nil, currentCursor(topic))
   }
 
   /** Reclaim disk from files no committed reader can reach: parquet files
@@ -537,6 +545,11 @@ object EventLog {
 
   /** An append's segment file name, `seg-<lsn>-<stamp>-<i>.parquet`. */
   private val SegmentName = "seg-(\\d+)-.*".r
+
+  /** A compacted generation's file name,
+    * `compacted-upto-<lsn>-<stamp>-<i>.parquet`: it holds lsns up to
+    * `<lsn>`. */
+  private val CompactedName = "compacted-upto-(\\d+)-.*".r
 
   /** A1: replication lag in sequence units (EventReplicatorWorker.java:77,
     * 242-248): `head.lsn − cursor.lsn` while some id above `cursor` is

@@ -25,9 +25,11 @@ import graft.store.{EventLog, EventLogSchema}
   * rows again.
   *
   * A batch reads the manifest-listed segments of its appends (by their
-  * `seg-<lsn>-…` names) plus any compacted files, filtered on lsn: cost
-  * O(new appends). The lsn bounds are [[LongParam]]s, so every batch runs
-  * the first batch's compiled code. At most `maxAppendsPerTrigger` appends
+  * `seg-<lsn>-…` names) plus any compacted files that may hold its lsns
+  * ([[EventLog.segmentsBetween]]), filtered on lsn: cost O(new appends).
+  * The lsn bounds are [[LongParam]]s, so every batch runs the first
+  * batch's compiled code; being no literals, they prune no row group, so
+  * the file list is what bounds a batch's scan. At most `maxAppendsPerTrigger` appends
   * per topic are admitted per trigger; `Trigger.AvailableNow` stops at the
   * lsns committed when it started. Rows carry their `topic`. */
 final class EventLogSource(spark: SparkSession, logRoot: String, topics: Seq[String],

@@ -578,23 +578,31 @@ class ReplicatorSpec extends AnyFunSuite {
         "staging/y/part-1.parquet" -> List(OffsetRange("b_events", 0, 0, 8),
           OffsetRange("b\"]}/events", 2, 3, 8))))
     assert(Manifest.parse(m.render) == m)
+    // a file without ranges, and a file recorded as holding none
+    val mixed = m.copy(ranges = Map("staging/y/part-1.parquet" -> Nil))
+    assert(Manifest.parse(mixed.render) == mixed)
     // older manifests carry a `pending` section; it is ignored
     assert(Manifest.parse(m.render.stripSuffix("}") +
       """, "pending": {"a_events": ["18:25:4:staging/pending-1/part.parquet"]}}""") == m)
     // a manifest written before ranges were kept has no ranges section
-    val legacy = m.copy(ranges = Map.empty).render.replace(""", "ranges": {}""", "")
+    val legacy = withoutRanges(m.render)
     assert(!legacy.contains("ranges"))
     assert(Manifest.parse(legacy) == m.copy(ranges = Map.empty))
+    // ranges are positional: one entry per listed file
+    intercept[IllegalArgumentException](Manifest.parse(
+      """{"files": ["a.parquet"], "offsets": {}, "cursors": {}, "ranges": []}"""))
   }
 
+  /** `rendered` as a manifest written before ranges were kept. */
+  private def withoutRanges(rendered: String): String =
+    rendered.substring(0, rendered.indexOf(""", "ranges": """)) + "}"
+
   test("files a manifest lists without ranges are read on every poll") {
-    import graft.sources.KafkaShapedLog.Manifest
     val (_, sink, _, consumer) = consumerFixture(partitions = 4)
     sink.publishEvents("t_events", (1 to 8).map(ev))
     sink.publishEvents("t_events", (9 to 16).map(ev))
     val path = sink.root.resolve("manifest.json")
-    Files.writeString(path, Manifest.parse(Files.readString(path)).copy(ranges = Map.empty)
-      .render.replace(""", "ranges": {}""", ""))
+    Files.writeString(path, withoutRanges(Files.readString(path)))
     assert(consumer.poll(_.count()) == 16L)
     sink.publishEvents("t_events", (17 to 24).map(ev))
     assert(sink.manifest().ranges.size == 1, "the new transaction's file has ranges")

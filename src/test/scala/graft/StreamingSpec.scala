@@ -58,16 +58,19 @@ class StreamingSpec extends AnyFunSuite {
     log.saveAll("cv_events", (5 to 6).map(ev(_, 1)))
     val checkpoint = Files.createTempDirectory("graft-ckpt-cv-").toString
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var scanned = 0L
     def drain(): Int = {
       val before = seen.size
-      Subscribe.stream(spark, logDir, "cv_events")
+      val q = Subscribe.stream(spark, logDir, "cv_events")
         .writeStream
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", checkpoint)
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           seen ++= df.select("id").collect().map(_.getLong(0)); ()
         }
-        .start().awaitTermination()
+        .start()
+      q.awaitTermination()
+      scanned = q.recentProgress.map(_.numInputRows).sum
       seen.size - before
     }
     assert(drain() == 6)
@@ -75,6 +78,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(log.vacuum("cv_events") > 0)
     assert(drain() == 0, "the compacted generation must not be re-delivered")
     assert(seen.sorted.toSeq == (1L to 6L), "no event id seen twice")
+    // a batch after the compaction skips the compacted generation
+    log.saveAll("cv_events", (7 to 8).map(ev(_, 2)))
+    assert(drain() == 2)
+    assert(scanned == 2L, s"the batch scanned $scanned rows for 2 new events")
   }
 
   test("replayed batch ids are skipped (idempotent foreachBatch)") {
